@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampNTZType, TimestampType}
 
 /** Per-column scalar transformations — parity with the reference's
   * `aplicarTransformacion` dispatch table
@@ -49,9 +49,11 @@ object Transforms {
     case DatePart(part)   => dt match {
       // non-Date input passes through unchanged (:548-550);
       // unknown part passes through unchanged (:564-565)
-      // the reference lowercases the part name before matching (:555)
-      case TimestampType | DateType => dateParts.get(part.toLowerCase).fold(c)(f => f(c))
-      case _                        => c
+      // the reference lowercases the part name before matching (:555);
+      // parquet timestamps without a zone read as TIMESTAMP_NTZ
+      case TimestampType | TimestampNTZType | DateType =>
+        dateParts.get(part.toLowerCase).fold(c)(f => f(c))
+      case _ => c
     }
     case Identity         => c
   }

@@ -93,6 +93,12 @@ package object ops {
     * downstream window keyed differently just adds its own (cheap,
     * coalescible) exchange above the expensive projection.
     *
+    * Ceiling: every row of one key lands in one partition, so the stage
+    * above runs at most as many non-empty tasks as `keys` has distinct
+    * values, whatever the width. The three window callers (`win_ntile`,
+    * `win_cume`, `rank_normalize`) key on 3-5 values, so they run at most
+    * 3-5 tasks wide; the exchange buys them that much over AQE's one.
+    *
     * Scale note: the stages this guards are shortlist-sized (probes ×
     * RefineK rows) at any data scale, so the extra exchange stays
     * kilobytes at 100 TB while the width it pins is the cluster's. */

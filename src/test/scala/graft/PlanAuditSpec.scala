@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+
 /** Plan-quality regression tests: the properties that make these operators
   * scale are visible in the physical plan, so pin them — a refactor that
   * silently breaks pushdown or broadcasts would pass value-equality tests
@@ -8,6 +12,9 @@ package graft
 class PlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** Plan traversal that descends into AQE's adaptive plan wrapper. */
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
@@ -251,9 +258,11 @@ class PlanAuditSpec extends SparkSpec {
     // the repartition stopped satisfying the window's clustering.
     Seq("win_ntile", "win_cume", "rank_normalize").foreach { name =>
       withClue(name) {
-        val plan = planOf(name)
-        plan should include("REPARTITION_BY_NUM")
-        "Exchange hashpartitioning".r.findAllIn(plan).size shouldBe 1
+        val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+        val hashed = Aqe.collect(plan) {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+        }
+        hashed.map(_.shuffleOrigin) shouldBe Seq(REPARTITION_BY_NUM)
       }
     }
   }

@@ -1,7 +1,9 @@
 package graft.engine
 
-import graft.SparkSpec
-import graft.engine.Transforms.Upper
+import org.apache.spark.sql.types.IntegerType
+
+import graft.{SparkSpec, Tables}
+import graft.engine.Transforms.{DatePart, Upper}
 
 /** Column-mapping + pipeline semantics (reference R7/R17 —
   * ETLProcess.java:313-345): unmapped columns silently dropped, missing PK
@@ -41,5 +43,17 @@ class EtlSpec extends SparkSpec {
       .loadInsertIfAbsent(existing)
     // (1, ALICE) already present -> skipped
     rowSet(out) shouldBe Set(Seq(1, "ALICE"))
+  }
+
+  test("transform extracts the year from the fixture's zone-less o_orderdate") {
+    val orders = Tables(spark, "/root/testdata/sf0.01", "orders")
+      .select("o_orderkey", "o_orderdate")
+    val out = Etl(orders).transform(Map("o_orderdate" -> DatePart("año"))).result
+    out.schema("o_orderdate").dataType shouldBe IntegerType
+    val utcYear = (us: Long) => java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
+      .atZone(java.time.ZoneOffset.UTC).getYear
+    val want = orders.collect().map(r => nLong(r, 0) -> utcYear(epochUs(r.get(1)))).toMap
+    want.values.toSet.size should be > 1
+    out.collect().map(r => nLong(r, 0) -> r.getInt(1)).toMap shouldBe want
   }
 }

@@ -3,7 +3,7 @@ package graft.engine
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
 
 import graft.SparkSpec
 import graft.engine.Transforms._
@@ -48,6 +48,15 @@ class TransformsSpec extends SparkSpec {
     one(Transforms(DatePart("mes"), col("ts"), TimestampType), df) shouldBe 3 // 1-based
     one(Transforms(DatePart("día"), col("ts"), TimestampType), df) shouldBe 9
     one(Transforms(DatePart("hora"), col("ts"), TimestampType), df) shouldBe 17
+  }
+
+  test("date parts on TIMESTAMP_NTZ, the type of parquet timestamps without a zone") {
+    val df = Seq(Tuple1(java.time.LocalDateTime.of(2024, 3, 9, 17, 45))).toDF("ts")
+    df.schema("ts").dataType shouldBe TimestampNTZType
+    one(Transforms(DatePart("año"), col("ts"), TimestampNTZType), df) shouldBe 2024
+    one(Transforms(DatePart("mes"), col("ts"), TimestampNTZType), df) shouldBe 3
+    one(Transforms(DatePart("día"), col("ts"), TimestampNTZType), df) shouldBe 9
+    one(Transforms(DatePart("hora"), col("ts"), TimestampNTZType), df) shouldBe 17
   }
 
   test("date-part name matching is case-insensitive (reference :555)") {
