@@ -94,11 +94,7 @@ object ScaleProbe {
       else if (all) SparkEntry.queries.keys.toSeq.sorted
       else defaultOps
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, base, out, facts, copies)
     // probe-only variants: parameter shapes the contract op can't carry

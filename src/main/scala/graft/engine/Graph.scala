@@ -22,6 +22,12 @@ import org.apache.spark.sql.types.DecimalType
   * SUM of labels is strictly decreasing until fixpoint and equal-sum ⟺ no
   * label changed — one cheap aggregate per round instead of a join against
   * the previous round's labels.
+  *
+  * Two alternatives lost their A/B (warm, real near-dup pair graphs) and
+  * were removed: a fixed ⌈log₂ n⌉+2-round mode without the per-round sum
+  * (5.2 s vs 2.5 s at sf0.1, 19.9 s vs 4.5 s on the 10× probe), and
+  * large-star/small-star (2.3 s vs 3.2 s at sf0.1 but 5.6 s vs 3.4 s on the
+  * 10× probe, where its ~6 shuffles per round carry real data).
   */
 object Graph {
 
@@ -31,29 +37,11 @@ object Graph {
     *              appear once with `id_a < id_b` (duplicates are tolerated
     *              — they only widen the neighbour join, never change the
     *              min-aggregate result)
-    * @param fixedRounds run exactly ⌈log₂(#vertices)⌉+2 jump rounds with NO
-    *              per-round convergence aggregate — one job per round
-    *              instead of two, the only driver round-trip being one
-    *              upfront vertex count. Pointer jumping at least doubles
-    *              every vertex's label reach per round, so the bound covers
-    *              any diameter ≤ #vertices (property-tested against
-    *              union-find including a 400-deep chain); the trade is
-    *              running the full bound even when the graph converges in 3
-    *              rounds. A/B measured (CcBench, warm): on the REAL
-    *              near-dup graphs this LOSES — 5.2 s vs 2.5 s at sf0.1
-    *              (477 vertices → 11 budgeted rounds vs ~5 adaptive),
-    *              19.9 s vs 4.5 s on the 10× probe (50 k vertices → 18
-    *              rounds) — early stopping beats the saved aggregate
-    *              whenever the graph is shallower than its vertex count.
-    *              Choose fixed only for genuinely diameter-deep graphs
-    *              (where both modes run ~log₂(d) rounds and this one
-    *              halves the jobs per round); the default stays adaptive.
     * @return one row per vertex: (`v`, `lbl`) with `lbl` = the component's
     *         minimum vertex id; backed by a localCheckpoint, so the loop's
     *         caches are already released when this returns
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 25,
-      fixedRounds: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
     val edges = pairs.select(col("id_a"), col("id_b")).cache()
     // no distinct: with unique a<b input the union with the reversed copy
     // cannot collide — skipping it saves a full edge-list shuffle
@@ -72,17 +60,10 @@ object Graph {
       edges.unpersist(); sym.unpersist()
       return labels
     }
-    // fixed mode: one count job up front buys out the per-round aggregate
-    val totalRounds =
-      if (!fixedRounds) maxRounds
-      else {
-        val n = labels.count()
-        (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))) + 2
-      }
     var converged = false
     var rounds = 0
     var prevSum: Option[java.math.BigDecimal] = None
-    try while (!converged && rounds < totalRounds) {
+    try while (!converged && rounds < maxRounds) {
       // candidate label per vertex: min over neighbours' current labels
       val nbrMin = sym.join(labels.withColumnRenamed("v", "n"), "n")
         .groupBy("v").agg(min(col("lbl")).as("cand"))
@@ -94,10 +75,8 @@ object Graph {
         .cache()
       // pointer-jump from round 2 on: near-dup clusters are almost always
       // shallow, so the first rounds skip the extra self-join and usually
-      // converge without it; deep graphs get the O(log d) halving. Fixed
-      // mode jumps from round 0 — its round budget is exactly the doubling
-      // bound, so every round must double.
-      val next = if (rounds < 2 && !fixedRounds) prop
+      // converge without it; deep graphs get the O(log d) halving
+      val next = if (rounds < 2) prop
         else prop
           .join(prop.select(col("v").as("lbl"), col("lbl").as("lbl2")), Seq("lbl"), "left")
           .select(col("v"), least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl"))
@@ -109,17 +88,15 @@ object Graph {
       // the plan to a leaf, keeping per-round planning O(1); superseded
       // checkpoint blocks are released by the ContextCleaner on GC.
       val checkpointed = next.localCheckpoint(true)
-      if (!fixedRounds) {
-        val lblSum = checkpointed.agg(sum(col("lbl").cast(DecimalType(38, 0))))
-          .collect()(0).getDecimal(0)
-        // a decimal overflow under non-ANSI mode would NULL the sum; two
-        // NULL rounds would then satisfy prevSum.contains(lblSum) and
-        // declare a FALSE convergence — fail loudly instead (unreachable at
-        // any realistic label magnitude, but the guard is free)
-        require(lblSum != null, "connectedComponents: label-sum overflowed DECIMAL(38,0)")
-        converged = prevSum.contains(lblSum)
-        prevSum = Some(lblSum)
-      }
+      val lblSum = checkpointed.agg(sum(col("lbl").cast(DecimalType(38, 0))))
+        .collect()(0).getDecimal(0)
+      // a decimal overflow under non-ANSI mode would NULL the sum; two
+      // NULL rounds would then satisfy prevSum.contains(lblSum) and
+      // declare a FALSE convergence — fail loudly instead (unreachable at
+      // any realistic label magnitude, but the guard is free)
+      require(lblSum != null, "connectedComponents: label-sum overflowed DECIMAL(38,0)")
+      converged = prevSum.contains(lblSum)
+      prevSum = Some(lblSum)
       prop.unpersist()
       labels = checkpointed
       rounds += 1
@@ -131,80 +108,8 @@ object Graph {
       sym.unpersist()
     }
     // an unconverged result would silently split components — fail loudly
-    // (fixed mode's guarantee is the doubling bound itself, property-tested)
-    require(fixedRounds || converged,
+    require(converged,
       s"connectedComponents: not converged after $maxRounds rounds")
     labels
-  }
-
-  /** Alternating large-star/small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond") — the A/B
-    * candidate against [[connectedComponents]]'s pointer-jumping kernel.
-    *
-    * Formulated relationally (aggregate + join), NOT via
-    * `collect_list(neighbours)`: a star center's neighbour list grows to
-    * the whole component, so the list formulation concentrates a 1M-member
-    * component into one row — the exact skew this kernel exists to avoid.
-    *
-    * Measured (CcBench, warm, see SURVEY §7.3.7): per round this costs 2
-    * phases × (agg + join + DISTINCT) ≈ 6 shuffles vs pointer jumping's 3.
-    * On the sf0.1 pair graph (256 edges) star WINS — 2.3 s vs 3.2 s, fewer
-    * scheduled jobs dominate at trivial data volume — but on the 10×
-    * adversarial probe (250 k edges) it LOSES, 5.6 s vs 3.4 s best-of,
-    * because the extra per-round shuffles now carry real data. The scale
-    * direction is what a 100 TB deployment feels, so pointer jumping stays
-    * the production kernel; this one is kept correct and property-tested
-    * as the recorded alternative.
-    */
-  private[graft] def connectedComponentsStar(
-      pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    // normalize to (a, b) with a > b — both star phases preserve this
-    var edges = pairs
-      .select(greatest(col("id_a"), col("id_b")).as("a"),
-        least(col("id_a"), col("id_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    if (edges.isEmpty) return edges.select(col("a").as("v"), col("b").as("lbl"))
-    var converged = false
-    var rounds = 0
-    var prev: Option[(Long, String)] = None
-    while (!converged && rounds < maxRounds) {
-      // large-star: around each center u (over the SYMMETRIZED
-      // neighbourhood), attach every larger neighbour to m = min(Γ(u)∪{u})
-      val sym = edges.select(col("a").as("u"), col("b").as("n"))
-        .union(edges.select(col("b").as("u"), col("a").as("n")))
-      val lsMin = sym.groupBy("u").agg(min(col("n")).as("mn"))
-      val large = sym.join(lsMin, "u")
-        .filter(col("n") > col("u"))
-        .select(col("n").as("a"), least(col("u"), col("mn")).as("b"))
-        .distinct()
-      // small-star: around each center u (over small neighbours only,
-      // which is ALL of them — edges point a→b with a > b), re-attach the
-      // center and every non-min small neighbour to the min
-      val ssMin = large.groupBy("a").agg(min(col("b")).as("mn"))
-      val j = large.join(ssMin, "a")
-      val small = j.select(col("a"), col("mn").as("b"))
-        .union(j.filter(col("b") =!= col("mn"))
-          .select(col("b").as("a"), col("mn").as("b")))
-        .distinct()
-        .localCheckpoint(true)
-      // fixpoint: the edge set is stable ⟺ (count, order-independent
-      // hash-sum) is stable — one cheap aggregate, same driver-holds-one-
-      // flag shape as the production kernel; DECIMAL(38,0) sum because a
-      // long sum of 64-bit hashes overflows under ANSI mode
-      val row = small
-        .agg(count(lit(1)),
-          sum(xxhash64(col("a"), col("b")).cast(DecimalType(38, 0))))
-        .collect()(0)
-      val sig = (row.getLong(0), Option(row.getDecimal(1)).map(_.toString).getOrElse(""))
-      converged = prev.contains(sig)
-      prev = Some(sig)
-      edges = small
-      rounds += 1
-    }
-    require(converged, s"connectedComponentsStar: not converged after $maxRounds rounds")
-    // stars point child→root; add the roots' self-labels
-    edges.select(col("a").as("v"), col("b").as("lbl"))
-      .union(edges.select(col("b"), col("b")).distinct())
   }
 }

@@ -136,7 +136,7 @@ object Audit {
 
   /** The distinct (source, shingle-hash) presence grid —
     * contamination_matrix's only fact-scale pass, shared with the
-    * streaming twin ([[graft.streaming.Streams.contaminationSink]]): a
+    * streaming twin ([[graft.streaming.Streams.contamination]]): a
     * presence set is IDEMPOTENT under union+distinct, so the fold absorbs
     * replays/redelivery outright (the rolling_active_users argument) and
     * [[contaminationView]] reproduces the batch matrix at any batch
@@ -761,7 +761,7 @@ object Audit {
 
   /** The (type, user) conditional-count grid — split_temporal's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.leakSink]]): the grid is ALGEBRAIC (two
+    * ([[graft.streaming.Streams.leak]]): the grid is ALGEBRAIC (two
     * counts per key), so a stream folds per-batch partials into it with
     * a keyed SUM merge and [[splitTemporalView]] reproduces the batch op
     * exactly at any batch cut. */
@@ -857,7 +857,7 @@ object Audit {
   /** The (event_type, digit, digit2) observation grid — the ONE
     * fact-scale pass behind BOTH Benford screens (benford_audit's
     * first-digit χ² and benford_second's second-digit χ²), shared with
-    * the streaming twin ([[graft.streaming.Streams.benfordSink]]): cells
+    * the streaming twin ([[graft.streaming.Streams.benford]]): cells
     * are ALGEBRAIC counts keyed by the first TWO significant digits
     * (digit2 NULL when |cents| < 10 — a one-digit amount has no second
     * digit), so a stream folds per-batch partials in with a keyed SUM
@@ -1295,7 +1295,7 @@ object Audit {
   // never shuffles to find its matches. Both grids are ALGEBRAIC under
   // doc-at-most-once delivery (each doc's presence contribution is
   // batch-local), so the streaming twin folds them with keyed SUMs
-  // ([[graft.streaming.Streams.boilerSink]]) and THIS view re-screens
+  // ([[graft.streaming.Streams.boiler]]) and THIS view re-screens
   // any drop against the completed corpus statistics.
   // ------------------------------------------------------------------
   /** Per-source shingle doc-frequency grid (distinct per doc, then

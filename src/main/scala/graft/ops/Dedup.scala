@@ -926,7 +926,7 @@ object Dedup {
 
   /** The persisted content-hash index over (a drop of) history —
     * dedup_incremental's stored artifact, shared with the streaming twin
-    * ([[graft.streaming.Streams.indexSink]]): a distinct digest SET, so
+    * ([[graft.streaming.Streams.index]]): a distinct digest SET, so
     * the fold is union + distinct — IDEMPOTENT (replays absorb outright;
     * the contamination presence-grid argument). At scale this is the
     * hash-only table a nightly drop checks in against, tiny next to the

@@ -56,8 +56,8 @@ object Events {
   // rewrites into WindowGroupLimit — each shuffle partition keeps only
   // its local top-2 per window before the exchange, so at 100 TB the
   // window stage never materializes the full per-type count set. The
-  // streaming twin is the same aggregate under a watermark feeding a
-  // per-batch rank (complete/update mode), same shape as Streams.tumbling.
+  // streaming twin (Streams.topk) folds topkGrid per micro-batch and
+  // ranks the folded grid with topkView.
   private val streamTopk = Op("stream_topk",
     """WITH agg AS (
       |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws,
@@ -69,15 +69,21 @@ object Events {
       |                       ORDER BY n DESC, event_type) AS rn
       |  FROM agg)
       |WHERE rn <= 2 ORDER BY ws, rn""".stripMargin) { (s, d) =>
-    t(s, d, "events")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+    topkView(topkGrid(t(s, d, "events"))).orderBy("ws", "rn")
+  }
+
+  /** (hour window, type) counts: the grid the streaming twin folds
+    * ([[graft.streaming.Streams.topk]]). */
+  private[graft] def topkGrid(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"))
-      .withColumn("rn", row_number().over(
+
+  /** The 2 busiest types per window over a completed count grid. */
+  private[graft] def topkView(grid: DataFrame): DataFrame =
+    grid.withColumn("rn", row_number().over(
         Window.partitionBy("ws").orderBy(col("n").desc, col("event_type").asc)))
       .filter(col("rn") <= 2)
-      .orderBy("ws", "rn")
-  }
 
   // Session windows per user (30min gap). Spark semantics: events merge into
   // a session iff gap-to-previous < 30min; session end = last ts + gap. The
@@ -141,7 +147,7 @@ object Events {
 
   /** Per-slice (event_type, n, dsum) partials — agg_incremental's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.incrSink]]): count + exact decimal sum are
+    * ([[graft.streaming.Streams.incr]]): count + exact decimal sum are
     * algebraic, so any batch cut folds bit-identically. dsum is carried at
     * DECIMAL(38,2) so repeated fold/merge rounds keep ONE fixed state
     * schema (Spark widens sum(DECIMAL) per aggregate; pinning the carrier
@@ -219,7 +225,7 @@ object Events {
 
   /** One funnel fold step — the batch op IS this fold applied once to the
     * whole log over the empty state, and the streaming twin
-    * ([[graft.streaming.Streams.funnelSink]]) applies it per micro-batch,
+    * ([[graft.streaming.Streams.funnel]]) applies it per micro-batch,
     * so they provably share the semantics. The per-user state is three
     * timestamps; each step fills the next unfilled stage from the batch's
     * strictly-later candidates (batch-internal chaining included: a
@@ -332,7 +338,7 @@ object Events {
 
   /** The distinct (user_id, week) presence grid — the fact-scale
     * reduction shared by retention_cohort and its streaming twin
-    * ([[graft.streaming.Streams.retentionSink]]): presence is idempotent
+    * ([[graft.streaming.Streams.retention]]): presence is idempotent
     * (merge = union ∪ distinct), so any batch cut folds to the same grid;
     * state is |users × weeks| bounded, never stream volume. */
   private[graft] def retentionGrid(events: DataFrame): DataFrame =
@@ -647,7 +653,7 @@ object Events {
   }
 
   /** One time-decay-attribution fold step for the streaming twin
-    * ([[graft.streaming.Streams.attrSink]]): union the carried ≤64-click
+    * ([[graft.streaming.Streams.attr]]): union the carried ≤64-click
     * recency ring per user with the batch's clicks, credit the batch's
     * purchases through [[creditPairs]] (shared verbatim), and carry the
     * new ring — the 64 most recent clicks per user, exactly the
@@ -743,7 +749,7 @@ object Events {
     * and carry the 7 latest rows per user (exactly the state an 8-row
     * trailing frame needs — the emaFold ring, with band arithmetic).
     * The batch op IS this fold applied once over the empty ring; the
-    * streaming twin ([[graft.streaming.Streams.bollSink]]) applies it
+    * streaming twin ([[graft.streaming.Streams.boll]]) applies it
     * per micro-batch — EXACT under per-user event-time-ordered arrival. */
   private[graft] def bollFold(ring: DataFrame, events: DataFrame)
       : (DataFrame, DataFrame) = {
@@ -826,7 +832,7 @@ object Events {
 
   /** The distinct (user, week) presence grid — churn_rate's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.churnSink]]): a presence set, so the
+    * ([[graft.streaming.Streams.churn]]): a presence set, so the
     * fold is union+distinct and absorbs replays outright (the
     * rolling_active_users argument). */
   private[graft] def churnGrid(events: DataFrame): DataFrame =
@@ -1067,7 +1073,7 @@ object Events {
     * Returns (emitted rows, new seen-grid). The batch op IS this fold
     * over the empty grid (the seen-join degenerates, the flag reduces to
     * the one-window form); the streaming twin
-    * ([[graft.streaming.Streams.rdSink]]) applies it per micro-batch —
+    * ([[graft.streaming.Streams.rd]]) applies it per micro-batch —
     * EXACT under per-user event-time-ordered arrival. State is one bit
     * per (user, type), the same formulation that keeps the batch window
     * from buffering per-frame sets at 100 TB. */
@@ -1291,7 +1297,7 @@ object Events {
   /** The (user, event, event-time-µs, arrival-µs) projection — the
     * watermark audit's shared first stage (arrival = event time + a
     * deterministic salted-hash jitter ≤10 min), used by the batch op and
-    * the streaming twin ([[graft.streaming.Streams.wmSink]]). */
+    * the streaming twin ([[graft.streaming.Streams.wm]]). */
   private[graft] def wmProjected(events: DataFrame): DataFrame = {
     import graft.ops.Text.h60
     val tus = unix_micros(col("ts").cast("timestamp"))
@@ -1415,11 +1421,7 @@ object Events {
       |  CAST(COALESCE(prev_sum, 0) AS BIGINT) AS baseline_sum,
       |  prev_sum IS NOT NULL AND 24 * n > 3 * prev_sum AS alert
       |FROM b ORDER BY user_id, hidx""".stripMargin) { (s, d) =>
-    rateAlertOver(
-        t(s, d, "events")
-          .groupBy(col("user_id"), hourIdx.as("hidx"))
-          .agg(count(lit(1)).as("n")))
-      .orderBy("user_id", "hidx")
+    rateAlertOver(hourCounts(t(s, d, "events"))).orderBy("user_id", "hidx")
   }
 
   // --------------------------------------------------------------------
@@ -1498,7 +1500,7 @@ object Events {
     * per user — exactly the state a lag-8 window needs). Returns
     * (emitted rows, new ring). The batch op IS this fold applied once
     * over the empty ring; the streaming twin
-    * ([[graft.streaming.Streams.emaSink]]) applies it per micro-batch —
+    * ([[graft.streaming.Streams.ema]]) applies it per micro-batch —
     * EXACT under per-user event-time-ordered arrival. */
   private[graft] def emaFold(ring: DataFrame, events: DataFrame)
       : (DataFrame, DataFrame) = {
@@ -1552,7 +1554,7 @@ object Events {
 
   /** The distinct (user_id, day) presence grid — THE fact-scale reduction
     * of rolling_active_users, shared with the streaming twin
-    * ([[graft.streaming.Streams.rauSink]]): presence merges by union ∪
+    * ([[graft.streaming.Streams.rau]]): presence merges by union ∪
     * distinct at any batch cut; state is |users × days| bounded. */
   private[graft] def rauGrid(events: DataFrame): DataFrame =
     events.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
@@ -1632,7 +1634,7 @@ object Events {
     * partials, and carry each user's latest reading forward (the only
     * state an interval integral needs). Returns (new last, new acc).
     * The batch op IS this fold applied once over empty states; the
-    * streaming twin ([[graft.streaming.Streams.twaSink]]) applies it per
+    * streaming twin ([[graft.streaming.Streams.twa]]) applies it per
     * micro-batch — EXACT under per-user event-time-ordered arrival. */
   private[graft] def twaFold(last: DataFrame, acc: DataFrame,
       events: DataFrame): (DataFrame, DataFrame) = {
@@ -1703,7 +1705,7 @@ object Events {
 
   /** The (user_id, week, revenue) decimal grid — cohort_ltv's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.ltvSink]]). The grid is keyed by the
+    * ([[graft.streaming.Streams.ltv]]). The grid is keyed by the
     * EVENT's week, not the cohort: a user's first-active week can still
     * FLIP when an earlier event arrives in a later batch, so cohort
     * assignment must live in the view (recomputed over the completed
@@ -1757,7 +1759,7 @@ object Events {
   }
 
   /** The (dow, hod) count grid — activity_profile's only fact-scale pass,
-    * shared with the streaming twin ([[graft.streaming.Streams.activitySink]]):
+    * shared with the streaming twin ([[graft.streaming.Streams.activity]]):
     * counts are algebraic, so the stream folds per-batch partials with a
     * keyed SUM merge and [[activityView]] reproduces the batch op at any
     * batch cut. ≤169 rows (168 hour-of-week cells + a possible NULL-ts
@@ -1812,7 +1814,7 @@ object Events {
 
   /** The calendar-hour count table — anomaly_seasonal's only fact-scale
     * pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.seasonalSink]]): counts are algebraic, so
+    * ([[graft.streaming.Streams.seasonal]]): counts are algebraic, so
     * a stream SUM-merges per-batch partials into the calendar-bounded
     * state and [[seasonalView]] reproduces the batch op at any cut. */
   private[graft] def seasonalCounts(events: org.apache.spark.sql.DataFrame)
@@ -1954,7 +1956,7 @@ object Events {
 
   /** The distinct (user, type) basket presence grid — assoc_rules' only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.assocSink]]): a presence set is
+    * ([[graft.streaming.Streams.assoc]]): a presence set is
     * IDEMPOTENT under union+distinct, so the fold absorbs redelivery
     * outright (the rolling_active_users argument) and [[assocView]]
     * reproduces the batch rule table at any batch cut. */
@@ -2055,7 +2057,7 @@ object Events {
 
   /** The per-user (last_day, count, cents-sum) grid — event_rfm's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.rfmSink]]): all three cells are ALGEBRAIC
+    * ([[graft.streaming.Streams.rfm]]): all three cells are ALGEBRAIC
     * (max / count / exact sum), so a stream folds per-batch partials in
     * with a keyed (max, sum, sum) merge and [[rfmView]] — anchor,
     * quintiles and scores — reproduces the batch segmentation at any
@@ -2192,7 +2194,7 @@ object Events {
   }
 
   /** One ordered-fold step for the streaming twin
-    * ([[graft.streaming.Streams.interarrivalSink]]): state is the carried
+    * ([[graft.streaming.Streams.interarrival]]): state is the carried
     * per-(user, type) LAST event plus the (type, bucket) gap grid. The
     * carried last rows re-enter the batch's gap computation as
     * sentinel-id pseudo-rows, so the gap SPANNING the batch cut is

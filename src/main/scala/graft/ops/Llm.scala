@@ -1336,7 +1336,7 @@ object Llm {
 
   /** Per-(lang, half, dim) exact-decimal component sums — the fact-scale
     * pass; algebraic, so the streaming twin
-    * ([[graft.streaming.Streams.driftVecSink]]) folds per-batch partials
+    * ([[graft.streaming.Streams.driftVec]]) folds per-batch partials
     * with a keyed SUM merge. |langs|×2×64 rows. */
   private[graft] def driftSumGrid(hv: DataFrame): DataFrame =
     hv.select(col("lang"), col("half"),

@@ -231,7 +231,7 @@ object Pipeline {
   // (regexp_extract_all, scan-stage) and map-side-combines into the
   // per-source WIDE grid (|sources| rows: n_docs + per-type doc/match
   // sums — every cell an ALGEBRAIC count, so the streaming twin
-  // ([[graft.streaming.Streams.piiSink]]) folds per-batch partials with
+  // ([[graft.streaming.Streams.pii]]) folds per-batch partials with
   // ONE keyed SUM merge); the long (source, pii_type) view unpivots the
   // completed grid.
   // --------------------------------------------------------------------
@@ -898,7 +898,7 @@ object Pipeline {
 
   /** The per-source (docs, tokens) sum grid — sample_temperature's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.temperatureSink]]): both are algebraic
+    * ([[graft.streaming.Streams.temperature]]): both are algebraic
     * sums; ≤|sources| rows. */
   private[graft] def temperatureGrid(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =

@@ -53,7 +53,7 @@ object Stats {
   private val DriftBinWidth = 25
 
   /** The (type, bin) count grid — the drift op's only fact-scale pass,
-    * shared with the streaming twin ([[graft.streaming.Streams.driftSink]]):
+    * shared with the streaming twin ([[graft.streaming.Streams.drift]]):
     * the grid is ALGEBRAIC (two conditional counts per key), so a stream
     * can fold per-batch partials into it with a keyed SUM merge and the
     * view below reproduces the batch op exactly at any batch cut. */
@@ -141,7 +141,7 @@ object Stats {
 
   /** Per-day sufficient moments (n, Σx, Σx² per arm) — the t-test's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.ttestSink]]): the moments are ALGEBRAIC
+    * ([[graft.streaming.Streams.ttest]]): the moments are ALGEBRAIC
     * (counts and exact decimal sums), so a stream folds per-batch partials
     * into them with a keyed SUM merge and [[ttestView]] reproduces the
     * batch op exactly at any batch cut. Sums stay DECIMAL here (exact
@@ -253,7 +253,7 @@ object Stats {
   // --------------------------------------------------------------------
   /** The (type, day) cents grid — the changepoint op's only fact-scale
     * pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.cusumSink]]): the grid is ALGEBRAIC (one
+    * ([[graft.streaming.Streams.cusum]]): the grid is ALGEBRAIC (one
     * exact decimal-cents sum per key), so a stream folds per-batch
     * partials into it with a keyed SUM merge and [[cusumView]] reproduces
     * the batch op exactly at any batch cut. */
@@ -362,7 +362,7 @@ object Stats {
 
   /** The per-(day, cents) tie-group count grid — the rank family's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.rankSink]]). */
+    * ([[graft.streaming.Streams.rank]]). */
   private[graft] def rankGrid(events: DataFrame): DataFrame =
     events.filter(col("ts").isNotNull && col("value").isNotNull
         && col("event_type").isInCollection(Seq(ArmA, ArmB)))
@@ -559,7 +559,7 @@ object Stats {
 
   /** The per-user (first_day, conv_day, last_day) grid — survival_hazard's
     * only fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.survivalSink]]). */
+    * ([[graft.streaming.Streams.survival]]). */
   private[graft] def survivalGrid(events: DataFrame): DataFrame =
     events.filter(col("ts").isNotNull && col("user_id").isNotNull)
       .groupBy("user_id")
@@ -696,7 +696,7 @@ object Stats {
   // --------------------------------------------------------------------
 
   /** The per-day arm-count grid — ab_srm's only fact-scale pass, shared
-    * with the streaming twin ([[graft.streaming.Streams.srmSink]]):
+    * with the streaming twin ([[graft.streaming.Streams.srm]]):
     * two conditional counts per key, keyed SUM fold. */
   private[graft] def srmGrid(events: DataFrame): DataFrame =
     events.filter(col("ts").isNotNull
@@ -962,7 +962,7 @@ object Stats {
 
   /** The per-user pre/post cents grid — ab_cuped's only fact-scale pass,
     * shared with the streaming twin
-    * ([[graft.streaming.Streams.cupedSink]]): two conditional sums per
+    * ([[graft.streaming.Streams.cuped]]): two conditional sums per
     * user, keyed SUM fold. Users with no pre (or post) events carry 0,
     * not NULL — a missing covariate is a zero covariate by contract. */
   private[graft] def cupedUserGrid(events: DataFrame): DataFrame = {
@@ -1094,7 +1094,7 @@ object Stats {
 
   /** The global (cents, c_neg, c_pos) tie-group grid — the only
     * fact-scale pass of calibration_table and gains_table, shared with
-    * the streaming twin ([[graft.streaming.Streams.scoreSink]]): two
+    * the streaming twin ([[graft.streaming.Streams.score]]): two
     * conditional counts per key, keyed SUM fold. */
   private[graft] def scoreGrid(events: DataFrame): DataFrame =
     events.filter(col("ts").isNotNull && col("value").isNotNull
@@ -1241,7 +1241,7 @@ object Stats {
 
   /** The (type, replicate) weighted-sum grid — bootstrap_ci's only
     * fact-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.bootSink]]): two algebraic sums per key,
+    * ([[graft.streaming.Streams.boot]]): two algebraic sums per key,
     * keyed SUM fold. */
   private[graft] def bootGrid(events: DataFrame): DataFrame = {
     val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
@@ -1368,7 +1368,7 @@ object Stats {
 
   /** Per-type sufficient moments — ab_power's only fact-scale pass,
     * shared with the streaming twin
-    * ([[graft.streaming.Streams.powerSink]]): keyed SUM fold. */
+    * ([[graft.streaming.Streams.power]]): keyed SUM fold. */
   private[graft] def powerGrid(events: DataFrame): DataFrame = {
     val dec = DecimalType(19, 0)
     val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")

@@ -295,7 +295,7 @@ object Text {
 
   /** The (source, pred_lang) routing-cell grid — lang_routing's only
     * doc-scale pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.routeSink]]): cells are ALGEBRAIC counts
+    * ([[graft.streaming.Streams.route]]): cells are ALGEBRAIC counts
     * (docs, tokens, mixed-flagged docs), so a stream folds per-batch
     * partials in with a keyed SUM merge and [[routeView]] reproduces the
     * batch matrix at any batch cut — the per-language routing monitor
@@ -383,7 +383,7 @@ object Text {
 
   /** The (lang, pred_lang) count grid — lang_id_eval's only doc-scale
     * pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.langSink]]): cells are ALGEBRAIC counts,
+    * ([[graft.streaming.Streams.lang]]): cells are ALGEBRAIC counts,
     * so a stream folds per-batch partials in with a keyed SUM merge and
     * [[langConfusionView]] reproduces the batch eval at any batch cut —
     * the classifier-quality monitor recomputed as documents arrive. */
@@ -696,12 +696,13 @@ object Text {
   // --------------------------------------------------------------------
   /** The (w, n, df) vocabulary grid — vocab_topk's only corpus-scale
     * pass, shared with the streaming twin
-    * ([[graft.streaming.Streams.vtopkSink]]): term frequency is an
+    * ([[graft.streaming.Streams.vtopk]]): term frequency is an
     * ALGEBRAIC count, and df is too BECAUSE each document arrives exactly
     * once — its 0/1 per-word df contribution is batch-local (the per-row
     * array_distinct), so a keyed SUM merge folds per-batch partials with
     * no count(DISTINCT) over history. Vocab-bounded state, not
-    * stream-bounded — the hhCandMerge trade, documented there. */
+    * stream-bounded — the trade documented at
+    * [[graft.streaming.Streams.hh]]. */
   private[graft] def vocabTfGrid(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val d = docs.filter(col("text").isNotNull)
@@ -1037,7 +1038,7 @@ object Text {
     h60(concat(dc.cast("string"), lit(":"), tc)) % CmsW
 
   /** The 4×1024 count-min cell grid — the op's bounded sketch state,
-    * shared with the streaming twin ([[graft.streaming.Streams.hhSink]]):
+    * shared with the streaming twin ([[graft.streaming.Streams.hh]]):
     * cells are ALGEBRAIC counts, so a stream folds per-batch partials in
     * with a keyed SUM merge; the grid never exceeds CmsD·CmsW rows no
     * matter the corpus. */
@@ -1316,7 +1317,7 @@ object Text {
 
   /** The per-language (docs, bpe, words, chars, bytes) sum grid —
     * tokenizer_fertility's only fact-scale pass, shared with the
-    * streaming twin ([[graft.streaming.Streams.fertilitySink]]): all five
+    * streaming twin ([[graft.streaming.Streams.fertility]]): all five
     * are algebraic sums, so per-batch partials fold with a keyed SUM
     * merge; ≤|langs| rows. */
   private[graft] def fertilityGrid(docs: DataFrame): DataFrame =

@@ -32,14 +32,16 @@ package object ops {
   def intervalStartUs: Column = unix_micros(col("ts").cast("timestamp"))
   def intervalEndUs: Column = intervalStartUs + intervalK * lit(IntervalMinuteUs)
 
-  /** The rate-alert hour index + baseline view shared by the batch op
-    * (ops.Events.rateAlert) and the streaming state fold
-    * (Streams.hourCounts/rateAlertView): one definition of the hour
-    * bucket and of the trailing-24-calendar-hour RANGE-frame alert, so
-    * the stream-vs-batch parity the drive asserts cannot drift. */
+  /** The rate-alert hour index, (user, hour) count grid and baseline view
+    * shared by the batch op (ops.Events.rateAlert) and the streaming state
+    * fold ([[graft.streaming.Streams.rateAlert]]): one definition of the
+    * hour bucket and of the trailing-24-calendar-hour RANGE-frame alert,
+    * so the stream-vs-batch parity the drive asserts cannot drift. */
   def hourIdx: Column =
     // integer division (`div`, not `/`): Column./ promotes to double
     expr("unix_micros(cast(date_trunc('hour', ts) as timestamp)) div 3600000000")
+  def hourCounts(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id"), hourIdx.as("hidx")).agg(count(lit(1)).as("n"))
   def rateAlertOver(counts: DataFrame): DataFrame = {
     val base = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("hidx")).rangeBetween(-24, -1)

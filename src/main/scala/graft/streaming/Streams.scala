@@ -1,25 +1,42 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType, LongType}
 
-/** Structured Streaming twins of the batch event-time ops in
-  * `graft.ops.Events` (SURVEY §2.B "Streaming-shaped ops" design note).
+import graft.ops.{Audit, Dedup, Events, Llm, Pipeline, Stats, Text}
+
+/** Structured Streaming twins of graft's batch ops.
   *
-  * Each takes an unbounded streaming DataFrame with the `events` schema
-  * (event_id long, user_id long, event_type string, ts timestamp, value
-  * double, props string) and returns a streaming DataFrame; callers attach
-  * `writeStream` with their own sink/trigger. Event-time correctness comes
-  * from watermarks: state for windows/sessions/dedup older than the
-  * watermark is dropped, which is what bounds state size on an unbounded
-  * 100 TB/day stream — without it every variant below would accumulate
-  * state forever.
+  * Native twins (`tumbling`, `sliding`, `session`, `dedup`, `throttle`,
+  * `ohlc`, `intervalJoin`, `intervalMerge`, `enrich`) take an unbounded
+  * streaming DataFrame and return one; callers attach `writeStream` with
+  * their own sink and trigger. Event-time correctness comes from
+  * watermarks: window, session and dedup state older than the watermark
+  * is dropped, which is what bounds state on an unbounded stream. They
+  * share the batch twins' window semantics, so the oracle-checked batch
+  * results pin the streaming ones too.
   *
-  * The batch twins in `ops.Events` share the same window semantics
-  * (window/session_window/dropDuplicates), so the oracle-checked batch
-  * results pin the streaming semantics too; these are unit-tested with
-  * MemoryStream (not oracle-checkable — SURVEY §5.2 #4).
+  * Grid twins fold each micro-batch into versioned state through
+  * [[foldSink]]: the batch op's grid pass turns the batch into a grid of
+  * partials, a [[KeyedFold]] merges that grid into the stored state, and
+  * the batch op's own view reads the state. One rule covers every fold:
+  *  - the merge is a full outer join of state and grid on NULL-SAFE key
+  *    equality (`<=>`), so a NULL key is one cell, exactly as GROUP BY
+  *    treats it in the batch op;
+  *  - sums combine as `coalesce(s + d, s, d)`: SUM's NULL algebra, so an
+  *    all-NULL cell stays NULL instead of turning into 0; MIN/MAX combine
+  *    as `least`/`greatest`; each result is cast to its state type;
+  *  - presence grids (no measures) merge by `union` + `distinct`.
+  * Because every grid is algebraic, folding any cut of the input in any
+  * order gives the grid of the whole input. Sums are NOT idempotent: an
+  * epoch that Spark re-runs after a failure is counted twice unless the
+  * caller's state store makes each epoch's write idempotent (for example,
+  * state versions keyed by epoch). Presence, MIN and MAX folds absorb
+  * redelivery outright. Ordered folds (see below) carry per-key state
+  * instead and need per-key event-time order.
   */
 object Streams {
 
@@ -86,50 +103,6 @@ object Streams {
       .dropDuplicatesWithinWatermark("user_id", "ws")
       .select("event_id", "user_id", "ws")
 
-  /** One micro-batch's (window-start, type) counts — the algebraic
-    * partial the top-k state merges (twin of the batch stream_topk op's
-    * aggregate stage). */
-  private[streaming] def topkCounts(batch: DataFrame): DataFrame =
-    instantTs(batch)
-      .groupBy(window(col("ts"), "1 hour").getField("start").as("ws"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Merge a batch's count partials into the state: counts are algebraic,
-    * so merge = SUM on the (ws, event_type) key — redelivery is NOT
-    * idempotent for raw counts, so callers pair this with exactly-once
-    * batch tracking (the FileStreamParitySpec drive relies on
-    * foreachBatch's per-epoch batchId). */
-  def topkMergeCounts(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.ws") === col("d.ws")
-        && col("s.event_type") === col("d.event_type"), "full_outer")
-      .select(coalesce(col("d.ws"), col("s.ws")).as("ws"),
-        coalesce(col("d.event_type"), col("s.event_type")).as("event_type"),
-        (coalesce(col("s.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n"))
-  }
-
-  /** Streaming per-window top-k (twin of the batch stream_topk op):
-    * foreachBatch folds each micro-batch's count partials into a
-    * (ws, type, n) state table — bounded by |windows × types|, never
-    * stream volume — and [[topkView]] ranks that bounded state. Rank
-    * over an agg isn't expressible as one streaming plan in append
-    * mode; state-fold + view is the standard decomposition. */
-  def topkSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(topkMergeCounts(readState(), topkCounts(batch)))
-    }
-
-  /** Read side of [[topkSink]]: the top-k types per window over the
-    * bounded count state — same rank/tiebreak as the batch op. */
-  def topkView(state: DataFrame, k: Int = 2): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("ws").orderBy(col("n").desc, col("event_type").asc)
-    state.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
-
   /** Stream-stream interval join (twin of the batch stream_interval_join):
     * purchases matched to the same user's clicks in the preceding
     * `window`. BOTH sides carry watermarks and the join condition bounds
@@ -168,7 +141,7 @@ object Streams {
     */
   def upsertSink(incoming: DataFrame, keys: Seq[String], orderCol: String)(
       readTable: () => DataFrame)(writeTable: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     incoming.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       writeTable(graft.engine.Sinks.upsert(readTable(), batch, keys, orderCol))
     }
@@ -205,7 +178,7 @@ object Streams {
     */
   def cdcApplySink(changes: DataFrame)(readState: () => DataFrame)(
       writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       writeState(cdcMerge(readState(), cdcWinners(batch)))
     }
@@ -247,7 +220,7 @@ object Streams {
     * why the upsert (not append) path is the safe streaming JDBC sink. */
   def jdbcUpsertSink(incoming: DataFrame, cfg: graft.engine.Sources.JdbcConfig,
       table: String, keys: Seq[String], orderCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     incoming.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       graft.engine.Sources.jdbcUpsert(batch, cfg, table, keys, orderCol)
     }
@@ -273,481 +246,6 @@ object Streams {
       .select(col("window.start").as("ws"), col("event_type"),
         col("open"), col("high"), col("low"), col("close"), col("n"), col("volume"))
 
-  /** One micro-batch's (user, hour) counts — the algebraic partial the
-    * rate-alert state merges (twin of the batch rate_alert's aggregate
-    * stage; same integer hour index). */
-  private[streaming] def hourCounts(batch: DataFrame): DataFrame =
-    instantTs(batch)
-      .groupBy(col("user_id"), graft.ops.hourIdx.as("hidx"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Merge a batch's hourly count partials into the (user, hidx, n)
-    * state — counts are algebraic, so merge = SUM on the key. Same
-    * exactly-once caveat as [[topkMergeCounts]]. */
-  def rateAlertMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.user_id") === col("d.user_id")
-        && col("s.hidx") === col("d.hidx"), "full_outer")
-      .select(coalesce(col("d.user_id"), col("s.user_id")).as("user_id"),
-        coalesce(col("d.hidx"), col("s.hidx")).as("hidx"),
-        (coalesce(col("s.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n"))
-  }
-
-  /** foreachBatch fold for the rate-alert state (twin of the batch
-    * rate_alert op): state is bounded by |users × active hours|, never
-    * stream volume; [[rateAlertView]] computes the alerts over it. */
-  def rateAlertSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(rateAlertMerge(readState(), hourCounts(batch)))
-    }
-
-  /** Read side of [[rateAlertSink]]: the trailing-24-calendar-hour
-    * baseline compare over the bounded count state — LITERALLY the batch
-    * op's view ([[graft.ops.rateAlertOver]]), shared so stream-vs-batch
-    * parity cannot drift. */
-  def rateAlertView(state: DataFrame): DataFrame =
-    graft.ops.rateAlertOver(state)
-
-  /** Per-batch (type, bin) count partials for the drift twin — LITERALLY
-    * the batch op's grid pass ([[graft.ops.Stats.driftCounts]]), shared so
-    * the two formulations cannot drift. */
-  private[streaming] def driftCounts(batch: DataFrame): DataFrame =
-    graft.ops.Stats.driftCounts(instantTs(batch))
-
-  /** Merge a batch's drift-grid partials into the (type, bin, c_ref,
-    * c_cur) state — the grid is algebraic, so merge = keyed SUM.
-    * Null-safe key equality: a NULL event_type is a legitimate audited
-    * group in the batch op, so the merge must not fork it into duplicate
-    * state rows. Same exactly-once caveat as [[topkMergeCounts]]. */
-  def driftMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.event_type") <=> col("d.event_type")
-        && col("s.bin") <=> col("d.bin"), "full_outer")
-      .select(coalesce(col("d.event_type"), col("s.event_type")).as("event_type"),
-        coalesce(col("d.bin"), col("s.bin")).as("bin"),
-        (coalesce(col("s.c_ref"), lit(0L)) + coalesce(col("d.c_ref"), lit(0L))).as("c_ref"),
-        (coalesce(col("s.c_cur"), lit(0L)) + coalesce(col("d.c_cur"), lit(0L))).as("c_cur"))
-  }
-
-  /** foreachBatch fold for the drift-gate state (twin of the batch
-    * drift_report op): production drift checks run CONTINUOUSLY against
-    * the ingest stream, and the grid state is bounded by
-    * |types × bins| (~100 rows), never stream volume. */
-  def driftSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(driftMerge(readState(), driftCounts(batch)))
-    }
-
-  /** Read side of [[driftSink]]: TVD + χ² over the bounded grid state —
-    * LITERALLY the batch op's view ([[graft.ops.Stats.driftView]]). */
-  def driftView(state: DataFrame): DataFrame =
-    graft.ops.Stats.driftView(state)
-
-  /** Per-batch t-test moment partials — LITERALLY the batch op's moment
-    * pass ([[graft.ops.Stats.ttestMoments]]). */
-  private[streaming] def ttestMoments(batch: DataFrame): DataFrame =
-    graft.ops.Stats.ttestMoments(instantTs(batch))
-
-  /** Merge a batch's moment partials into the per-day (n, Σx, Σx²) state:
-    * counts and EXACT DECIMAL sums are algebraic, so merge = keyed SUM —
-    * and because the sums are decimals, the merged state is bit-identical
-    * no matter how the stream was batched (an IEEE-double running sum
-    * would drift with the cut points). Casts pin the state schema the
-    * parquet round-trip needs. Same exactly-once caveat as
-    * [[topkMergeCounts]]. */
-  def ttestMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val s = state.as("s"); val d = delta.as("d")
-    def add(c: String, dt: org.apache.spark.sql.types.DataType) =
-      (coalesce(col(s"s.$c"), lit(0).cast(dt))
-        + coalesce(col(s"d.$c"), lit(0).cast(dt))).cast(dt).as(c)
-    s.join(d, col("s.day") <=> col("d.day"), "full_outer")
-      .select(Seq(coalesce(col("d.day"), col("s.day")).as("day")) ++
-        Seq("a", "b").flatMap { arm =>
-          Seq(add(s"n_$arm", org.apache.spark.sql.types.LongType),
-            add(s"sx_$arm", DecimalType(38, 2)),
-            add(s"sxx_$arm", DecimalType(38, 4)))
-        }: _*)
-  }
-
-  /** foreachBatch fold for the experiment-significance state (twin of the
-    * batch ab_ttest op): A/B dashboards recompute significance as events
-    * arrive, and the moment state is bounded by |days|, never stream
-    * volume. */
-  def ttestSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(ttestMerge(readState(), ttestMoments(batch)))
-    }
-
-  /** Read side of [[ttestSink]]: the Welch statistic over the bounded
-    * moment state — LITERALLY the batch op's view
-    * ([[graft.ops.Stats.ttestView]]). */
-  def ttestView(state: DataFrame): DataFrame =
-    graft.ops.Stats.ttestView(state)
-
-  /** Second read side of [[ttestSink]] — the always-valid SEQUENTIAL
-    * monitor (batch op ab_sequential) reads the SAME moment fold: one
-    * state, two monitors (the srmSink/rolling_corr pattern). This is
-    * the view a live experiment actually needs — the whole point of a
-    * group-sequential boundary is that it stays valid while the fold
-    * grows. */
-  def seqView(state: DataFrame): DataFrame =
-    graft.ops.Stats.seqView(state)
-
-  /** Per-batch calendar-hour count partials — LITERALLY the batch op's
-    * fact pass ([[graft.ops.Events.seasonalCounts]]). */
-  private[streaming] def seasonalCounts(batch: DataFrame): DataFrame =
-    graft.ops.Events.seasonalCounts(instantTs(batch))
-
-  /** Merge a batch's hour-count partials into the (hts, n) state — counts
-    * are algebraic, merge = keyed SUM; state is calendar-bounded (24·365
-    * rows/yr), never stream volume. Same exactly-once caveat as
-    * [[topkMergeCounts]]. */
-  def seasonalMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.hts") <=> col("d.hts"), "full_outer")
-      .select(coalesce(col("d.hts"), col("s.hts")).as("hts"),
-        (coalesce(col("s.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n"))
-  }
-
-  /** foreachBatch fold for the seasonal-anomaly state (twin of the batch
-    * anomaly_seasonal op): the load monitor runs continuously and each
-    * arriving hour is judged against the hour-of-week cells the fold has
-    * accumulated so far. */
-  def seasonalSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(seasonalMerge(readState(), seasonalCounts(batch)))
-    }
-
-  /** Read side of [[seasonalSink]]: the hour-of-week cell compare —
-    * LITERALLY the batch op's view ([[graft.ops.Events.seasonalView]]). */
-  def seasonalView(state: DataFrame): DataFrame =
-    graft.ops.Events.seasonalView(state)
-
-  /** Per-batch (type, day) cents partials for the changepoint twin —
-    * LITERALLY the batch op's grid pass
-    * ([[graft.ops.Stats.cusumDaily]]). */
-  private[streaming] def cusumDaily(batch: DataFrame): DataFrame =
-    graft.ops.Stats.cusumDaily(instantTs(batch))
-
-  /** Merge a batch's daily-cents partials into the (type, day, cents)
-    * state — exact integer cents are algebraic, so merge = keyed SUM and
-    * the fold is bit-identical at any batch cut (an IEEE-double revenue
-    * sum would drift with the cut points); state is calendar×types
-    * bounded, never stream volume. Same exactly-once caveat as
-    * [[topkMergeCounts]]. */
-  def cusumMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.event_type") <=> col("d.event_type")
-        && col("s.day") <=> col("d.day"), "full_outer")
-      .select(coalesce(col("d.event_type"), col("s.event_type")).as("event_type"),
-        coalesce(col("d.day"), col("s.day")).as("day"),
-        (coalesce(col("s.cents"), lit(0L)) + coalesce(col("d.cents"), lit(0L)))
-          .as("cents"))
-  }
-
-  /** foreachBatch fold for the changepoint state (twin of the batch
-    * changepoint_cusum op): level-shift monitors run continuously, and
-    * each arriving day re-scores the CUSUM argmax over the grid the fold
-    * has accumulated so far. */
-  def cusumSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(cusumMerge(readState(), cusumDaily(batch)))
-    }
-
-  /** Read side of [[cusumSink]]: the CUSUM argmax over the bounded grid —
-    * LITERALLY the batch op's view ([[graft.ops.Stats.cusumView]]). */
-  def cusumView(state: DataFrame): DataFrame =
-    graft.ops.Stats.cusumView(state)
-
-  /** Streaming twin of the batch join_broadcast op: STREAM-STATIC
-    * enrichment — the most common production streaming pattern (decorate
-    * facts with dimension attributes as they arrive). LITERALLY the batch
-    * op's join ([[graft.ops.Relational.enrichView]]): Spark plans the
-    * static side as the same BroadcastHashJoin for a streaming fact side,
-    * and an INNER stream-static join is stateless by construction — no
-    * watermark, no state store, each micro-batch enriches independently,
-    * which is why the twin needs no fold at all. */
-  def enrich(customers: DataFrame, nation: DataFrame, region: DataFrame): DataFrame =
-    graft.ops.Relational.enrichView(customers, nation, region)
-
-  /** Per-batch (type, user) train/holdout count partials for the
-    * leakage twin — LITERALLY the batch op's grid pass
-    * ([[graft.ops.Audit.splitTemporalGrid]]). */
-  private[streaming] def leakGrid(batch: DataFrame): DataFrame =
-    graft.ops.Audit.splitTemporalGrid(instantTs(batch))
-
-  /** Merge a batch's grid partials into the (type, user, n_tr, n_ho)
-    * state — counts are algebraic, merge = keyed SUM. The LEAK flags are
-    * NOT state: a user whose first holdout event arrives later flips
-    * from clean to leaked, so flags must be evaluated over the completed
-    * grid ([[leakView]]), never folded. State is |types×users| bounded —
-    * the entity domain, not stream volume. Same exactly-once caveat as
-    * [[topkMergeCounts]]. */
-  def leakMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.event_type") <=> col("d.event_type")
-        && col("s.user_id") <=> col("d.user_id"), "full_outer")
-      .select(coalesce(col("d.event_type"), col("s.event_type")).as("event_type"),
-        coalesce(col("d.user_id"), col("s.user_id")).as("user_id"),
-        (coalesce(col("s.n_tr"), lit(0L)) + coalesce(col("d.n_tr"), lit(0L))).as("n_tr"),
-        (coalesce(col("s.n_ho"), lit(0L)) + coalesce(col("d.n_ho"), lit(0L))).as("n_ho"))
-  }
-
-  /** foreachBatch fold for the temporal-split leakage state (twin of the
-    * batch split_temporal op): eval-set honesty is monitored as events
-    * arrive — a training user straying into the holdout window is
-    * flagged on the batch after it happens. */
-  def leakSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(leakMerge(readState(), leakGrid(batch)))
-    }
-
-  /** Read side of [[leakSink]]: the leakage audit over the completed
-    * grid — LITERALLY the batch op's view
-    * ([[graft.ops.Audit.splitTemporalView]]). */
-  def leakView(state: DataFrame): DataFrame =
-    graft.ops.Audit.splitTemporalView(state)
-
-  /** Per-batch (lang, pred_lang) confusion partials for the classifier-
-    * monitor twin — LITERALLY the batch op's grid pass
-    * ([[graft.ops.Text.langConfusionGrid]]), so the monitored classifier
-    * is provably the shipped one. (No timestamps involved — documents
-    * stream without event time.) */
-  private[streaming] def langGrid(batch: DataFrame): DataFrame =
-    graft.ops.Text.langConfusionGrid(batch)
-
-  /** Merge a batch's confusion partials into the (lang, pred_lang, n)
-    * state — counts are algebraic, merge = keyed SUM; state is bounded
-    * by |langs|², never stream volume. Null-safe key equality: NULL
-    * actual-lang docs form their own audited cell. Same exactly-once
-    * caveat as [[topkMergeCounts]]. */
-  def langMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.lang") <=> col("d.lang")
-        && col("s.pred_lang") <=> col("d.pred_lang"), "full_outer")
-      .select(coalesce(col("d.lang"), col("s.lang")).as("lang"),
-        coalesce(col("d.pred_lang"), col("s.pred_lang")).as("pred_lang"),
-        (coalesce(col("s.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n"))
-  }
-
-  /** foreachBatch fold for the classifier-monitor state (twin of the
-    * batch lang_id_eval op): the heuristic gate's error surface is
-    * recomputed continuously as documents arrive — the standard check
-    * that an upstream corpus shift hasn't degraded a routing
-    * classifier. */
-  def langSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(langMerge(readState(), langGrid(batch)))
-    }
-
-  /** Read side of [[langSink]]: flags + ordering over the bounded grid —
-    * LITERALLY the batch op's view
-    * ([[graft.ops.Text.langConfusionView]]). */
-  def langView(state: DataFrame): DataFrame =
-    graft.ops.Text.langConfusionView(state)
-
-  /** Merge (source, pred_lang) routing-cell partials (twin state of the
-    * batch lang_routing op) — every cell is algebraic (doc count, token
-    * sum, mixed-flag count) under doc-at-most-once delivery, ONE keyed
-    * SUM merge. State bound: ≤|sources|·|langs| rows regardless of
-    * stream length. NULL source is a grouping value (its own lane),
-    * never a join key. */
-  def routeMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("source", "pred_lang")
-      .agg(sum(col("n")).as("n"), sum(col("n_tok")).as("n_tok"),
-        sum(col("n_mixed")).as("n_mixed"))
-
-  /** foreachBatch fold for the per-language routing monitor (twin of the
-    * batch lang_routing op): the "what does each source feed each
-    * language branch, and how much of it is mixed text" matrix stays
-    * current as documents arrive. */
-  def routeSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(routeMerge(readState(), graft.ops.Text.routeGrid(batch)))
-    }
-
-  /** Read side of [[routeSink]] — LITERALLY the batch op's view. */
-  def routeView(state: DataFrame): DataFrame =
-    graft.ops.Text.routeView(state)
-
-  /** Per-batch count-min cell partials for the heavy-hitters twin —
-    * LITERALLY the batch op's cell pass ([[graft.ops.Text.hhCells]]). */
-  private[streaming] def hhCells(batch: DataFrame): DataFrame =
-    graft.ops.Text.hhCells(batch)
-
-  /** Per-batch exact candidate-count partials — LITERALLY the batch op's
-    * audit pass ([[graft.ops.Text.hhCand]]). */
-  private[streaming] def hhCand(batch: DataFrame): DataFrame =
-    graft.ops.Text.hhCand(batch)
-
-  /** Merge a batch's CMS cell partials into the (d, bucket, cn) state —
-    * count-min cells are the textbook MERGEABLE sketch: merge = cell-wise
-    * SUM, and the state never exceeds the 4×1024 grid no matter the
-    * stream volume. Same exactly-once caveat as [[topkMergeCounts]]. */
-  def hhCellsMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.d") <=> col("d.d") && col("s.bucket") <=> col("d.bucket"),
-        "full_outer")
-      .select(coalesce(col("d.d"), col("s.d")).as("d"),
-        coalesce(col("d.bucket"), col("s.bucket")).as("bucket"),
-        (coalesce(col("s.cn"), lit(0L)) + coalesce(col("d.cn"), lit(0L))).as("cn"))
-  }
-
-  /** Merge a batch's exact candidate counts into the (tok, exact_n)
-    * state — the audit side is vocab-bounded (not stream-bounded), the
-    * documented trade of carrying the overcount audit next to the
-    * sketch; a deployment that cannot hold the vocabulary keeps only
-    * [[hhCellsMerge]]'s 4096 cells and samples candidates instead. */
-  def hhCandMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    val s = state.as("s"); val d = delta.as("d")
-    s.join(d, col("s.tok") <=> col("d.tok"), "full_outer")
-      .select(coalesce(col("d.tok"), col("s.tok")).as("tok"),
-        (coalesce(col("s.exact_n"), lit(0L))
-          + coalesce(col("d.exact_n"), lit(0L))).as("exact_n"))
-  }
-
-  /** foreachBatch fold for the heavy-hitters state (twin of the batch
-    * heavy_hitters op): token frequency monitors run against the ingest
-    * stream, and both folds are keyed SUM merges of algebraic counts, so
-    * the final state — and therefore [[hhView]] — is identical at any
-    * batch cut. */
-  def hhSink(docs: DataFrame)(readCells: () => DataFrame, readCand: () => DataFrame)(
-      writeCells: DataFrame => Unit, writeCand: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeCells(hhCellsMerge(readCells(), hhCells(batch)))
-      writeCand(hhCandMerge(readCand(), hhCand(batch)))
-    }
-
-  /** Read side of [[hhSink]]: estimate + rank over the bounded state —
-    * LITERALLY the batch op's view ([[graft.ops.Text.hhView]]). */
-  def hhView(cells: DataFrame, cand: DataFrame): DataFrame =
-    graft.ops.Text.hhView(cells, cand)
-
-  /** Merge per-batch (w, n, df) vocabulary partials (twin state of the
-    * batch vocab_topk op) — keyed SUM merge: term frequency is algebraic,
-    * and df is too BECAUSE each document arrives exactly once (its 0/1
-    * per-word df contribution is batch-local), so the fold needs no
-    * count(DISTINCT) over history. Same exactly-once caveat as
-    * [[topkMergeCounts]] — here a replay would also double-count df. */
-  def vtopkMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("w")
-      .agg(sum(col("n")).as("n"), sum(col("df")).as("df"))
-
-  /** foreachBatch fold for the corpus vocabulary table (twin of the
-    * batch vocab_topk op): the tokenizer-vocab / idf table recomputed as
-    * documents stream in — the nightly-drop fold a vocab pipeline
-    * actually runs (re-rank from the folded grid, never rescan). */
-  def vtopkSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(vtopkMerge(readState(), graft.ops.Text.vocabTfGrid(batch)))
-    }
-
-  /** Read side of [[vtopkSink]] — LITERALLY the batch op's view. */
-  def vtopkView(state: DataFrame): DataFrame =
-    graft.ops.Text.vocabTopView(state)
-
-  /** Merge a batch's content digests into the stored dedup index (twin
-    * state of the batch dedup_incremental op) — union + distinct,
-    * IDEMPOTENT: replays are absorbed outright (the contamination
-    * presence-grid argument). */
-  def indexMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).distinct()
-
-  /** foreachBatch fold for the persisted content-hash index — the
-    * production dedup shape: history streams in ONCE (digests folded,
-    * text never retained), and every nightly drop then checks in against
-    * the completed index via [[dedupIncrView]]. */
-  def indexSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(indexMerge(readState(), graft.ops.Dedup.dedupIndex(batch)))
-    }
-
-  /** Read side of [[indexSink]]: dedup a new drop against the folded
-    * index — LITERALLY the batch op's view. */
-  def dedupIncrView(batchDocs: DataFrame, idx: DataFrame): DataFrame =
-    graft.ops.Dedup.dedupIncrView(batchDocs, idx)
-
-  /** Merge per-batch (source, h, df) doc-frequency partials and
-    * (source, n_docs) counts (twin state of the batch boilerplate_detect
-    * op) — keyed SUM merges: both are algebraic BECAUSE each document
-    * arrives exactly once (its distinct-shingle presence and its doc
-    * count are batch-local — the vtopkMerge df argument). */
-  def boilerDfMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("source", "h")
-      .agg(sum(col("df")).as("df"))
-
-  def boilerDocsMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("source")
-      .agg(sum(col("n_docs")).as("n_docs"))
-
-  /** foreachBatch fold for the within-source boilerplate statistics
-    * (twin of the batch boilerplate_detect op): the crawl streams in,
-    * the per-source furniture statistics fold, and
-    * [[boilerView]] re-screens any drop against the completed corpus —
-    * the threshold set sharpens as more of a site is seen, which only
-    * the view-over-completed-fold shape tracks. */
-  def boilerSink(docs: DataFrame)(readDf: () => DataFrame,
-      readDocs: () => DataFrame)(writeDf: DataFrame => Unit,
-      writeDocs: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeDf(boilerDfMerge(readDf(), graft.ops.Audit.boilerDfGrid(batch)))
-      writeDocs(boilerDocsMerge(readDocs(), graft.ops.Audit.boilerDocsGrid(batch)))
-    }
-
-  /** Read side of [[boilerSink]]: screen docs against the folded
-    * statistics — LITERALLY the batch op's view. */
-  def boilerView(docs: DataFrame, dfGrid: DataFrame,
-      docsGrid: DataFrame): DataFrame =
-    graft.ops.Audit.boilerView(docs, dfGrid, docsGrid)
-
-  /** Merge per-batch per-source PII incidence partials (twin state of
-    * the batch pii_report op) — every cell is an algebraic count under
-    * doc-at-most-once delivery, ONE keyed SUM merge. */
-  def piiMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("source")
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("d_email")).as("d_email"), sum(col("m_email")).as("m_email"),
-        sum(col("d_ip")).as("d_ip"), sum(col("m_ip")).as("m_ip"),
-        sum(col("d_num")).as("d_num"), sum(col("m_num")).as("m_num"))
-
-  /** foreachBatch fold for the PII incidence monitor (twin of the batch
-    * pii_report op): the "which sources carry PII" table recomputed as
-    * the crawl streams in — the alarm a curator wants BEFORE a
-    * PII-heavy source reaches the training mix. */
-  def piiSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(piiMerge(readState(), graft.ops.Pipeline.piiGrid(batch)))
-    }
-
-  /** Read side of [[piiSink]] — LITERALLY the batch op's view. */
-  def piiView(state: DataFrame): DataFrame =
-    graft.ops.Pipeline.piiView(state)
-
   /** Streaming twin of the batch interval_merge op: DYNAMIC-GAP session
     * windows — each event extends its session by its OWN duration
     * (props.k minutes), so overlapping per-user intervals coalesce
@@ -772,715 +270,207 @@ object Streams {
       .select(col("user_id"), col("session_window.start").as("start"),
         col("session_window.end").as("end"), col("n_events"))
 
-  // ------------------------------------------------------------------
-  // Grid-fold twins of the remaining batch event analytics. These merges
-  // use union + re-aggregate rather than the full_outer-join style above:
-  // for decimal sums it is the only form that preserves the batch ops'
-  // NULL semantics exactly (SUM skips NULL partials but yields NULL when
-  // every contribution is NULL — a coalesce-to-0 join merge would turn
-  // an all-NULL cell into 0), and for presence grids the merge is just
-  // idempotent set union. Same exactly-once caveat as topkMergeCounts.
-  // ------------------------------------------------------------------
-
-  /** Merge (dow, hod, n) hour-of-week count partials — twin state of the
-    * batch activity_profile op; ≤169 cells, never stream volume. */
-  def activityMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("dow", "hod")
-      .agg(sum(col("n")).as("n"))
-
-  /** foreachBatch fold for the hour-of-week load matrix (twin of the
-    * batch activity_profile op): the capacity-planning profile is
-    * maintained continuously as traffic arrives. */
-  def activitySink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(activityMerge(readState(),
-        graft.ops.Events.activityGrid(instantTs(batch))))
-    }
-
-  /** Read side of [[activitySink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.activityView]]). */
-  def activityView(state: DataFrame): DataFrame =
-    graft.ops.Events.activityView(state)
-
-  /** Merge (event_type, n, dsum) partials — twin state of the batch
-    * agg_incremental op, whose CONTRACT is precisely this merge
-    * (yesterday's rollup + today's delta == the full recompute); the
-    * fold is that contract applied per micro-batch. Delegates to the
-    * batch op's own merge ([[graft.ops.Events.incrMergeGrids]]) so twin
-    * and op cannot drift. */
-  def incrMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    graft.ops.Events.incrMergeGrids(state, delta)
-
-  /** foreachBatch fold for the incremental rollup (twin of the batch
-    * agg_incremental op). */
-  def incrSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(incrMerge(readState(),
-        graft.ops.Events.incrPartial(instantTs(batch))))
-    }
-
-  /** Read side of [[incrSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.incrView]]). */
-  def incrView(state: DataFrame): DataFrame =
-    graft.ops.Events.incrView(state)
-
-  /** Merge (user_id, week) presence partials — twin state of the batch
-    * retention_cohort op. Presence is idempotent (set union), so the
-    * fold also absorbs redelivered rows — stronger than the counting
-    * folds' exactly-once caveat. COHORT ASSIGNMENT IS NOT STATE: a
-    * user's first-active week flips when an earlier event arrives in a
-    * later batch, so it lives in [[retentionView]] over the completed
-    * grid (the split_temporal flags-are-view discipline). */
-  def retentionMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).distinct()
-
-  /** foreachBatch fold for the retention presence grid (twin of the
-    * batch retention_cohort op). */
-  def retentionSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(retentionMerge(readState(),
-        graft.ops.Events.retentionGrid(instantTs(batch))))
-    }
-
-  /** Read side of [[retentionSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.retentionView]]). */
-  def retentionView(state: DataFrame): DataFrame =
-    graft.ops.Events.retentionView(state)
-
-  /** Merge (user_id, day) presence partials — twin state of the batch
-    * rolling_active_users op; idempotent set union like
-    * [[retentionMerge]]. */
-  def rauMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).distinct()
-
-  /** foreachBatch fold for the DAU/WAU presence grid (twin of the batch
-    * rolling_active_users op): engagement dashboards maintain exactly
-    * this user-day grid as events arrive; the ×7 cover explosion and
-    * count run in the view, over already-deduped rows only. */
-  def rauSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(rauMerge(readState(),
-        graft.ops.Events.rauGrid(instantTs(batch))))
-    }
-
-  /** Read side of [[rauSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.rauView]]). */
-  def rauView(state: DataFrame): DataFrame =
-    graft.ops.Events.rauView(state)
-
-  /** Merge (user_id, wk, rev) decimal revenue partials — twin state of
-    * the batch cohort_ltv op: exact decimal sums are algebraic, and the
-    * union form preserves the all-NULL-cell-stays-NULL semantics (see
-    * block comment above). Cohort assignment is view-side, like
-    * [[retentionMerge]]. */
-  def ltvMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("user_id", "wk")
-      .agg(sum(col("rev"))
-        .cast(org.apache.spark.sql.types.DecimalType(38, 2)).as("rev"))
-
-  /** foreachBatch fold for the LTV revenue grid (twin of the batch
-    * cohort_ltv op). */
-  def ltvSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(ltvMerge(readState(),
-        graft.ops.Events.ltvGrid(instantTs(batch))))
-    }
-
-  /** Read side of [[ltvSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.ltvView]]). */
-  def ltvView(state: DataFrame): DataFrame =
-    graft.ops.Events.ltvView(state)
+  /** Streaming twin of the batch join_broadcast op: STREAM-STATIC
+    * enrichment — the most common production streaming pattern (decorate
+    * facts with dimension attributes as they arrive). LITERALLY the batch
+    * op's join ([[graft.ops.Relational.enrichView]]): Spark plans the
+    * static side as the same BroadcastHashJoin for a streaming fact side,
+    * and an INNER stream-static join is stateless by construction — no
+    * watermark, no state store, each micro-batch enriches independently,
+    * which is why the twin needs no fold at all. */
+  def enrich(customers: DataFrame, nation: DataFrame, region: DataFrame): DataFrame =
+    graft.ops.Relational.enrichView(customers, nation, region)
 
   // ------------------------------------------------------------------
-  // Ordered-fold twins: the remaining per-event / chained-stage batch
-  // analytics. Their folds carry bounded per-key state (a 3-timestamp
-  // funnel, one last reading, a ≤7-row lag ring, a presence bit, an
-  // arrival high-water mark) and are EXACT under per-user event-time-
-  // ordered arrival — the Kafka-per-key / watermark-sorted-replay
-  // deployment shape; an out-of-order source would buffer each batch to
-  // its watermark boundary first (the session/ohlc twins' append-mode
-  // discipline). Every fold step is the batch op's own code
-  // (Events.*Fold — the batch op is the same fold applied once), so twin
-  // and op cannot drift.
+  // Grid folds. A twin declares, per state table, the batch op's grid
+  // pass and the KeyedFold its partials merge by; `foldSink` runs every
+  // twin, and callers read state through the batch ops' own views.
   // ------------------------------------------------------------------
 
-  /** foreachBatch fold for the signup→click→purchase funnel (twin of the
-    * batch event_funnel op): per-user stage timestamps advance as events
-    * arrive — the live growth-funnel counter. */
-  def funnelSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(graft.ops.Events.funnelFold(readState(), instantTs(batch)))
+  /** One micro-batch's transition: current states and the batch in, next
+    * states out, in the same order. */
+  type Step = (Seq[DataFrame], DataFrame) => Seq[DataFrame]
+
+  /** How one measure column of a grid combines with its state cell. The
+    * result is cast to `stateType`, the column's type in the stored
+    * state. */
+  sealed abstract class Measure(combine: (Column, Column) => Column) {
+    def column: String
+    def stateType: DataType
+    private[streaming] def merged: Column =
+      combine(col(s"s.$column"), col(s"d.$column")).cast(stateType).as(column)
+  }
+  /** SUM's NULL algebra: NULL partials are skipped; a cell stays NULL
+    * only while every partial is NULL. */
+  final case class Sum(column: String, stateType: DataType)
+      extends Measure((s, d) => coalesce(s + d, s, d))
+  /** `least`/`greatest` skip NULLs, as MIN/MAX do. */
+  final case class Min(column: String, stateType: DataType) extends Measure(least(_, _))
+  final case class Max(column: String, stateType: DataType) extends Measure(greatest(_, _))
+
+  /** A grid's merge into its state: the grid is keyed by `keys` and each
+    * measure combines per key. With no measures the grid is a presence
+    * set and the merge is `union` + `distinct`. */
+  final case class KeyedFold(keys: Seq[String], measures: Measure*) {
+    def merge(state: DataFrame, delta: DataFrame): DataFrame =
+      if (measures.isEmpty) state.unionByName(delta).distinct()
+      else state.as("s").join(delta.as("d"),
+          keys.map(k => col(s"s.$k") <=> col(s"d.$k")).reduce(_ && _), "full_outer")
+        .select(keys.map(k => coalesce(col(s"d.$k"), col(s"s.$k")).as(k))
+          ++ measures.map(_.merged): _*)
+  }
+  object KeyedFold {
+    val presence: KeyedFold = KeyedFold(Nil)
+  }
+
+  /** A grid twin: per state table, a grid pass over the micro-batch and
+    * the KeyedFold that merges it into that state. */
+  final case class GridTwin(folds: (DataFrame => DataFrame, KeyedFold)*) extends Step {
+    def apply(states: Seq[DataFrame], batch: DataFrame): Seq[DataFrame] = {
+      require(states.size == folds.size, s"${folds.size} states expected")
+      states.zip(folds).map { case (s, (grid, fold)) => fold.merge(s, grid(batch)) }
     }
+  }
 
-  /** Read side of [[funnelSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.funnelView]]). */
-  def funnelView(state: DataFrame): DataFrame =
-    graft.ops.Events.funnelView(state)
-
-  /** foreachBatch fold for the time-weighted average (twin of the batch
-    * time_weighted_avg op): the gauge integral accumulates as readings
-    * arrive; state is ONE last reading + three algebraic partials per
-    * user. */
-  def twaSink(events: DataFrame)(readLast: () => DataFrame,
-      readAcc: () => DataFrame)(writeLast: DataFrame => Unit,
-      writeAcc: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (last, acc) =
-        graft.ops.Events.twaFold(readLast(), readAcc(), instantTs(batch))
-      writeAcc(acc)
-      writeLast(last)
+  /** The fold sink: each micro-batch reads every state, runs `step`, and
+    * writes the next states in order. `writes` must store a new version
+    * (the next states read the current ones lazily). */
+  def foldSink(input: DataFrame, step: Step)(reads: (() => DataFrame)*)(
+      writes: (DataFrame => Unit)*): DataStreamWriter[Row] = {
+    require(reads.size == writes.size, "one write per read state")
+    input.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      step(reads.map(_()), batch).zip(writes).foreach { case (s, w) => w(s) }
     }
+  }
 
-  /** Read side of [[twaSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.twaView]]). */
-  def twaView(acc: DataFrame): DataFrame =
-    graft.ops.Events.twaView(acc)
+  /** A grid over the batch with its event time made an instant. */
+  private def timed(grid: DataFrame => DataFrame): DataFrame => DataFrame =
+    b => grid(instantTs(b))
+  private def sums(t: DataType, cs: String*): Seq[Measure] = cs.map(Sum(_, t))
+  private def counts(keys: String*)(cs: String*): KeyedFold =
+    KeyedFold(keys, sums(LongType, cs: _*): _*)
 
-  /** foreachBatch fold for the dyadic EMA (twin of the batch win_ema
-    * op): per-event output, so the sink appends emitted rows to an
-    * output log next to the ≤7-row per-user lag ring it carries. */
-  def emaSink(events: DataFrame)(readRing: () => DataFrame,
-      readOut: () => DataFrame)(writeRing: DataFrame => Unit,
-      writeOut: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (out, ring) = graft.ops.Events.emaFold(readRing(), instantTs(batch))
-      writeOut(readOut().unionByName(out))
-      writeRing(ring)
-    }
+  // event twins
+  val topk = GridTwin(timed(Events.topkGrid) -> counts("ws", "event_type")("n"))
+  val rateAlert = GridTwin(timed(graft.ops.hourCounts) -> counts("user_id", "hidx")("n"))
+  val drift = GridTwin(timed(Stats.driftCounts) -> counts("event_type", "bin")("c_ref", "c_cur"))
+  val ttest = GridTwin(timed(Stats.ttestMoments) -> KeyedFold(Seq("day"),
+    Seq("a", "b").flatMap(arm => Seq(Sum(s"n_$arm", LongType),
+      Sum(s"sx_$arm", DecimalType(38, 2)), Sum(s"sxx_$arm", DecimalType(38, 4)))): _*))
+  val seasonal = GridTwin(timed(Events.seasonalCounts) -> counts("hts")("n"))
+  val cusum = GridTwin(timed(Stats.cusumDaily) -> counts("event_type", "day")("cents"))
+  val leak = GridTwin(timed(Audit.splitTemporalGrid) -> counts("event_type", "user_id")("n_tr", "n_ho"))
+  val activity = GridTwin(timed(Events.activityGrid) -> counts("dow", "hod")("n"))
+  val retention = GridTwin(timed(Events.retentionGrid) -> KeyedFold.presence)
+  val rau = GridTwin(timed(Events.rauGrid) -> KeyedFold.presence)
+  val ltv = GridTwin(timed(Events.ltvGrid) ->
+    KeyedFold(Seq("user_id", "wk"), Sum("rev", DecimalType(38, 2))))
+  val benford = GridTwin(Audit.benfordGrid _ -> counts("event_type", "digit", "digit2")("n_obs"))
+  val rfm = GridTwin(Events.rfmGrid _ -> KeyedFold(Seq("user_id"),
+    Max("last_day", DateType) +: sums(LongType, "f", "m_cents"): _*))
+  val assoc = GridTwin(Events.assocGrid _ -> KeyedFold.presence)
+  val rank = GridTwin(Stats.rankGrid _ -> counts("day", "cents")("c_a", "c_b"))
+  val survival = GridTwin(Stats.survivalGrid _ -> KeyedFold(Seq("user_id"),
+    Min("first_day", DateType), Min("conv_day", DateType), Max("last_day", DateType)))
+  val srm = GridTwin(Stats.srmGrid _ -> counts("day")("n_a", "n_b"))
+  val cuped = GridTwin(Stats.cupedUserGrid _ -> counts("user_id")("x", "y"))
+  val score = GridTwin(Stats.scoreGrid _ -> counts("cents")("c_neg", "c_pos"))
+  val boot = GridTwin(Stats.bootGrid _ -> counts("event_type", "b")("sw", "swx"))
+  val power = GridTwin(Stats.powerGrid _ -> KeyedFold(Seq("event_type"),
+    Sum("n", LongType), Sum("sx", LongType), Sum("sxx", DecimalType(38, 0))))
+  val churn = GridTwin(Events.churnGrid _ -> KeyedFold.presence)
 
-  /** foreachBatch fold for the running-distinct counter (twin of the
-    * batch win_running_distinct op): per-event output over a one-bit
-    * (user, type) presence grid. */
-  def rdSink(events: DataFrame)(readSeen: () => DataFrame,
-      readOut: () => DataFrame)(writeSeen: DataFrame => Unit,
-      writeOut: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (out, seen) = graft.ops.Events.rdFold(readSeen(), instantTs(batch))
-      writeOut(readOut().unionByName(out))
-      writeSeen(seen)
-    }
+  // corpus twins (documents have no event time)
+  val lang = GridTwin(Text.langConfusionGrid _ -> counts("lang", "pred_lang")("n"))
+  val route = GridTwin(Text.routeGrid _ -> counts("source", "pred_lang")("n", "n_tok", "n_mixed"))
+  /** Count-min cells (4×1024, whatever the stream volume) plus exact
+    * candidate counts. The candidate side is vocabulary-bounded, the
+    * price of carrying the overcount audit next to the sketch; a
+    * deployment that cannot hold the vocabulary keeps only the cells. */
+  val hh = GridTwin(Text.hhCells _ -> counts("d", "bucket")("cn"),
+    Text.hhCand _ -> counts("tok")("exact_n"))
+  val vtopk = GridTwin(Text.vocabTfGrid _ -> counts("w")("n", "df"))
+  val index = GridTwin(Dedup.dedupIndex _ -> KeyedFold.presence)
+  val contamination = GridTwin(Audit.contaminationGrid _ -> KeyedFold.presence)
+  val boiler = GridTwin(Audit.boilerDfGrid _ -> counts("source", "h")("df"),
+    Audit.boilerDocsGrid _ -> counts("source")("n_docs"))
+  val pii = GridTwin(Pipeline.piiGrid _ ->
+    counts("source")("n_docs", "d_email", "m_email", "d_ip", "m_ip", "d_num", "m_num"))
+  val fertility = GridTwin(Text.fertilityGrid _ ->
+    counts("lang")("n_docs", "n_bpe", "n_ws", "n_chars", "n_bytes"))
+  val temperature = GridTwin(Pipeline.temperatureGrid _ -> counts("source")("n_docs", "n_tokens"))
+  /** Input: the embeddings stream joined to the static documents dim by
+    * `Llm.driftHalves` (a stream-static join). */
+  val driftVec = GridTwin(
+    Llm.driftSumGrid _ -> KeyedFold(Seq("lang", "half", "pos"), Sum("sv", DecimalType(18, 7))),
+    Llm.driftCountGrid _ -> counts("lang", "half")("n"))
+  val vocab = GridTwin(
+    Audit.vocabEntryGrid _ -> KeyedFold(Seq("h"), Min("first_doc", LongType)),
+    Audit.vocabDocGrid _ -> KeyedFold(Seq("doc_id"), Max("n_tri", LongType)))
 
-  /** Merge (bucket, user, n) lateness partials — keyed SUM over null-safe
-    * keys (twin state of the batch watermark_audit op). */
-  def wmGridMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("bucket", "user_id")
-      .agg(sum(col("n")).as("n"))
-
-  /** foreachBatch fold for the watermark-sizing audit (twin of the batch
-    * watermark_audit op). A stream receives events in ARRIVAL order by
-    * definition, so this fold needs no ordering precondition at all: the
-    * carried per-user high-water mark + the intra-batch running max
-    * reproduce the batch op's arrival window exactly at any batch cut.
-    * State = one µs mark per user + the ≤5×|users| band grid. */
-  def wmSink(events: DataFrame)(readHwm: () => DataFrame,
-      readGrid: () => DataFrame)(writeHwm: DataFrame => Unit,
-      writeGrid: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      import graft.ops.Events
-      val e = Events.wmProjected(instantTs(batch))
-      val intra = Window.partitionBy("user_id").orderBy("aus", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val st = readHwm().select(col("user_id").as("h_uid"), col("hwm").as("s_hwm"))
-      val bucketed = e.withColumn("ihwm", max("tus").over(intra))
-        // null-safe: a NULL user is its own arrival-ordered partition
-        .join(st, col("user_id") <=> col("h_uid"), "left")
-        .withColumn("bucket", Events.wmBucket(
-          Events.wmLateness(greatest(col("ihwm"), col("s_hwm")), col("tus"))))
-      writeGrid(wmGridMerge(readGrid(), Events.wmGrid(bucketed)))
-      writeHwm(readHwm()
-        .unionByName(e.groupBy("user_id").agg(max("tus").as("hwm")))
-        .groupBy("user_id").agg(max("hwm").as("hwm")))
-    }
-
-  /** Read side of [[wmSink]] — LITERALLY the batch op's view
-    * ([[graft.ops.Events.wmView]]). */
-  def wmView(grid: DataFrame): DataFrame =
-    graft.ops.Events.wmView(grid)
+  /** agg_incremental's contract is its own merge, so the twin folds with
+    * [[graft.ops.Events.incrMergeGrids]]. */
+  val incr: Step = { case (Seq(s), b) =>
+    Seq(Events.incrMergeGrids(s, Events.incrPartial(instantTs(b)))) }
 
   // ------------------------------------------------------------------
-  // Grid-fold twins beyond the event family: the corpus-table monitors
-  // (documents / embeddings streams). Same algebraic-fold discipline —
-  // the batch ops' own grid passes and views, shared verbatim.
+  // Ordered folds: bounded per-key state (a 3-timestamp funnel, one last
+  // reading, a ≤7-row lag ring, a presence bit, an arrival high-water
+  // mark), EXACT under per-user event-time-ordered arrival — the
+  // Kafka-per-key / watermark-sorted-replay shape; an out-of-order source
+  // would buffer each batch to its watermark boundary first. Each step is
+  // the batch op's own fold (the batch op is that fold applied once).
+  // The state its view reads comes first, the carried state second.
   // ------------------------------------------------------------------
 
-  /** Merge per-language fertility sum partials (twin state of the batch
-    * tokenizer_fertility op) — five algebraic sums, keyed SUM merge. */
-  def fertilityMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("lang")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_bpe")).as("n_bpe"),
-        sum(col("n_ws")).as("n_ws"), sum(col("n_chars")).as("n_chars"),
-        sum(col("n_bytes")).as("n_bytes"))
+  val funnel: Step = { case (Seq(s), b) => Seq(Events.funnelFold(s, instantTs(b))) }
+  val twa: Step = { case (Seq(acc, last), b) =>
+    val (l, a) = Events.twaFold(last, acc, instantTs(b)); Seq(a, l) }
+  val interarrival: Step = { case (Seq(grid, last), b) =>
+    val (l, g) = Events.interarrivalFold(last, grid, instantTs(b)); Seq(g, l) }
+  /** Per-event output: the emitted rows append to an output log. */
+  private def logged(fold: (DataFrame, DataFrame) => (DataFrame, DataFrame)): Step = {
+    case (Seq(out, carried), b) =>
+      val (o, c) = fold(carried, instantTs(b)); Seq(out.unionByName(o), c)
+  }
+  val ema: Step = logged(Events.emaFold)
+  val rd: Step = logged(Events.rdFold)
+  val boll: Step = logged(Events.bollFold)
+  /** The ≤64-click recency ring per user; the batch's purchases are
+    * credited by the batch op's own pair stage over ring + batch clicks. */
+  val attr: Step = logged(Events.attrFold)
 
-  /** foreachBatch fold for the tokenizer-efficiency table (twin of the
-    * batch tokenizer_fertility op): the fertility table every
-    * multilingual budget reads stays current as documents arrive. */
-  def fertilitySink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(fertilityMerge(readState(),
-        graft.ops.Text.fertilityGrid(batch)))
-    }
+  private val wmGridFold = counts("bucket", "user_id")("n")
+  private val wmHwmFold = KeyedFold(Seq("user_id"), Max("hwm", LongType))
+  /** watermark_audit: arrival order is the stream's own order, so this
+    * fold has no ordering precondition. The carried per-user high-water
+    * mark plus the intra-batch running max reproduce the batch op's
+    * arrival window at any cut. States: (grid, hwm). */
+  val wm: Step = { case (Seq(grid, hwm), batch) =>
+    val e = Events.wmProjected(instantTs(batch))
+    val intra = Window.partitionBy("user_id").orderBy("aus", "event_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val st = hwm.select(col("user_id").as("h_uid"), col("hwm").as("s_hwm"))
+    val bucketed = e.withColumn("ihwm", max("tus").over(intra))
+      // null-safe: a NULL user is its own arrival-ordered partition
+      .join(st, col("user_id") <=> col("h_uid"), "left")
+      .withColumn("bucket", Events.wmBucket(
+        Events.wmLateness(greatest(col("ihwm"), col("s_hwm")), col("tus"))))
+    Seq(wmGridFold.merge(grid, Events.wmGrid(bucketed)),
+      wmHwmFold.merge(hwm, e.groupBy("user_id").agg(max("tus").as("hwm"))))
+  }
 
-  /** Read side of [[fertilitySink]] — LITERALLY the batch op's view. */
-  def fertilityView(state: DataFrame): DataFrame =
-    graft.ops.Text.fertilityView(state)
-
-  /** Merge per-source (docs, tokens) partials (twin state of the batch
-    * sample_temperature op). */
-  def temperatureMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("source")
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"))
-
-  /** foreachBatch fold for the temperature-mixing table (twin of the
-    * batch sample_temperature op): the mixing weights a corpus-assembly
-    * job executes are recomputed continuously as the corpus grows —
-    * which is exactly how production re-balances a live crawl. */
-  def temperatureSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(temperatureMerge(readState(),
-        graft.ops.Pipeline.temperatureGrid(batch)))
-    }
-
-  /** Read side of [[temperatureSink]] — LITERALLY the batch op's view
-    * (sqrt-then-quantize runs in the view over the completed sums, so
-    * the fold state stays pure integers). */
-  def temperatureView(state: DataFrame): DataFrame =
-    graft.ops.Pipeline.temperatureView(state)
-
-  /** Merge per-(lang, half, dim) exact-decimal component-sum partials —
-    * twin state of the batch embed_drift op; union + re-aggregate keeps
-    * SUM's NULL algebra (see the grid-fold block comment above). */
-  def driftVecMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("lang", "half", "pos")
-      .agg(sum(col("sv"))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 7)).as("sv"))
-
-  /** Merge per-(lang, half) vector-count partials. */
-  def driftCountMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("lang", "half")
-      .agg(sum(col("n")).as("n"))
-
-  /** foreachBatch fold for the embedding-space drift monitor (twin of
-    * the batch embed_drift op): embeddings STREAM in (the live encoder
-    * output) and join the static documents dim for language — the
-    * stream-static enrichment shape — then fold into the bounded
-    * |langs|×2×64 decimal sum grid; the centroid cosine is recomputed
-    * from the completed fold at any cut. */
-  def driftVecSink(emb: DataFrame, docs: DataFrame)(
-      readSums: () => DataFrame, readCounts: () => DataFrame)(
-      writeSums: DataFrame => Unit, writeCounts: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    emb.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val hv = graft.ops.Llm.driftHalves(batch, docs)
-      writeSums(driftVecMerge(readSums(), graft.ops.Llm.driftSumGrid(hv)))
-      writeCounts(driftCountMerge(readCounts(), graft.ops.Llm.driftCountGrid(hv)))
-    }
-
-  /** Read side of [[driftVecSink]] — LITERALLY the batch op's view. */
-  def driftVecView(sums: DataFrame, counts: DataFrame): DataFrame =
-    graft.ops.Llm.driftView(sums, counts)
-
-  /** Merge (event_type, digit, digit2) observation-count partials (twin
-    * state of the batch benford_audit AND benford_second ops — one stored
-    * grid serves both screens) — keyed SUM merge. digit2 is NULL for
-    * one-digit amounts; NULL is a grouping value here (one cell), never a
-    * join key, so the fold stays exact. State bound: ≤90·|event types|
-    * rows regardless of stream length. */
-  def benfordMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("event_type", "digit", "digit2")
-      .agg(sum(col("n_obs")).as("n_obs"))
-
-  /** foreachBatch fold for the Benford screens (twin of the batch
-    * benford_audit / benford_second ops): the fabricated-data /
-    * unit-mix-up audits stay current as ledger events arrive. */
-  def benfordSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(benfordMerge(readState(),
-        graft.ops.Audit.benfordGrid(batch)))
-    }
-
-  /** Read side of [[benfordSink]] — LITERALLY the batch op's view. */
-  def benfordView(state: DataFrame): DataFrame =
-    graft.ops.Audit.benfordView(state)
-
-  /** Second read over the SAME [[benfordSink]] state — the batch
-    * benford_second op recomputed at any batch cut (the seqView pattern:
-    * a new monitor costs zero new state). */
-  def benfordSecondView(state: DataFrame): DataFrame =
-    graft.ops.Audit.benfordSecondView(state)
-
-  /** Third read over the SAME [[benfordSink]] state — the size-invariant
-    * MAD conformity bands (batch op benford_mad); the statistic forensic
-    * practice trusts at stream scale, where χ² rejects everything. */
-  def benfordMadView(state: DataFrame): DataFrame =
-    graft.ops.Audit.benfordMadView(state)
-
-  /** Merge distinct (source, shingle-hash) presence partials (twin state
-    * of the batch contamination_matrix op) — union + distinct, IDEMPOTENT:
-    * replays and redelivered batches are absorbed outright (a presence
-    * set, the rolling_active_users argument). */
-  def contaminationMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).distinct()
-
-  /** foreachBatch fold for the cross-source leakage matrix (twin of the
-    * batch contamination_matrix op): which sources leak into which,
-    * recomputed as the crawl streams in — the table a curator watches to
-    * catch a mirror site entering the corpus under a second source name. */
-  def contaminationSink(docs: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(contaminationMerge(readState(),
-        graft.ops.Audit.contaminationGrid(batch)))
-    }
-
-  /** Read side of [[contaminationSink]] — LITERALLY the batch op's view. */
-  def contaminationView(state: DataFrame): DataFrame =
-    graft.ops.Audit.contaminationView(state)
-
-  /** Merge per-user (last_day, count, cents-sum) partials (twin state of
-    * the batch event_rfm op) — keyed (max, sum, sum) merge: all three
-    * RFM cells are algebraic. */
-  def rfmMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("user_id")
-      .agg(max(col("last_day")).as("last_day"),
-        sum(col("f")).as("f"), sum(col("m_cents")).as("m_cents"))
-
-  /** foreachBatch fold for the RFM segmentation (twin of the batch
-    * event_rfm op): anchor, quintiles and scores recompute from the
-    * completed fold at any cut — live RFM, which is exactly how campaign
-    * audiences are refreshed. */
-  def rfmSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(rfmMerge(readState(), graft.ops.Events.rfmGrid(batch)))
-    }
-
-  /** Read side of [[rfmSink]] — LITERALLY the batch op's view. */
-  def rfmView(state: DataFrame): DataFrame =
-    graft.ops.Events.rfmView(state)
-
-  /** Merge distinct (user, type) basket presence partials (twin state of
-    * the batch assoc_rules op) — union + distinct, IDEMPOTENT: replays
-    * are absorbed outright (the rolling_active_users argument). */
-  def assocMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).distinct()
-
-  /** foreachBatch fold for the association-rule table (twin of the batch
-    * assoc_rules op): the "users who did A also did B" table recomputed
-    * as events arrive. */
-  def assocSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(assocMerge(readState(), graft.ops.Events.assocGrid(batch)))
-    }
-
-  /** Read side of [[assocSink]] — LITERALLY the batch op's view. */
-  def assocView(state: DataFrame): DataFrame =
-    graft.ops.Events.assocView(state)
-
-  /** Merge per-(day, cents) tie-group count partials (twin state of the
-    * rank family: eval_auc / ab_ranksum / ab_ks_test) — keyed SUM merge:
-    * the tie-group grid is algebraic, and ranks, U, the tie-corrected
-    * variance and the KS supremum are all functions of tie-group counts
-    * alone. */
-  def rankMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("day", "cents")
-      .agg(sum(col("c_a")).as("c_a"), sum(col("c_b")).as("c_b"))
-
-  /** foreachBatch fold for the rank-statistics family (twin of the batch
-    * eval_auc / ab_ranksum / ab_ks_test ops): ONE fold keeps all three
-    * nonparametric experiment monitors current as events arrive — live
-    * AUC / rank-sum / KS over the running cohorts, which is exactly how
-    * an experiment dashboard is refreshed. */
-  def rankSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(rankMerge(readState(), graft.ops.Stats.rankGrid(batch)))
-    }
-
-  /** Read sides of [[rankSink]] — LITERALLY the batch ops' views over
-    * the shared per-day rank sufficient statistics. */
-  def rankAucView(state: DataFrame): DataFrame =
-    graft.ops.Stats.aucView(graft.ops.Stats.rankStats(state))
-  def rankRanksumView(state: DataFrame): DataFrame =
-    graft.ops.Stats.ranksumView(graft.ops.Stats.rankStats(state))
-  def rankKsView(state: DataFrame): DataFrame =
-    graft.ops.Stats.ksView(graft.ops.Stats.rankStats(state))
-
-  /** Merge per-user (first_day, conv_day, last_day) partials (twin state
-    * of the batch survival_hazard op) — keyed (min, min, max) merge.
-    * min/max skip NULLs, so a batch in which the user never converts
-    * merges as the identity on conv_day — the right-censoring cell stays
-    * NULL until a qualifying conversion actually arrives. */
-  def survivalMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("user_id")
-      .agg(min(col("first_day")).as("first_day"),
-        min(col("conv_day")).as("conv_day"),
-        max(col("last_day")).as("last_day"))
-
-  /** foreachBatch fold for the Kaplan-Meier hazard table (twin of the
-    * batch survival_hazard op): the censoring anchor advances and every
-    * unconverted user is re-censored as events arrive — live
-    * time-to-conversion, recomputed from the completed fold at any cut. */
-  def survivalSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(survivalMerge(readState(),
-        graft.ops.Stats.survivalGrid(batch)))
-    }
-
-  /** Read side of [[survivalSink]] — LITERALLY the batch op's view. */
-  def survivalView(state: DataFrame): DataFrame =
-    graft.ops.Stats.survivalView(state)
-
-  /** foreachBatch fold for the inter-event gap distribution (twin of the
-    * batch event_interarrival op): an ORDERED fold (the win_ema class —
-    * exact under per-(user, type) event-time-ordered arrival) carrying
-    * one last event per key plus the (type, bucket) gap grid; the gap
-    * spanning a batch cut is produced by the batch op's own grid stage
-    * over the carried pseudo-rows ([[graft.ops.Events.interarrivalFold]]). */
-  def interarrivalSink(events: DataFrame)(readLast: () => DataFrame,
-      readGrid: () => DataFrame)(writeLast: DataFrame => Unit,
-      writeGrid: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (last, grid) = graft.ops.Events.interarrivalFold(
-        readLast(), readGrid(), instantTs(batch))
-      writeGrid(grid)
-      writeLast(last)
-    }
-
-  /** Read side of [[interarrivalSink]] — LITERALLY the batch op's view. */
-  def interarrivalView(grid: DataFrame): DataFrame =
-    graft.ops.Events.interarrivalView(grid)
-
-  /** Merge per-day arm-count partials (twin state of the batch ab_srm
-    * op) — keyed SUM merge. */
-  def srmMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("day")
-      .agg(sum(col("n_a")).as("n_a"), sum(col("n_b")).as("n_b"))
-
-  /** foreachBatch fold for the sample-ratio-mismatch screen (twin of the
-    * batch ab_srm op): the GLOBAL mix recomputes from the completed fold
-    * at every cut, so every day's χ² is re-judged as events arrive —
-    * exactly how an experimentation platform's SRM alarm behaves. */
-  def srmSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(srmMerge(readState(), graft.ops.Stats.srmGrid(batch)))
-    }
-
-  /** Read side of [[srmSink]] — LITERALLY the batch op's view. */
-  def srmView(state: DataFrame): DataFrame =
-    graft.ops.Stats.srmView(state)
-
-  /** Second read side of [[srmSink]] — the rolling correlation monitor
-    * reads the SAME day-count fold (one fold, two monitors: the
-    * rank-family pattern). */
-  def srmCorrView(state: DataFrame): DataFrame =
-    graft.ops.Stats.corrView(state)
-
-  /** foreachBatch fold for the Bollinger band (twin of the batch
-    * win_bollinger op): per-event output over the carried ≤7-row
-    * per-user ring — the emaFold class, band arithmetic. */
-  def bollSink(events: DataFrame)(readRing: () => DataFrame,
-      readOut: () => DataFrame)(writeRing: DataFrame => Unit,
-      writeOut: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (out, ring) = graft.ops.Events.bollFold(readRing(), instantTs(batch))
-      writeOut(readOut().unionByName(out))
-      writeRing(ring)
-    }
-
-  /** Merge per-user pre/post cents partials (twin state of the batch
-    * ab_cuped op) — keyed SUM merge (the conditional sums are algebraic;
-    * the 0-for-missing contract holds at any cut because 0 is SUM's
-    * identity). */
-  def cupedMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("user_id")
-      .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
-
-  /** foreachBatch fold for the CUPED-adjusted comparison (twin of the
-    * batch ab_cuped op): θ and the adjusted means recompute from the
-    * completed user grid at every cut — live variance reduction over the
-    * running experiment. */
-  def cupedSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(cupedMerge(readState(), graft.ops.Stats.cupedUserGrid(batch)))
-    }
-
-  /** Read side of [[cupedSink]] — LITERALLY the batch op's view. */
-  def cupedView(state: DataFrame): DataFrame =
-    graft.ops.Stats.cupedView(state)
-
-  /** Merge (cents, c_neg, c_pos) tie-group partials (twin state of
-    * calibration_table AND gains_table) — keyed SUM merge: decile
-    * edges, rates, gains and lifts are all functions of tie-group
-    * counts alone (the rank-family argument). */
-  def scoreMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("cents")
-      .agg(sum(col("c_neg")).as("c_neg"), sum(col("c_pos")).as("c_pos"))
-
-  /** foreachBatch fold for the score-quality tables (twin of the batch
-    * calibration_table / gains_table ops): ONE fold keeps both decile
-    * tables current — the global decile EDGES move with every batch, so
-    * only the view-over-completed-fold shape can track them. */
-  def scoreSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(scoreMerge(readState(), graft.ops.Stats.scoreGrid(batch)))
-    }
-
-  /** Read sides of [[scoreSink]] — LITERALLY the batch ops' views. */
-  def scoreCalibView(state: DataFrame): DataFrame =
-    graft.ops.Stats.calibView(state)
-  def scoreGainsView(state: DataFrame): DataFrame =
-    graft.ops.Stats.gainsView(state)
-
-  /** Merge (type, replicate) weighted-sum partials (twin state of the
-    * batch bootstrap_ci op) — keyed SUM merge: each event's replicate
-    * weights are a pure function of its id, so partials from any batch
-    * split fold to the identical grid. */
-  def bootMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("event_type", "b")
-      .agg(sum(col("sw")).as("sw"), sum(col("swx")).as("swx"))
-
-  /** foreachBatch fold for the bootstrap confidence band (twin of the
-    * batch bootstrap_ci op): all 32 resample means tighten together as
-    * events arrive — a live uncertainty band over the running metric. */
-  def bootSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(bootMerge(readState(), graft.ops.Stats.bootGrid(batch)))
-    }
-
-  /** Read side of [[bootSink]] — LITERALLY the batch op's view. */
-  def bootView(state: DataFrame): DataFrame =
-    graft.ops.Stats.bootView(state)
-
-  /** Merge per-type sufficient-moment partials (twin state of the batch
-    * ab_power op) — keyed SUM merge over exact decimal moments. */
-  def powerMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("event_type")
-      .agg(sum(col("n")).as("n"), sum(col("sx")).as("sx"),
-        sum(col("sxx")).cast(org.apache.spark.sql.types.DecimalType(38, 0))
-          .as("sxx"))
-
-  /** foreachBatch fold for the experiment-sizing table (twin of the
-    * batch ab_power op): required sample sizes tighten as the variance
-    * estimate converges — the live read a platform shows while an
-    * experiment is being designed against current traffic. */
-  def powerSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(powerMerge(readState(), graft.ops.Stats.powerGrid(batch)))
-    }
-
-  /** Read side of [[powerSink]] — LITERALLY the batch op's view. */
-  def powerView(state: DataFrame): DataFrame =
-    graft.ops.Stats.powerView(state)
-
-  /** Merge (user, week) presence partials (twin state of the batch
-    * churn_rate op) — union + distinct, IDEMPOTENT: replays absorb
-    * outright (the rolling_active_users argument). */
-  def churnMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).distinct()
-
-  /** foreachBatch fold for the weekly churn KPI (twin of the batch
-    * churn_rate op): the right-censoring anchor (last in-data week)
-    * advances with every batch, re-admitting the week before it — only
-    * the view-over-completed-fold shape tracks that. */
-  def churnSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(churnMerge(readState(), graft.ops.Events.churnGrid(batch)))
-    }
-
-  /** Read side of [[churnSink]] — LITERALLY the batch op's view. */
-  def churnView(state: DataFrame): DataFrame =
-    graft.ops.Events.churnView(state)
-
-  /** Merge (h, first_doc) vocabulary-entry partials (twin state of the
-    * batch vocab_growth op) — keyed MIN merge. */
-  def vocabEntryMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("h")
-      .agg(min(col("first_doc")).as("first_doc"))
-
-  /** Merge per-doc shingle-count partials — keyed MAX merge: a doc's
-    * count is deterministic, so redelivery is absorbed outright. */
-  def vocabDocMerge(state: DataFrame, delta: DataFrame): DataFrame =
-    state.unionByName(delta).groupBy("doc_id")
-      .agg(max(col("n_tri")).as("n_tri"))
-
-  /** foreachBatch fold for the Heaps-law saturation curve (twin of the
-    * batch vocab_growth op): the doc-id anchors (hence every decile
-    * band) move as the crawl streams in, so only the
-    * view-over-completed-fold shape tracks the live curve — the
-    * "is the crawl saturating" monitor, recomputed at any cut. */
-  def vocabSink(docs: DataFrame)(readEntry: () => DataFrame,
-      readDocs: () => DataFrame)(writeEntry: DataFrame => Unit,
-      writeDocs: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeEntry(vocabEntryMerge(readEntry(),
-        graft.ops.Audit.vocabEntryGrid(batch)))
-      writeDocs(vocabDocMerge(readDocs(),
-        graft.ops.Audit.vocabDocGrid(batch)))
-    }
-
-  /** Read side of [[vocabSink]] — the batch op's re-banding view. */
-  def vocabView(entry: DataFrame, docGrid: DataFrame): DataFrame =
-    graft.ops.Audit.vocabView(entry, docGrid)
-
-  /** foreachBatch fold for time-decay attribution (twin of the batch
-    * attribution_time_decay op): an ordered fold (the win_ema ring
-    * class) carrying the ≤64-click recency ring per user; the batch's
-    * purchases are credited through the batch op's own pair stage over
-    * ring + batch clicks, so the emitted pair log equals the one-shot
-    * join bit-for-bit — with BOUNDED state and per-batch cost, which is
-    * the production path at extreme per-user density. */
-  def attrSink(events: DataFrame)(readRing: () => DataFrame,
-      readOut: () => DataFrame)(writeRing: DataFrame => Unit,
-      writeOut: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (out, ring) = graft.ops.Events.attrFold(readRing(), instantTs(batch))
-      writeOut(readOut().unionByName(out))
-      writeRing(ring)
-    }
+  // The benchmark's three folds keep their sink and view entry points.
+  def topkSink(events: DataFrame)(readState: () => DataFrame)(
+      writeState: DataFrame => Unit): DataStreamWriter[Row] =
+    foldSink(events, topk)(readState)(writeState)
+  def topkView(state: DataFrame): DataFrame = Events.topkView(state)
+  def driftSink(events: DataFrame)(readState: () => DataFrame)(
+      writeState: DataFrame => Unit): DataStreamWriter[Row] =
+    foldSink(events, drift)(readState)(writeState)
+  def driftView(state: DataFrame): DataFrame = Stats.driftView(state)
+  def ttestSink(events: DataFrame)(readState: () => DataFrame)(
+      writeState: DataFrame => Unit): DataStreamWriter[Row] =
+    foldSink(events, ttest)(readState)(writeState)
+  def ttestView(state: DataFrame): DataFrame = Stats.ttestView(state)
 }

@@ -1,209 +1,90 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.types.StructType
+import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.ops.{Audit, Dedup, Events, Llm, Pipeline, Stats, Text}
 
 /** Structured Streaming over the REAL parquet fixtures (file source, not
-  * MemoryStream): the streaming tumbling aggregate over `events` must equal
-  * the identical batch computation — stream/batch parity is the property
-  * that lets the same op definitions serve both modes.
+  * MemoryStream): every streaming twin must equal its oracle-checked batch
+  * op — stream/batch parity is the property that lets the same op
+  * definitions serve both modes. The fold twins are one table
+  * ([[FileStreamParitySpec.folds]]), one named test per row.
   */
 class FileStreamParitySpec extends SparkSpec {
+  import FileStreamParitySpec._
 
-  private val dir = "/root/testdata/sf0.001"
+  private def batchOp(op: String): DataFrame = graft.SparkEntry.queries(op)(spark, Dir01)
 
-  /** Row set with timestamps canonicalized to epoch-µs: the streaming twins
-    * watermark on an instant column (so their window bounds collect as
-    * java.sql.Timestamp), while the batch twins are type-preserving over the
-    * fixture's TIMESTAMP_NTZ (java.time.LocalDateTime). Session tz is pinned
-    * UTC, so both readings denote the same instant — parity is about VALUES.
-    */
-  private def canon(rows: Array[org.apache.spark.sql.Row]): Set[Seq[Any]] =
-    rows.map(_.toSeq.map {
-      case t @ (_: java.sql.Timestamp | _: java.time.LocalDateTime) => epochUs(t)
-      case x => x
-    }).toSet
-
-  /** Stage time-ordered chunk files for a maxFilesPerTrigger=1 file
-    * source: one parquet part per chunk, mtimes spaced a minute apart so
-    * the source's modification-time ordering matches chunk order — the
-    * discipline every drive below relies on, pinned in ONE place. */
-  private def stageChunks(prefix: String, chunks: Seq[DataFrame]): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val staged = Files.createTempDirectory(prefix)
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = Files.createTempDirectory(s"${prefix}_chunk$i")
-      chunk.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val dest = staged.resolve(s"chunk$i.parquet")
-      Files.copy(Paths.get(part), dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1755000000000L + i * 60000))
-    }
-    staged
+  /** Three time-ordered thirds of `ev` (cut at the ts percentiles): with
+    * maxFilesPerTrigger=1 each is its own micro-batch, so the watermark
+    * genuinely advances mid-stream and no event arrives behind it. */
+  private def thirds(ev: DataFrame): Seq[DataFrame] = {
+    val us = unix_micros(col("ts").cast("timestamp"))
+    val cuts = ev.agg(percentile(us, array(lit(1.0 / 3), lit(2.0 / 3))))
+      .collect()(0).getSeq[Double](0).map(_.toLong)
+    Seq(ev.filter(us < cuts(0)), ev.filter(us >= cuts(0) && us < cuts(1)),
+      ev.filter(us >= cuts(1)))
   }
 
-  /** Drive a versioned-state foreachBatch grid fold over staged chunks
-    * (the leak/cusum/lang drive pattern, factored): stages the chunks,
-    * seeds an empty v0 state, folds one micro-batch per file, asserts
-    * every chunk produced a batch and a state version, and returns the
-    * FINAL state read back through the declared schema. */
-  private def runGridFold(prefix: String, schemaSrc: DataFrame,
-      chunks: Seq[DataFrame], stateDdl: String,
-      mkSink: (DataFrame, () => DataFrame, DataFrame => Unit) =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
-      : DataFrame = {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val staged = stageChunks(prefix, chunks)
-    val stateRoot = Files.createTempDirectory(s"${prefix}_state").toString
-    val stateSchema = StructType.fromDDL(stateDdl)
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      stateSchema).write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame =
-      spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(schemaSrc.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = mkSink(stream, readState _, writeState).start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= chunks.length
-    } finally q.stop()
-    v should be >= chunks.length
-    readState()
-  }
+  /** The latest event moved `days` into the future: its arrival pushes the
+    * watermark past every real window, and append mode only emits a
+    * window once the watermark PROVES it is complete. */
+  private def sentinel(ev: DataFrame, days: Int): DataFrame =
+    ev.orderBy(col("ts").desc).limit(1)
+      .withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
 
-  /** [[runGridFold]] for the dual-state sinks (hhSink-style signatures):
-    * two independently versioned state roots, final (A, B) returned. */
-  private def runDualFold(prefix: String, schemaSrc: DataFrame,
-      chunks: Seq[DataFrame], ddlA: String, ddlB: String,
-      mkSink: (DataFrame, () => DataFrame, () => DataFrame,
-        DataFrame => Unit, DataFrame => Unit) =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
-      : (DataFrame, DataFrame) = {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val staged = stageChunks(prefix, chunks)
-    def mkState(tag: String, ddl: String) = {
-      val root = Files.createTempDirectory(s"${prefix}_$tag").toString
-      val schema = StructType.fromDDL(ddl)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema).write.parquet(s"$root/v0")
-      (root, schema)
-    }
-    val (rootA, schemaA) = mkState("stateA", ddlA)
-    val (rootB, schemaB) = mkState("stateB", ddlB)
-    var vA = 0; var vB = 0
-    def readA(): DataFrame = spark.read.schema(schemaA).parquet(s"$rootA/v$vA")
-    def readB(): DataFrame = spark.read.schema(schemaB).parquet(s"$rootB/v$vB")
-    def writeA(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$rootA/v${vA + 1}"); vA += 1
-    }
-    def writeB(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$rootB/v${vB + 1}"); vB += 1
-    }
-    val stream = spark.readStream.schema(schemaSrc.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = mkSink(stream, readA _, readB _, writeA, writeB).start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= chunks.length
-    } finally q.stop()
-    vA should be >= chunks.length
-    vB should be >= chunks.length
-    (readA(), readB())
-  }
+  private def memorySink(out: org.apache.spark.sql.Dataset[_], name: String, mode: String): StreamingQuery =
+    out.writeStream.format("memory").queryName(name).outputMode(mode).start()
 
-  /** TIME-split event chunks (NULL-ts rows ride the first batch — they
-    * sort first in every asc-nulls-first batch window, so arrival order
-    * matches the batch ops' global order). */
-  private def timeSplitChunks(ev: DataFrame): Seq[DataFrame] = {
-    val cutA = lit("2024-01-12").cast("timestamp")
-    val cutB = lit("2024-01-24").cast("timestamp")
-    Seq(ev.filter(col("ts") < cutA || col("ts").isNull),
-      ev.filter(col("ts") >= cutA && col("ts") < cutB),
-      ev.filter(col("ts") >= cutB))
+  /** Drain `q`: at least `batches` data micro-batches, and (when
+    * `watermark`) a watermark that moved at least once between them. */
+  private def drain(q: StreamingQuery, batches: Int, watermark: Boolean): Unit = {
+    q.processAllAvailable()
+    q.recentProgress.count(_.numInputRows > 0) should be >= batches
+    if (watermark) q.recentProgress.toSeq
+      .flatMap(p => Option(p.eventTime.get("watermark"))).distinct.size should be >= 2
   }
 
   test("file-source interval join: micro-batch watermark advance, equals the batch join") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events")
-      .filter(col("event_type").isin("click", "purchase"))
-      .cache()
-    // three TIME-ORDERED chunk files: with maxFilesPerTrigger=1 each is its
-    // own micro-batch, so the watermark genuinely advances mid-stream (and
-    // time-ordering means no event arrives behind it — parity stays exact)
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
-    val staged = Files.createTempDirectory("events_ij_stream")
-    Seq(
-      unix_micros(col("ts").cast("timestamp")) < cuts(0),
-      unix_micros(col("ts").cast("timestamp")) >= cuts(0) && unix_micros(col("ts").cast("timestamp")) < cuts(1),
-      unix_micros(col("ts").cast("timestamp")) >= cuts(1),
-    ).zipWithIndex.foreach { case (pred, i) =>
-      val tmp = Files.createTempDirectory(s"ij_chunk$i")
-      ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val dest = staged.resolve(s"chunk$i.parquet")
-      Files.copy(Paths.get(part), dest)
-      // the file source processes in (modTime, path) order — pin it
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1755000000000L + i * 60000))
-    }
+    val ev = graft.Tables(spark, Dir01, "events")
+      .filter(col("event_type").isin("click", "purchase")).cache()
+    val staged = stageChunks("events_ij_stream", thirds(ev))
     def branch(stream: DataFrame, tpe: String): DataFrame =
       stream.filter(col("event_type") === tpe)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams
-      .intervalJoin(branch(stream, "click"), branch(stream, "purchase"))
-      .writeStream.format("memory").queryName("t_file_ij")
-      .outputMode("append").start()
+    val stream = fileStream(ev, staged)
+    val q = memorySink(Streams.intervalJoin(branch(stream, "click"), branch(stream, "purchase")),
+      "t_file_ij", "append")
     try {
-      q.processAllAvailable()
-      // real watermark advance: one data batch per staged file, and the
-      // watermark moved at least once between batches
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 3, watermark = true)
       val streamed = spark.table("t_file_ij").collect().map(_.toSeq).toSet
-      val batch = graft.SparkEntry.queries("stream_interval_join")(spark, dir01)
-        .collect().map(_.toSeq).toSet
-      streamed shouldBe batch // the oracle-checked batch twin
+      streamed shouldBe batchOp("stream_interval_join").collect().map(_.toSeq).toSet
       streamed should not be empty
     } finally q.stop()
 
     // left-outer flavor: NULL-click purchases may only emit once the
     // watermark PROVES no qualifying click can still arrive — their
     // appearance is itself evidence of mid-stream watermark finalization
-    val stream2 = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q2 = graft.streaming.Streams
-      .intervalJoin(branch(stream2, "click"), branch(stream2, "purchase"),
-        joinType = "left_outer")
-      .writeStream.format("memory").queryName("t_file_ij_left")
-      .outputMode("append").start()
+    val stream2 = fileStream(ev, staged)
+    val q2 = memorySink(Streams.intervalJoin(branch(stream2, "click"),
+      branch(stream2, "purchase"), joinType = "left_outer"), "t_file_ij_left", "append")
     try {
       q2.processAllAvailable()
-      val rows = spark.table("t_file_ij_left").collect()
-      val (unmatched, matched) = rows.partition(_.isNullAt(1))
+      val (unmatched, matched) = spark.table("t_file_ij_left").collect().partition(_.isNullAt(1))
       matched.map(_.toSeq).toSet shouldBe
         spark.table("t_file_ij").collect().map(_.toSeq).toSet
       unmatched should not be empty // finalized by watermark advance
       // every emitted NULL row is a genuine batch-side unmatched purchase
-      val batchNull = graft.SparkEntry.queries("stream_interval_join_left")(spark, dir01)
-        .filter(col("click_id").isNull).collect()
-        .map(_.getLong(0)).toSet
+      val batchNull = batchOp("stream_interval_join_left")
+        .filter(col("click_id").isNull).collect().map(_.getLong(0)).toSet
       unmatched.map(_.getLong(0)).foreach(pid => batchNull should contain(pid))
     } finally q2.stop()
   }
@@ -213,189 +94,87 @@ class FileStreamParitySpec extends SparkSpec {
     // raw on-disk schema; mirror Tables' conversion, which is conditional —
     // older fixture generations stored ts as nanos-as-long, current ones as
     // a real µs timestamp (read back TIMESTAMP_NTZ, no conversion needed)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val rawSchema = spark.read.parquet(s"$Dir001/events.parquet").schema
     def convert(df: DataFrame): DataFrame =
       if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       else df
-
     // the file source wants a directory: stage the fixture file into one
-    val staged = java.nio.file.Files.createTempDirectory("events_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
-    val stream = convert(
-      spark.readStream.schema(rawSchema).parquet(staged.toString))
+    val staged = Files.createTempDirectory("events_stream")
+    Files.copy(Paths.get(s"$Dir001/events.parquet"), staged.resolve("events.parquet"))
+    val stream = convert(spark.readStream.schema(rawSchema).parquet(staged.toString))
     // drive the REAL streaming op (decimal-exact sums in-op, so parity is
     // exact, not float-combine-order dependent)
-    val q = graft.streaming.Streams.tumbling(stream)
-      .writeStream.format("memory").queryName("t_file_parity")
-      .outputMode("complete").start()
+    val q = memorySink(Streams.tumbling(stream), "t_file_parity", "complete")
     try {
       q.processAllAvailable()
       val streamed = canon(spark.table("t_file_parity").collect())
-      val batch = canon(
-        graft.SparkEntry.queries("stream_tumbling")(spark, dir).collect())
-      streamed shouldBe batch // the oracle-checked batch twin
+      streamed shouldBe canon(
+        graft.SparkEntry.queries("stream_tumbling")(spark, Dir001).collect())
       streamed should not be empty
     } finally q.stop()
   }
 
   test("file-source CDC apply: out-of-order micro-batches converge to the batch twin; redelivery is a no-op") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
     // chunks split by event_id HASH, not time: every chunk spans the full
     // time range, so later micro-batches genuinely deliver OLDER events
     // for keys already in state — the version comparison, not arrival
     // order, must decide every merge
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_cdc_stream", chunks)
-    // the state table round-trips through parquet like a real materialized
-    // view; versioned dirs because a lazy read from the dir being
-    // overwritten would corrupt itself
-    val stateRoot = Files.createTempDirectory("cdc_state").toString
-    val stateSchema = StructType.fromDDL(
-      "k BIGINT, deleted BOOLEAN, v DECIMAL(18,2), wts TIMESTAMP, wid BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.cdcApplySink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3 // one state version per micro-batch
+    val cdc = fold("cdc", EventLog, Hash, "k BIGINT, deleted BOOLEAN, v DECIMAL(18,2), wts TIMESTAMP, wid BIGINT")(
+      { case (Seq(s), b) => Seq(Streams.cdcMerge(s, Streams.cdcWinners(b))) })
+    val r = drive(cdc)((s, r, w) => Streams.cdcApplySink(s)(r.head)(w.head))
     // the maintained view equals the oracle-checked batch twin over the
     // SAME full log — order of delivery washed out entirely
-    val streamed = graft.streaming.Streams
-      .cdcView(graft.Tables(spark, dir01, "customer"), readState())
+    val streamed = Streams.cdcView(graft.Tables(spark, Dir01, "customer"), r.states.head)
       .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("cdc_apply")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
+    streamed shouldBe batchOp("cdc_apply").collect().map(_.toSeq).toSet
     streamed should not be empty
     // at-least-once redelivery: re-merging an already-applied chunk must
     // not move the state (every winner loses the version comparison)
-    val before = readState().collect().map(_.toSeq).toSet
-    val remerged = graft.streaming.Streams
-      .cdcMerge(readState(), graft.streaming.Streams.cdcWinners(chunks(0)))
-      .collect().map(_.toSeq).toSet
-    remerged shouldBe before
+    Streams.cdcMerge(r.states.head, Streams.cdcWinners(r.chunks.head))
+      .collect().map(_.toSeq).toSet shouldBe r.states.head.collect().map(_.toSeq).toSet
   }
 
   test("file-source Streams.session: append-mode watermark finalization equals the batch twin") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // three TIME-ORDERED chunks (same staging discipline as the interval
-    // join above: maxFilesPerTrigger=1 makes each its own micro-batch, so
-    // the watermark advances mid-stream) plus a far-future SENTINEL event
-    // (user_id = -1, +2 days) whose arrival pushes the watermark past every
-    // real session's end — append mode only emits a session once the
-    // watermark PROVES it can no longer grow, so without the sentinel the
-    // tail sessions would stay buffered forever
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
-    val sentinel = ev.orderBy(col("ts").desc).limit(1)
-      .withColumn("user_id", lit(-1L))
-      .withColumn("ts", col("ts") + expr("INTERVAL 2 DAYS"))
-    val chunks: Seq[DataFrame] = Seq(
-      ev.filter(unix_micros(col("ts").cast("timestamp")) < cuts(0)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(0)
-        && unix_micros(col("ts").cast("timestamp")) < cuts(1)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(1)),
-      sentinel)
-    val staged = stageChunks("events_sess_stream", chunks)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.session(stream)
-      .writeStream.format("memory").queryName("t_file_sess")
-      .outputMode("append").start()
+    val ev = graft.Tables(spark, Dir01, "events").cache()
+    // the sentinel (user_id = -1) closes every real session
+    val staged = stageChunks("events_sess_stream",
+      thirds(ev) :+ sentinel(ev, 2).withColumn("user_id", lit(-1L)))
+    val q = memorySink(Streams.session(fileStream(ev, staged)), "t_file_sess", "append")
     try {
-      q.processAllAvailable()
-      // real watermark advance: one data batch per staged file, and the
-      // watermark moved at least once between batches
-      q.recentProgress.count(_.numInputRows > 0) should be >= 4
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 4, watermark = true)
       val streamed = canon(spark.table("t_file_sess")
-        .filter(col("user_id") =!= -1L) // drop the sentinel's own session
-        .collect())
-      val batch = canon(
-        graft.SparkEntry.queries("stream_session")(spark, dir01).collect())
-      streamed shouldBe batch // the oracle-checked batch twin, ALL sessions
+        .filter(col("user_id") =!= -1L).collect()) // drop the sentinel's own session
+      streamed shouldBe canon(batchOp("stream_session").collect()) // ALL sessions
       streamed should not be empty
     } finally q.stop()
   }
 
   test("file-source Streams.sliding: append-mode watermark finalization equals the batch twin") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // same staging discipline as the session test: three time-ordered
-    // chunks (one micro-batch each) plus a far-future sentinel (+2 days)
-    // that pushes the watermark past every real window's end — append mode
-    // only emits a window once the watermark PROVES it is complete
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
-    val maxTs = ev.agg(max(unix_micros(col("ts").cast("timestamp"))))
-      .collect()(0).getLong(0)
-    val sentinel = ev.orderBy(col("ts").desc).limit(1)
-      .withColumn("ts", col("ts") + expr("INTERVAL 2 DAYS"))
-    val chunks: Seq[DataFrame] = Seq(
-      ev.filter(unix_micros(col("ts").cast("timestamp")) < cuts(0)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(0)
-        && unix_micros(col("ts").cast("timestamp")) < cuts(1)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(1)),
-      sentinel)
-    val staged = stageChunks("events_slide_stream", chunks)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.sliding(stream)
-      .writeStream.format("memory").queryName("t_file_slide")
-      .outputMode("append").start()
+    val ev = graft.Tables(spark, Dir01, "events").cache()
+    val maxTs = ev.agg(max(unix_micros(col("ts").cast("timestamp")))).collect()(0).getLong(0)
+    val staged = stageChunks("events_slide_stream", thirds(ev) :+ sentinel(ev, 2))
+    val q = memorySink(Streams.sliding(fileStream(ev, staged)), "t_file_slide", "append")
     try {
-      q.processAllAvailable()
-      // real watermark advance: one data batch per staged file, and the
-      // watermark moved at least once between batches
-      q.recentProgress.count(_.numInputRows > 0) should be >= 4
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 4, watermark = true)
       // sentinel-only windows start after every real event (sentinel ts is
       // maxTs + 2 days; a 1h window containing a real event starts ≤ its ts)
       val streamed = canon(spark.table("t_file_slide")
         .filter(unix_micros(col("ws")) <= maxTs).collect())
-      val batch = canon(
-        graft.SparkEntry.queries("stream_sliding")(spark, dir01).collect())
-      streamed shouldBe batch // the oracle-checked batch twin, ALL windows
+      streamed shouldBe canon(batchOp("stream_sliding").collect()) // ALL windows
       streamed should not be empty
     } finally q.stop()
   }
 
   test("file-source CustomState.patternConverted: CEP state fold equals the batch event_pattern") {
     import spark.implicits._
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events")
+    val ev = graft.Tables(spark, Dir01, "events")
       .withColumn("ts", col("ts").cast("timestamp")) // Event encoder wants an instant
       .cache()
-    // same staging discipline as the session drive: three time-ordered
-    // chunks, one micro-batch each, so per-user CEP state genuinely
-    // carries ACROSS micro-batches and the watermark advances mid-stream.
-    // No sentinel needed: flatMapGroupsWithState emits matches the moment
-    // the purchase is processed, not on watermark finalization.
+    // three time-ordered chunks, one micro-batch each, so per-user CEP
+    // state genuinely carries ACROSS micro-batches and the watermark
+    // advances mid-stream. No sentinel needed: flatMapGroupsWithState
+    // emits matches the moment the purchase is processed.
     //
     // The first cut is chosen ON PURPOSE between a converting pair's click
     // and its purchase (a percentile cut almost never straddles a 10 min
@@ -408,7 +187,7 @@ class FileStreamParitySpec extends SparkSpec {
     val maxTus = log.map(_._3).max
     // local replay of the op's rule: converting purchases with a STRICTLY
     // earlier click (a cut can only separate distinct timestamps)
-    val lc = scala.collection.mutable.Map.empty[Long, (Long, Boolean)] // user -> (clickTus, blocked)
+    val lc = mutable.Map.empty[Long, (Long, Boolean)] // user -> (clickTus, blocked)
     val pairs = Seq.newBuilder[(Long, Long)] // (clickTus, purchaseTus)
     log.foreach {
       case (_, u, tus, "click") => lc(u) = (tus, false)
@@ -423,37 +202,23 @@ class FileStreamParitySpec extends SparkSpec {
     val cutB = (mid._2 + (maxTus - mid._2) / 2) max (mid._2 + 1)
     val cuts = Seq(mid._2, cutB) // click < cut(0) <= purchase; third chunk non-empty
     cutB should be < maxTus
-    val chunks: Seq[DataFrame] = Seq(
-      ev.filter(unix_micros(col("ts")) < cuts(0)),
-      ev.filter(unix_micros(col("ts")) >= cuts(0) && unix_micros(col("ts")) < cuts(1)),
-      ev.filter(unix_micros(col("ts")) >= cuts(1)))
-    val staged = stageChunks("events_cep_stream", chunks)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-      .as[graft.streaming.CustomState.Event]
-    val q = graft.streaming.CustomState.patternConverted(stream)(spark)
-      .writeStream.format("memory").queryName("t_file_cep")
-      .outputMode("append").start()
+    val us = unix_micros(col("ts"))
+    val staged = stageChunks("events_cep_stream", Seq(ev.filter(us < cuts(0)),
+      ev.filter(us >= cuts(0) && us < cuts(1)), ev.filter(us >= cuts(1))))
+    val stream = fileStream(ev, staged).as[CustomState.Event]
+    val q = memorySink(CustomState.patternConverted(stream)(spark), "t_file_cep", "append")
     try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 3, watermark = true)
       val streamed = spark.table("t_file_cep").collect().map(_.toSeq).toSet
-      val batch = graft.SparkEntry.queries("event_pattern")(spark, dir01)
-        .collect().map(_.toSeq).toSet
-      streamed shouldBe batch // the oracle-checked batch twin
-      // non-vacuity: the fixture must exercise BOTH branches, and the
-      // cross-batch carry (a converting purchase in a LATER chunk than
-      // its click's) must actually occur
+      streamed shouldBe batchOp("event_pattern").collect().map(_.toSeq).toSet
+      // non-vacuity: the fixture must exercise BOTH branches...
       streamed.map(_(2)) shouldBe Set(true, false)
       // ...and the cross-batch state carry must actually occur: at least
       // one converted purchase whose LATEST preceding click sits in an
       // EARLIER chunk (guaranteed by the cut construction above)
       def chunkOf(tus: Long) = if (tus < cuts(0)) 0 else if (tus < cuts(1)) 1 else 2
       val converted = streamed.collect { case s if s(2) == true => s(0).asInstanceOf[Long] }
-      val lastClick = scala.collection.mutable.Map.empty[Long, (Long, Long)] // user -> (tus, id)
+      val lastClick = mutable.Map.empty[Long, (Long, Long)] // user -> (tus, id)
       var carried = 0
       log.foreach {
         case (id, u, tus, "click") => lastClick(u) = (tus, id)
@@ -467,327 +232,71 @@ class FileStreamParitySpec extends SparkSpec {
   }
 
   test("file-source Streams.dedup: duplicates collapse across micro-batches; output equals the distinct log") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
-    val thirds = Seq(
-      ev.filter(unix_micros(col("ts").cast("timestamp")) < cuts(0)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(0)
-        && unix_micros(col("ts").cast("timestamp")) < cuts(1)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(1)))
+    val ev = graft.Tables(spark, Dir01, "events").cache()
+    val third = thirds(ev)
     // duplicate discipline: every chunk redelivers a deterministic sample
     // of ITSELF (intra-batch duplicates — always collapsed), and chunk1
     // redelivers chunk0's LATEST row — a cross-micro-batch duplicate whose
     // dedup state is provably still live when it arrives (its ts equals the
     // previous batch's max, which is AHEAD of the 10-min-lagged watermark)
-    val lastOf0 = thirds(0).orderBy(col("ts").desc, col("event_id").desc).limit(1)
-    val chunks: Seq[DataFrame] = Seq(
-      thirds(0).union(thirds(0).filter(col("event_id") % 7 === 0)),
-      thirds(1).union(thirds(1).filter(col("event_id") % 7 === 0)).union(lastOf0),
-      thirds(2).union(thirds(2).filter(col("event_id") % 7 === 0)))
-    val staged = stageChunks("events_dedup_stream", chunks)
+    val lastOf0 = third(0).orderBy(col("ts").desc, col("event_id").desc).limit(1)
+    def withDups(c: DataFrame) = c.union(c.filter(col("event_id") % 7 === 0))
+    val staged = stageChunks("events_dedup_stream",
+      Seq(withDups(third(0)), withDups(third(1)).union(lastOf0), withDups(third(2))))
     // the staged log genuinely carries duplicates
-    val stagedN = spark.read.parquet(staged.toString).count()
-    stagedN should be > ev.count()
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.dedup(stream)
-      .writeStream.format("memory").queryName("t_file_dedup")
-      .outputMode("append").start()
+    spark.read.parquet(staged.toString).count() should be > ev.count()
+    val q = memorySink(Streams.dedup(fileStream(ev, staged)), "t_file_dedup", "append")
     try {
-      q.processAllAvailable()
-      // real watermark advance across the three data batches
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 3, watermark = true)
       val streamed = canon(spark.table("t_file_dedup").collect())
       // event_id is unique in the fixture, so exactly-once delivery of the
       // staged log's distinct set IS the original event set
-      val batch = canon(ev.withColumn("ts", col("ts").cast("timestamp")).collect())
-      streamed shouldBe batch
+      streamed shouldBe canon(ev.withColumn("ts", col("ts").cast("timestamp")).collect())
       streamed should not be empty
     } finally q.stop()
   }
 
   test("file-source Streams.throttle: one survivor per (user, bucket) across micro-batches") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
+    val ev = graft.Tables(spark, Dir01, "events").cache()
     // time-ordered thirds: a 5-min bucket spans at most one chunk boundary
     // and its state is always younger than the 10-min watermark lag when
     // its tail arrives — so the at-most-one guarantee is exact here
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
-    val chunks: Seq[DataFrame] = Seq(
-      ev.filter(unix_micros(col("ts").cast("timestamp")) < cuts(0)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(0)
-        && unix_micros(col("ts").cast("timestamp")) < cuts(1)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(1)))
-    val staged = stageChunks("events_throttle_stream", chunks)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.throttle(stream)
-      .writeStream.format("memory").queryName("t_file_throttle")
-      .outputMode("append").start()
+    val staged = stageChunks("events_throttle_stream", thirds(ev))
+    val q = memorySink(Streams.throttle(fileStream(ev, staged)), "t_file_throttle", "append")
     try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 3, watermark = true)
       val out = spark.table("t_file_throttle").cache()
       // WHICH event survives is arrival-order-dependent in streaming (the
       // batch twin pins the (ts, event_id) minimum) — the shared invariant
       // is the throttled KEY SET: exactly one survivor per active bucket
       val streamedKeys = canon(out.select("user_id", "ws").collect())
-      val batchKeys = canon(graft.SparkEntry.queries("stream_throttle")(spark, dir01)
-        .select("user_id", "ws").collect())
-      streamedKeys shouldBe batchKeys
+      streamedKeys shouldBe canon(batchOp("stream_throttle").select("user_id", "ws").collect())
       out.count() shouldBe streamedKeys.size.toLong // one row per key
       out.count() should be < ev.count() // the throttle actually dropped rows
     } finally q.stop()
   }
 
-  test("file-source top-k sink: count-state fold over hash-split micro-batches equals the batch twin") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split chunks (every micro-batch spans the full time range):
-    // count partials are algebraic, so delivery order must wash out
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_topk_stream", chunks)
-    val stateRoot = Files.createTempDirectory("topk_state").toString
-    val stateSchema = StructType.fromDDL("ws TIMESTAMP, event_type STRING, n BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.topkSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3 // one state version per micro-batch
-    // the ranked view over the folded state equals the oracle-checked
-    // batch op over the same full log
-    val streamed = canon(graft.streaming.Streams.topkView(readState())
-      .select("ws", "event_type", "n", "rn").collect())
-    val batch = canon(graft.SparkEntry.queries("stream_topk")(spark, dir01)
-      .select("ws", "event_type", "n", "rn").collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
   test("file-source Streams.ohlc: daily bars emitted on watermark close equal the batch bars") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
+    val ev = graft.Tables(spark, Dir01, "events").cache()
     // sentinel in its own far-future day AND a marker type, so its bar is
     // identifiable; its arrival closes every real day's bars
-    val sentinel = ev.orderBy(col("ts").desc).limit(1)
-      .withColumn("event_type", lit("zzz_sentinel"))
-      .withColumn("ts", col("ts") + expr("INTERVAL 3 DAYS"))
-    val chunks: Seq[DataFrame] = Seq(
-      ev.filter(unix_micros(col("ts").cast("timestamp")) < cuts(0)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(0)
-        && unix_micros(col("ts").cast("timestamp")) < cuts(1)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(1)),
-      sentinel)
-    val staged = stageChunks("events_ohlc_stream", chunks)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.ohlc(stream)
-      .writeStream.format("memory").queryName("t_file_ohlc")
-      .outputMode("append").start()
+    val staged = stageChunks("events_ohlc_stream",
+      thirds(ev) :+ sentinel(ev, 3).withColumn("event_type", lit("zzz_sentinel")))
+    val q = memorySink(Streams.ohlc(fileStream(ev, staged)), "t_file_ohlc", "append")
     try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 4
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
+      drain(q, 4, watermark = true)
       val streamed = canon(spark.table("t_file_ohlc")
         .filter(col("event_type") =!= "zzz_sentinel").collect())
       // batch twin's DateType day → midnight instant, matching window.start
-      val batch = canon(
-        graft.SparkEntry.queries("time_ohlc")(spark, dir01)
-          .select(col("day").cast("timestamp").as("ws"), col("event_type"),
-            col("open"), col("high"), col("low"), col("close"),
-            col("n"), col("volume")).collect())
-      streamed shouldBe batch
+      streamed shouldBe canon(batchOp("time_ohlc")
+        .select(col("day").cast("timestamp").as("ws"), col("event_type"), col("open"),
+          col("high"), col("low"), col("close"), col("n"), col("volume")).collect())
       streamed should not be empty
     } finally q.stop()
   }
 
-  test("file-source rate-alert sink: hourly-count fold over hash-split batches equals the batch op") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split chunks: hourly counts are algebraic, delivery order must
-    // wash out (same discipline as the top-k drive)
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_rate_stream", chunks)
-    val stateRoot = Files.createTempDirectory("rate_state").toString
-    val stateSchema = StructType.fromDDL("user_id BIGINT, hidx BIGINT, n BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.rateAlertSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.rateAlertView(readState())
-      .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("rate_alert")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source drift sink: grid fold over hash-split batches equals the batch drift_report") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split chunks: the (type, bin) counts are algebraic, so batch
-    // composition/order must wash out (same discipline as rate-alert)
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_drift_stream", chunks)
-    val stateRoot = Files.createTempDirectory("drift_state").toString
-    val stateSchema = StructType.fromDDL(
-      "event_type STRING, bin BIGINT, c_ref BIGINT, c_cur BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.driftSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.driftView(readState())
-      .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("drift_report")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source t-test sink: decimal moment fold over hash-split batches equals the batch ab_ttest") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split chunks: the per-day moments are algebraic EXACT sums, so
-    // batch composition must wash out bit-for-bit — this is the property
-    // an IEEE-double running sum would NOT have (cut points would move
-    // the summation order); the decimal state makes the fold associative
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_ttest_stream", chunks)
-    val stateRoot = Files.createTempDirectory("ttest_state").toString
-    val stateSchema = StructType.fromDDL(
-      "day TIMESTAMP, n_a BIGINT, sx_a DECIMAL(38,2), sxx_a DECIMAL(38,4), " +
-        "n_b BIGINT, sx_b DECIMAL(38,2), sxx_b DECIMAL(38,4)")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.ttestSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.ttestView(readState())
-      .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("ab_ttest")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
-    streamed should not be empty
-    // one state, two monitors: the SAME fold serves the group-sequential
-    // boundary monitor bit-for-bit (batch op ab_sequential)
-    val seqStreamed = graft.streaming.Streams.seqView(readState())
-      .collect().map(_.toSeq).toSet
-    val seqBatch = graft.SparkEntry.queries("ab_sequential")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    seqStreamed shouldBe seqBatch
-    seqStreamed should not be empty
-  }
-
-  test("file-source seasonal-anomaly sink: hour-count fold over hash-split batches equals the batch op") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_seasonal_stream", chunks)
-    val stateRoot = Files.createTempDirectory("seasonal_state").toString
-    val stateSchema = StructType.fromDDL("hts TIMESTAMP, n BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.seasonalSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.seasonalView(readState())
-      .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("anomaly_seasonal")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
   test("file-source Streams.intervalMerge: dynamic-gap sessions equal the batch islands") {
-    import java.nio.file.{Files, Paths}
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
+    val ev = graft.Tables(spark, Dir01, "events").cache()
     // guard for the one boundary where Spark's session merge (strict
     // overlap) and the batch op (touch merges too) could differ: assert
     // the fixture has NO exact-touch interval boundary — with that, the
@@ -795,857 +304,381 @@ class FileStreamParitySpec extends SparkSpec {
     val prior = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("sus").asc, col("event_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val touches = ev
-      .filter(get_json_object(col("props"), "$.k").cast("int") >= 1) // op contract
+    val k = get_json_object(col("props"), "$.k").cast("int")
+    val touches = ev.filter(k >= 1) // op contract
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("sus"),
-        (unix_micros(col("ts").cast("timestamp"))
-          + get_json_object(col("props"), "$.k").cast("int") * lit(60000000L)).as("eus"))
+        (unix_micros(col("ts").cast("timestamp")) + k * lit(60000000L)).as("eus"))
       .withColumn("mprev", max("eus").over(prior))
       .filter(col("sus") === col("mprev")).count()
     touches shouldBe 0L
-    // time-ordered thirds + far-future sentinel (append mode only emits a
-    // session once the watermark proves it closed — same discipline as
-    // the fixed-gap session drive)
-    val cuts = ev.agg(percentile(unix_micros(col("ts").cast("timestamp")),
-        array(lit(1.0 / 3), lit(2.0 / 3))).as("qs"))
-      .collect()(0).getSeq[Double](0).map(_.toLong)
-    val sentinel = ev.orderBy(col("ts").desc).limit(1)
-      .withColumn("user_id", lit(-1L))
-      .withColumn("ts", col("ts") + expr("INTERVAL 4 DAYS"))
-    val chunks: Seq[DataFrame] = Seq(
-      ev.filter(unix_micros(col("ts").cast("timestamp")) < cuts(0)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(0)
-        && unix_micros(col("ts").cast("timestamp")) < cuts(1)),
-      ev.filter(unix_micros(col("ts").cast("timestamp")) >= cuts(1)),
-      sentinel)
-    val staged = stageChunks("events_ivm_stream", chunks)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.intervalMerge(stream)
-      .writeStream.format("memory").queryName("t_file_ivm")
-      .outputMode("append").start()
+    val staged = stageChunks("events_ivm_stream",
+      thirds(ev) :+ sentinel(ev, 4).withColumn("user_id", lit(-1L)))
+    val q = memorySink(Streams.intervalMerge(fileStream(ev, staged)), "t_file_ivm", "append")
     try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 4
-      q.recentProgress.toSeq
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .distinct.size should be >= 2
-      val streamed = canon(spark.table("t_file_ivm")
-        .filter(col("user_id") =!= -1L)
+      drain(q, 4, watermark = true)
+      val streamed = canon(spark.table("t_file_ivm").filter(col("user_id") =!= -1L)
         .select("user_id", "start", "end", "n_events").collect())
-      val batch = graft.SparkEntry.queries("interval_merge")(spark, dir01)
-        .select("user_id", "start_us", "end_us", "n_events").collect()
-        .map(_.toSeq).toSet
-      streamed shouldBe batch // the oracle-checked batch islands, exactly
+      streamed shouldBe batchOp("interval_merge")
+        .select("user_id", "start_us", "end_us", "n_events").collect().map(_.toSeq).toSet
       streamed should not be empty
     } finally q.stop()
   }
 
   test("file-source stream-static enrichment: broadcast dim join over streamed facts equals the batch join_broadcast") {
-    val dir01 = "/root/testdata/sf0.01"
-    val cust = graft.Tables(spark, dir01, "customer").cache()
-    val chunks = (0 until 3).map(i => cust.filter(pmod(col("c_custkey"), lit(3)) === i))
-    val staged = stageChunks("cust_enrich_stream", chunks)
-    val stream = spark.readStream.schema(cust.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
+    val cust = graft.Tables(spark, Dir01, "customer").cache()
+    val staged = stageChunks("cust_enrich_stream",
+      (0 until 3).map(i => cust.filter(pmod(col("c_custkey"), lit(3)) === i)))
     // static sides are plain batch DataFrames — the stream-static shape
-    val enriched = graft.streaming.Streams.enrich(stream,
-      graft.Tables(spark, dir01, "nation"), graft.Tables(spark, dir01, "region"))
-    val q = enriched.writeStream.format("memory")
-      .queryName("enrich_sink").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
+    val q = memorySink(Streams.enrich(fileStream(cust, staged),
+      graft.Tables(spark, Dir01, "nation"), graft.Tables(spark, Dir01, "region")),
+      "enrich_sink", "append")
+    try drain(q, 3, watermark = false) finally q.stop()
     val streamed = spark.table("enrich_sink").collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("join_broadcast")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
+    streamed shouldBe batchOp("join_broadcast").collect().map(_.toSeq).toSet
     streamed should not be empty
   }
 
-  test("file-source leakage sink: (type,user) grid fold over TIME-split batches equals the batch split_temporal") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // TIME-split chunks (not hash-split) on purpose: the train batches
-    // arrive first, then the holdout batches — the exact arrival pattern
-    // under which a user FLIPS from clean to leaked mid-stream, which is
-    // the flags-are-view-not-state property this twin exists to prove
-    val cutA = lit("2024-01-12").cast("timestamp")
-    val cutB = lit("2024-01-24").cast("timestamp")
-    val chunks = Seq(
-      ev.filter(col("ts") < cutA),
-      ev.filter(col("ts") >= cutA && col("ts") < cutB),
-      ev.filter(col("ts") >= cutB))
-    val staged = stageChunks("events_leak_stream", chunks)
-    val stateRoot = Files.createTempDirectory("leak_state").toString
-    val stateSchema = StructType.fromDDL(
-      "event_type STRING, user_id BIGINT, n_tr BIGINT, n_ho BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
+  folds.foreach { f =>
+    test(f.name) {
+      val r = runFold(f)
+      f.checks.foreach { c =>
+        val streamed = result(c, c.view(r))
+        withClue(s"${c.op}: ") { streamed shouldBe result(c, batchOp(c.op)) }
+        streamed should not be empty
+      }
+      f.extra(r)
     }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.leakSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    // mid-stream honesty: after only the train-window batches, nothing is
-    // leaked yet — the flags really are computed over the fold, not folded
-    // into it. State versions persist on disk, so replay the audit over
-    // the intermediate cuts: v1 (first train batch) and v2 (both train
-    // batches) must both be leak-free, and the clean→leaked flip happens
-    // only when the holdout batch lands.
-    def leakedAt(version: Int): Long = graft.streaming.Streams.leakView(
-        spark.read.schema(stateSchema).parquet(s"$stateRoot/v$version"))
-      .agg(org.apache.spark.sql.functions.sum("u_leaked")).collect()
-      .head.getLong(0)
-    leakedAt(1) shouldBe 0L
-    leakedAt(2) shouldBe 0L
-    val streamed = graft.streaming.Streams.leakView(readState())
-      .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("split_temporal")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
-    streamed should not be empty
-    // and the final state genuinely contains leaked users (non-vacuous)
-    graft.streaming.Streams.leakView(readState())
-      .agg(org.apache.spark.sql.functions.sum("u_leaked")).collect()
-      .head.getLong(0) should be > 0L
+  }
+}
+
+object FileStreamParitySpec extends Matchers {
+  private def spark = SparkSpec.spark
+  val Dir001 = "/root/testdata/sf0.001"
+  val Dir01 = "/root/testdata/sf0.01"
+
+  /** Row set with timestamps canonicalized to epoch-µs: the streaming
+    * twins watermark on an instant column (their window bounds collect as
+    * java.sql.Timestamp), while the batch twins are type-preserving over
+    * the fixture's TIMESTAMP_NTZ (java.time.LocalDateTime). Session tz is
+    * pinned UTC, so both readings denote the same instant — parity is
+    * about VALUES. */
+  def canon(rows: Array[Row]): Set[Seq[Any]] = {
+    def us(i: java.time.Instant) = i.getEpochSecond * 1000000L + i.getNano / 1000
+    rows.map(_.toSeq.map {
+      case t: java.sql.Timestamp => us(t.toInstant)
+      case t: java.time.LocalDateTime => us(t.toInstant(java.time.ZoneOffset.UTC))
+      case x => x
+    }).toSet
   }
 
-  test("file-source changepoint sink: integer-cents grid fold over hash-split batches equals the batch changepoint_cusum") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split chunks: the daily cents are EXACT integer sums, so batch
-    // composition/order must wash out bit-for-bit — and so must the
-    // downstream argmax, which is the part a float fold could flip (a
-    // last-ulp drift in a near-tied day moves the reported change_day)
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val staged = stageChunks("events_cusum_stream", chunks)
-    val stateRoot = Files.createTempDirectory("cusum_state").toString
-    val stateSchema = StructType.fromDDL(
-      "event_type STRING, day TIMESTAMP, cents BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
+  /** Stage time-ordered chunk files for a maxFilesPerTrigger=1 file
+    * source: one parquet file per chunk, mtimes spaced a minute apart so
+    * the source's modification-time ordering matches chunk order. One
+    * write job stages every chunk: chunk i lands alone in partition
+    * directory `__chunk=i`. */
+  def stageChunks(prefix: String, chunks: Seq[DataFrame]): Path = {
+    val staged = Files.createTempDirectory(prefix)
+    val parts = Files.createTempDirectory(s"${prefix}_parts")
+    chunks.zipWithIndex.map { case (c, i) => c.withColumn("__chunk", lit(i)) }
+      .reduce(_ unionByName _).repartition(col("__chunk"))
+      .write.mode("overwrite").partitionBy("__chunk").parquet(parts.toString)
+    chunks.indices.foreach { i =>
+      val dir = parts.resolve(s"__chunk=$i")
+      require(Files.isDirectory(dir), s"$prefix: chunk $i is empty")
+      val part = Files.list(dir).toArray.map(_.toString).filter(_.endsWith(".parquet")).head
+      val dest = staged.resolve(s"chunk$i.parquet")
+      Files.copy(Paths.get(part), dest)
+      Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(1755000000000L + i * 60000))
     }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.cusumSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.cusumView(readState())
-      .collect().map(_.toSeq).toSet
-    val batch = graft.SparkEntry.queries("changepoint_cusum")(spark, dir01)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batch
-    streamed should not be empty
+    staged
   }
 
-  test("file-source classifier-monitor sink: confusion-grid fold over hash-split batches equals the batch lang_id_eval") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val staged = stageChunks("docs_lang_stream", chunks)
-    val stateRoot = Files.createTempDirectory("lang_state").toString
-    val stateSchema = StructType.fromDDL(
-      "lang STRING, pred_lang STRING, n BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
-      .write.parquet(s"$stateRoot/v0")
-    var v = 0
-    def readState(): DataFrame = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.langSink(stream)(readState _)(writeState)
-      .start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.langView(readState())
-      .collect().map(_.toSeq)
-    val batch = graft.SparkEntry.queries("lang_id_eval")(spark, dir01)
-      .collect().map(_.toSeq)
-    streamed shouldBe batch // ordered compare — the grid AND its ordering
-    streamed should not be empty
-  }
+  /** A maxFilesPerTrigger=1 file stream over staged chunks of `src`. */
+  def fileStream(src: DataFrame, staged: Path): DataFrame =
+    spark.readStream.schema(src.schema).option("maxFilesPerTrigger", 1).parquet(staged.toString)
 
-  test("file-source routing sink: (source, pred_lang) cell fold over hash-split document batches equals the batch lang_routing") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // hash-split: every cell's doc/token/mixed counts are algebraic, so
-    // batch composition must wash out; shares recompute in the VIEW over
-    // the completed grid, so per-cut share drift cannot leak into state
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_route_stream", docs, chunks,
-      "source STRING, pred_lang STRING, n BIGINT, n_tok BIGINT, n_mixed BIGINT",
-      (s, r, w) => graft.streaming.Streams.routeSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.routeView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("lang_routing")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
+  /** A streamed table: where its rows come from (per data dir), the id its
+    * hash split keys on, and the stream-side prep its twin's input needs. */
+  final case class Input(name: String, id: String, load: String => DataFrame,
+      prep: String => DataFrame => DataFrame)
+  private def table(name: String, id: String) =
+    Input(name, id, dir => graft.Tables(spark, dir, name), _ => identity)
+  val EventLog = table("events", "event_id")
+  val Documents = table("documents", "doc_id")
+  /** dedup_incremental's history leg (the ~80% salted-hash split). */
+  val History = Input("history", "doc_id", dir => Dedup.histLeg(Documents.load(dir)), _ => identity)
+  /** The live encoder output joined to the static documents dim. */
+  val Embeddings = table("embeddings", "vec_id")
+    .copy(prep = dir => Llm.driftHalves(_, Documents.load(dir).select("doc_id", "lang")))
 
-  test("file-source heavy-hitters sink: CMS cell + candidate folds over hash-split batches equal the batch heavy_hitters") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types.StructType
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // hash-split chunks: both state tables are algebraic counts, so batch
-    // composition/order must wash out — the MERGEABILITY that makes a
-    // count-min sketch a sketch, asserted end-to-end
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val staged = stageChunks("docs_hh_stream", chunks)
-    val stateRoot = Files.createTempDirectory("hh_state").toString
-    val cellSchema = StructType.fromDDL("d INT, bucket BIGINT, cn BIGINT")
-    val candSchema = StructType.fromDDL("tok STRING, exact_n BIGINT")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), cellSchema)
-      .write.parquet(s"$stateRoot/cells0")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), candSchema)
-      .write.parquet(s"$stateRoot/cand0")
-    var v = 0
-    def readCells(): DataFrame = spark.read.schema(cellSchema).parquet(s"$stateRoot/cells$v")
-    def readCand(): DataFrame = spark.read.schema(candSchema).parquet(s"$stateRoot/cand$v")
-    // the two writes land within one foreachBatch call: bump the version
-    // once per pair (cells writes first — matching hhSink's order)
-    def writeCells(df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(s"$stateRoot/cells${v + 1}")
-    def writeCand(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/cand${v + 1}"); v += 1
-    }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = graft.streaming.Streams.hhSink(stream)(readCells _, readCand _)(
-      writeCells, writeCand).start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= 3
-    } finally q.stop()
-    v should be >= 3
-    val streamed = graft.streaming.Streams.hhView(readCells(), readCand())
-      .collect().map(_.toSeq)
-    val batch = graft.SparkEntry.queries("heavy_hitters")(spark, dir01)
-      .collect().map(_.toSeq)
-    streamed shouldBe batch // ordered compare: the ranking itself is the contract
-    streamed should not be empty
-  }
-
-  test("file-source activity sink: hour-of-week count fold over hash-split batches equals the batch activity_profile") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_activity_stream", ev, chunks,
-      "dow BIGINT, hod BIGINT, n BIGINT",
-      (s, r, w) => graft.streaming.Streams.activitySink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.activityView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("activity_profile")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source incremental sink: rollup fold over hash-split batches equals the batch agg_incremental") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_incr_stream", ev, chunks,
-      "event_type STRING, n BIGINT, dsum DECIMAL(38,2)",
-      (s, r, w) => graft.streaming.Streams.incrSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.incrView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("agg_incremental")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source retention sink: presence-grid fold over hash-split batches equals the batch retention_cohort") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split ON PURPOSE: a user's earliest week can arrive in ANY
-    // batch, so the first-active-week assignment FLIPS mid-stream —
-    // cohorting must be a view over the completed presence grid, never
-    // folded state (the split_temporal flags-are-view discipline)
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_retention_stream", ev, chunks,
-      "user_id BIGINT, w TIMESTAMP",
-      (s, r, w) => graft.streaming.Streams.retentionSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.retentionView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("retention_cohort")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source DAU/WAU sink: user-day presence fold over hash-split batches equals the batch rolling_active_users") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_rau_stream", ev, chunks,
-      "user_id BIGINT, day DATE",
-      (s, r, w) => graft.streaming.Streams.rauSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.rauView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("rolling_active_users")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // redelivery honesty: presence is idempotent, so refolding a chunk
-    // is a no-op (stronger than the counting folds' exactly-once caveat)
-    val refolded = graft.streaming.Streams.rauMerge(state,
-      graft.ops.Events.rauGrid(chunks.head))
-    canon(graft.streaming.Streams.rauView(refolded).collect()) shouldBe streamed
-  }
-
-  test("file-source LTV sink: decimal revenue-grid fold over hash-split batches equals the batch cohort_ltv") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: cohort weeks flip mid-stream exactly as in the
-    // retention drive; revenue cells are exact decimal sums so batch
-    // composition must wash out bit-for-bit including the cumulative curve
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_ltv_stream", ev, chunks,
-      "user_id BIGINT, wk TIMESTAMP, rev DECIMAL(38,2)",
-      (s, r, w) => graft.streaming.Streams.ltvSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.ltvView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("cohort_ltv")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source funnel sink: 3-timestamp stage fold over time-split batches equals the batch event_funnel") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // time-split: stage chaining crosses batch boundaries (a user's
-    // signup lands in batch 1, the qualifying click in batch 2) — the
-    // carried 3-timestamp state must hand the chain across the cut
-    val state = runGridFold("events_funnel_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, t_signup TIMESTAMP, t_click TIMESTAMP, t_purchase TIMESTAMP",
-      (s, r, w) => graft.streaming.Streams.funnelSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.funnelView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("event_funnel")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // non-vacuous: the stream actually completed funnels
-    graft.streaming.Streams.funnelView(state)
-      .filter(col("stage") === 3).count() should be > 0L
-  }
-
-  test("file-source TWA sink: last-reading + integral fold over time-split batches equals the batch time_weighted_avg") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // the interval CROSSING each batch cut is the property under test:
-    // its duration is only computable once the next reading arrives, so
-    // it must be accounted by the carried last-reading row
-    val (_, acc) = runDualFold("events_twa_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, cents BIGINT",
-      "user_id BIGINT, n_intervals BIGINT, total_dur_us BIGINT, wsum DECIMAL(38,0)",
-      (s, rL, rA, wL, wA) => graft.streaming.Streams.twaSink(s)(rL, rA)(wL, wA))
-    val streamed = canon(graft.streaming.Streams.twaView(acc).collect())
-    val batch = canon(graft.SparkEntry.queries("time_weighted_avg")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source EMA sink: 7-row lag-ring fold over time-split batches equals the batch win_ema") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // per-event output: a batch-2 event's 8-lag frame reaches back into
-    // batch 1 — the carried ring must reproduce those lags bit-for-bit
-    val (_, out) = runDualFold("events_ema_stream", ev, timeSplitChunks(ev),
-      "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, cents BIGINT",
-      "event_id BIGINT, user_id BIGINT, value DOUBLE, ema DOUBLE",
-      (s, rR, rO, wR, wO) => graft.streaming.Streams.emaSink(s)(rR, rO)(wR, wO))
-    val streamed = canon(out.collect())
-    val batch = canon(graft.SparkEntry.queries("win_ema")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source running-distinct sink: presence-bit fold over time-split batches equals the batch win_running_distinct") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // a type first seen in batch 1 must NOT re-count when batch 3 replays
-    // it for the same user — the seen-grid carries exactly that bit
-    val (_, out) = runDualFold("events_rd_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, event_type STRING",
-      "event_id BIGINT, user_id BIGINT, n_types_seen BIGINT",
-      (s, rS, rO, wS, wO) => graft.streaming.Streams.rdSink(s)(rS, rO)(wS, wO))
-    val streamed = canon(out.collect())
-    val batch = canon(graft.SparkEntry.queries("win_running_distinct")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source watermark-audit sink: hwm + band-grid fold over ARRIVAL-split batches equals the batch watermark_audit") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // arrival-split on the SAME jittered arrival time the op models
-    // (via the shared wmProjected projection): a stream receives events
-    // in arrival order by definition, so this fold has no ordering
-    // precondition — the carried per-user hwm must seed batch 2/3's
-    // lateness exactly where batch 1's window stopped
-    val proj = graft.ops.Events.wmProjected(ev)
-      .select(col("event_id").as("p_eid"), col("aus"))
+  final case class Split(name: String, cut: (DataFrame, String) => Seq[DataFrame])
+  /** Every chunk spans the full time range: algebraic partials must wash
+    * out of any batch composition and order. */
+  val Hash = Split("hash", (df, id) => (0 until 3).map(i => df.filter(pmod(col(id), lit(3)) === i)))
+  /** Time-ordered chunks (NULL-ts rows ride the first batch — they sort
+    * first in every asc-nulls-first batch window, so arrival order matches
+    * the batch ops' global order). */
+  val Time = Split("time", (ev, _) => {
+    val (a, b) = (lit("2024-01-12").cast("timestamp"), lit("2024-01-24").cast("timestamp"))
+    Seq(ev.filter(col("ts") < a || col("ts").isNull),
+      ev.filter(col("ts") >= a && col("ts") < b), ev.filter(col("ts") >= b))
+  })
+  /** Arrival-ordered chunks on the SAME jittered arrival time watermark_audit
+    * models (the shared wmProjected projection). */
+  val Arrival = Split("arrival", (ev, _) => {
+    val proj = Events.wmProjected(ev).select(col("event_id").as("p_eid"), col("aus"))
     val evA = ev.join(proj, col("event_id") <=> col("p_eid")).cache()
-    val cutA = unix_micros(lit("2024-01-12").cast("timestamp"))
-    val cutB = unix_micros(lit("2024-01-24").cast("timestamp"))
-    def slice(pred: org.apache.spark.sql.Column) =
-      evA.filter(pred).drop("p_eid", "aus")
-    val chunks = Seq(slice(col("aus") < cutA || col("aus").isNull),
-      slice(col("aus") >= cutA && col("aus") < cutB), slice(col("aus") >= cutB))
-    val (_, grid) = runDualFold("events_wm_stream", ev, chunks,
-      "user_id BIGINT, hwm BIGINT",
-      "bucket STRING, user_id BIGINT, n BIGINT",
-      (s, rH, rG, wH, wG) => graft.streaming.Streams.wmSink(s)(rH, rG)(wH, wG))
-    val streamed = canon(graft.streaming.Streams.wmView(grid).collect())
-    val batch = canon(graft.SparkEntry.queries("watermark_audit")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // non-vacuous: late bands exist (the jitter does reorder arrivals)
-    graft.streaming.Streams.wmView(grid)
-      .filter(col("bucket") =!= "0_on_time").count() should be > 0L
+    val (a, b) = (unix_micros(lit("2024-01-12").cast("timestamp")),
+      unix_micros(lit("2024-01-24").cast("timestamp")))
+    Seq(col("aus") < a || col("aus").isNull, col("aus") >= a && col("aus") < b, col("aus") >= b)
+      .map(p => evA.filter(p).drop("p_eid", "aus"))
+  })
+
+  /** One fold drive's outcome: final states, the states at any version,
+    * and the chunks that were streamed. */
+  final case class Run(fold: Fold, states: Seq[DataFrame], at: Int => Seq[DataFrame],
+      chunks: Seq[DataFrame])
+  /** A view over the final states and the batch op it must equal: as a
+    * set of canonical rows, or `ordered` when the order is the contract. */
+  final case class Check(op: String, view: Run => DataFrame, cols: Seq[String], ordered: Boolean)
+  /** One fold twin: stream `input` cut by `split` through `step` into
+    * states declared by `ddls` (the state a view reads comes first). */
+  final case class Fold(name: String, input: Input, split: Split, ddls: Seq[String],
+      step: Streams.Step, checks: Seq[Check], extra: Run => Unit) {
+    def also(e: Run => Unit): Fold = copy(extra = e)
+  }
+  def fold(name: String, input: Input, split: Split, ddls: String*)(
+      step: Streams.Step, checks: Check*): Fold = Fold(name, input, split, ddls, step, checks, _ => ())
+  def on(op: String, view: DataFrame => DataFrame) =
+    Check(op, r => view(r.states.head), Nil, ordered = false)
+  private def on2(op: String, view: (DataFrame, DataFrame) => DataFrame) =
+    Check(op, r => view(r.states(0), r.states(1)), Nil, ordered = false)
+
+  def result(c: Check, df: DataFrame): Iterable[Seq[Any]] = {
+    val d = if (c.cols.isEmpty) df else df.select(c.cols.map(col): _*)
+    if (c.ordered) d.collect().map(_.toSeq).toSeq else canon(d.collect())
   }
 
-  test("file-source fertility sink: per-language sum fold over hash-split document batches equals the batch tokenizer_fertility") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_fert_stream", docs, chunks,
-      "lang STRING, n_docs BIGINT, n_bpe BIGINT, n_ws BIGINT, n_chars BIGINT, n_bytes BIGINT",
-      (s, r, w) => graft.streaming.Streams.fertilitySink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.fertilityView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("tokenizer_fertility")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
+  /** Redelivery honesty for idempotent folds (presence, MIN, MAX):
+    * refolding an already-applied chunk moves no view. */
+  private val redelivered: Run => Unit = r => r.fold.checks.foreach { c =>
+    result(c, c.view(r.copy(states = r.fold.step(r.states, r.chunks.head)))) shouldBe
+      result(c, c.view(r))
   }
+  private def positive(n: Long): Unit = n should be > 0L
+  private def docs01() = graft.Tables(spark, Dir01, "documents")
 
-  test("file-source temperature sink: per-source sum fold over hash-split document batches equals the batch sample_temperature") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // sqrt-then-quantize runs in the VIEW over the completed sums — the
-    // fold state is pure integers, so batch composition washes out exactly
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_temp_stream", docs, chunks,
-      "source STRING, n_docs BIGINT, n_tokens BIGINT",
-      (s, r, w) => graft.streaming.Streams.temperatureSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.temperatureView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("sample_temperature")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source benford sink: digit-count grid fold over time-split event batches equals the batch benford_audit") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // time-split: every type's digit mix keeps shifting across cuts, so
-    // the chi2 recomputed from the folded grid moves batch to batch —
-    // only the completed fold can equal the batch audit
-    val state = runGridFold("events_benford_stream", ev, timeSplitChunks(ev),
-      "event_type STRING, digit INT, digit2 INT, n_obs BIGINT",
-      (s, r, w) => graft.streaming.Streams.benfordSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.benfordView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("benford_audit")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // the SAME stored grid serves the second-digit screen — the seqView
-    // pattern: a second monitor over state the stream already carries
-    val streamed2 = canon(graft.streaming.Streams.benfordSecondView(state).collect())
-    val batch2 = canon(graft.SparkEntry.queries("benford_second")(spark, dir01).collect())
-    streamed2 shouldBe batch2
-    streamed2 should not be empty
-    // …and the MAD conformity bands — a THIRD monitor, zero new state
-    val streamed3 = canon(graft.streaming.Streams.benfordMadView(state).collect())
-    val batch3 = canon(graft.SparkEntry.queries("benford_mad")(spark, dir01).collect())
-    streamed3 shouldBe batch3
-    streamed3 should not be empty
-  }
-
-  test("file-source contamination sink: shingle presence-grid fold over hash-split document batches equals the batch contamination_matrix") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // hash-split: an overlapping source pair's shingles arrive in
-    // DIFFERENT batches — the pair only materializes in the folded set
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_contam_stream", docs, chunks,
-      "source STRING, h BIGINT",
-      (s, r, w) => graft.streaming.Streams.contaminationSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.contaminationView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("contamination_matrix")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // redelivery honesty: presence is idempotent, so refolding a chunk
-    // is a no-op (the rolling_active_users argument)
-    val refolded = graft.streaming.Streams.contaminationMerge(state,
-      graft.ops.Audit.contaminationGrid(chunks.head))
-    canon(graft.streaming.Streams.contaminationView(refolded).collect()) shouldBe streamed
-  }
-
-  test("file-source RFM sink: (max, sum, sum) user-grid fold over time-split event batches equals the batch event_rfm") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // time-split: the recency ANCHOR (corpus max day) advances with every
-    // batch, re-scoring every user — only the view-over-completed-fold
-    // shape can track it; a per-batch score would be stale by definition
-    val state = runGridFold("events_rfm_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, last_day DATE, f BIGINT, m_cents BIGINT",
-      (s, r, w) => graft.streaming.Streams.rfmSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.rfmView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("event_rfm")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source assoc sink: basket presence-grid fold over hash-split event batches equals the batch assoc_rules") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: a user's A and B events land in DIFFERENT batches — the
-    // rule only materializes in the folded basket set
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_assoc_stream", ev, chunks,
-      "user_id BIGINT, event_type STRING",
-      (s, r, w) => graft.streaming.Streams.assocSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.assocView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("assoc_rules")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // redelivery honesty: presence is idempotent — refolding is a no-op
-    val refolded = graft.streaming.Streams.assocMerge(state,
-      graft.ops.Events.assocGrid(chunks.head))
-    canon(graft.streaming.Streams.assocView(refolded).collect()) shouldBe streamed
-  }
-
-  test("file-source rank sink: tie-group grid fold over hash-split event batches equals the batch rank family") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: a day's click and purchase events land in DIFFERENT
-    // batches, so per-batch ranks would be wrong by construction — the
-    // tie structure (and hence U, the variance, and the KS supremum)
-    // only exists in the completed fold
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_rank_stream", ev, chunks,
-      "day TIMESTAMP, cents BIGINT, c_a BIGINT, c_b BIGINT",
-      (s, r, w) => graft.streaming.Streams.rankSink(s)(r)(w))
-    // ONE fold, all three monitors read from it
-    canon(graft.streaming.Streams.rankAucView(state).collect()) shouldBe
-      canon(graft.SparkEntry.queries("eval_auc")(spark, dir01).collect())
-    canon(graft.streaming.Streams.rankRanksumView(state).collect()) shouldBe
-      canon(graft.SparkEntry.queries("ab_ranksum")(spark, dir01).collect())
-    val ks = canon(graft.streaming.Streams.rankKsView(state).collect())
-    ks shouldBe canon(graft.SparkEntry.queries("ab_ks_test")(spark, dir01).collect())
-    ks should not be empty
-  }
-
-  test("file-source survival sink: (min, min, max) user-grid fold over time-split event batches equals the batch survival_hazard") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // time-split: the censoring ANCHOR (corpus max day) advances with
-    // every batch, re-censoring every unconverted user — and a user's
-    // first event and conversion land in DIFFERENT batches, so a
-    // per-batch table would mis-measure time-to-event by construction
-    val state = runGridFold("events_survival_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, first_day DATE, conv_day DATE, last_day DATE",
-      (s, r, w) => graft.streaming.Streams.survivalSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.survivalView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("survival_hazard")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // the fold actually carried right-censoring: some users never convert
-    state.filter(col("conv_day").isNull).count() should be > 0L
-  }
-
-  test("file-source interarrival sink: last-event + gap-grid ordered fold over time-split event batches equals the batch event_interarrival") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // ordered fold (per-(user, type) event-time-ordered arrival — the
-    // win_ema class; time-split batches satisfy it): a gap SPANNING a
-    // batch cut only exists through the carried last-event state, so a
-    // stateless per-batch grid would undercount every bucket
-    val (last, grid) = runDualFold("events_gap_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, event_type STRING, ts TIMESTAMP",
-      "event_type STRING, bucket STRING, n_gaps BIGINT, " +
-        "min_us BIGINT, max_us BIGINT, sum_us BIGINT",
-      (s, rL, rG, wL, wG) =>
-        graft.streaming.Streams.interarrivalSink(s)(rL, rG)(wL, wG))
-    val streamed = canon(graft.streaming.Streams.interarrivalView(grid).collect())
-    val batch = canon(graft.SparkEntry.queries("event_interarrival")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // the carried state is ONE row per live (user, type) key
-    last.groupBy("user_id", "event_type").count()
-      .filter(col("count") > 1).count() shouldBe 0L
-  }
-
-  test("file-source SRM sink: day-grid fold over hash-split event batches equals the batch ab_srm") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: a day's click and purchase events land in DIFFERENT
-    // batches, and the GLOBAL mix every day is judged against moves with
-    // every batch — per-batch χ² would alarm on its own split artifact
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_srm_stream", ev, chunks,
-      "day TIMESTAMP, n_a BIGINT, n_b BIGINT",
-      (s, r, w) => graft.streaming.Streams.srmSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.srmView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("ab_srm")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // ONE fold, two monitors: the correlation view reads the same state
-    val corr = canon(graft.streaming.Streams.srmCorrView(state).collect())
-    corr shouldBe canon(graft.SparkEntry.queries("rolling_corr")(spark, dir01).collect())
-    corr should not be empty
-  }
-
-  test("file-source bollinger sink: 7-row band-ring fold over time-split batches equals the batch win_bollinger") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // per-event output: a batch-2 event's 8-row frame reaches back into
-    // batch 1 — the carried ring must reproduce those frames bit-for-bit
-    val (_, out) = runDualFold("events_boll_stream", ev, timeSplitChunks(ev),
-      "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, cents BIGINT",
-      "event_id BIGINT, user_id BIGINT, cents BIGINT, " +
-        "mean_cents DOUBLE, std_cents DOUBLE, outlier BOOLEAN",
-      (s, rR, rO, wR, wO) => graft.streaming.Streams.bollSink(s)(rR, rO)(wR, wO))
-    val streamed = canon(out.collect())
-    val batch = canon(graft.SparkEntry.queries("win_bollinger")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source CUPED sink: user-grid fold over time-split event batches equals the batch ab_cuped") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // time-split ACROSS the pre/post boundary: a user's covariate X is
-    // complete before their metric Y starts accumulating — θ and both
-    // adjusted means keep moving until the fold completes
-    val state = runGridFold("events_cuped_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, x BIGINT, y BIGINT",
-      (s, r, w) => graft.streaming.Streams.cupedSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.cupedView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("ab_cuped")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source score sink: tie-grid fold over hash-split event batches equals the batch calibration_table AND gains_table") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: the global decile EDGES (tie-group start positions)
-    // shift with every batch — a per-batch bucketing would freeze stale
-    // edges; only the view-over-completed-fold shape tracks them
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_score_stream", ev, chunks,
-      "cents BIGINT, c_neg BIGINT, c_pos BIGINT",
-      (s, r, w) => graft.streaming.Streams.scoreSink(s)(r)(w))
-    // ONE fold, both decile tables read from it
-    canon(graft.streaming.Streams.scoreCalibView(state).collect()) shouldBe
-      canon(graft.SparkEntry.queries("calibration_table")(spark, dir01).collect())
-    val gains = canon(graft.streaming.Streams.scoreGainsView(state).collect())
-    gains shouldBe canon(graft.SparkEntry.queries("gains_table")(spark, dir01).collect())
-    gains should not be empty
-  }
-
-  test("file-source bootstrap sink: replicate-grid fold over hash-split event batches equals the batch bootstrap_ci") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: replicate weights are pure functions of event ids, so
-    // partials from ANY split fold to the identical grid — and every
-    // resample mean (hence the whole band) tightens batch to batch
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_boot_stream", ev, chunks,
-      "event_type STRING, b INT, sw BIGINT, swx BIGINT",
-      (s, r, w) => graft.streaming.Streams.bootSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.bootView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("bootstrap_ci")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source attribution sink: 64-click recency-ring fold over time-split batches equals the batch attribution_time_decay") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // a batch-2 purchase's 7-day lookback reaches into batch 1 — the
-    // carried ring must reproduce those cross-cut touches bit-for-bit
-    val (ring, out) = runDualFold("events_attr_stream", ev, timeSplitChunks(ev),
-      "click_id BIGINT, c_uid BIGINT, cts TIMESTAMP",
-      "purchase_id BIGINT, user_id BIGINT, click_id BIGINT, " +
-        "age_days BIGINT, w BIGINT, credit_bp BIGINT",
-      (s, rR, rO, wR, wO) => graft.streaming.Streams.attrSink(s)(rR, rO)(wR, wO))
-    val streamed = canon(out.collect())
-    val batch = canon(graft.SparkEntry.queries("attribution_time_decay")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // the carried state is genuinely bounded: ≤64 clicks per user
-    ring.groupBy("c_uid").count().filter(col("count") > 64).count() shouldBe 0L
-  }
-
-  test("file-source power sink: moment-grid fold over hash-split event batches equals the batch ab_power") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // hash-split: the variance estimate (hence every required-n) keeps
-    // converging as partial moments fold in
-    val chunks = (0 until 3).map(i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-    val state = runGridFold("events_power_stream", ev, chunks,
-      "event_type STRING, n BIGINT, sx BIGINT, sxx DECIMAL(38,0)",
-      (s, r, w) => graft.streaming.Streams.powerSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.powerView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("ab_power")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source churn sink: presence-grid fold over time-split event batches equals the batch churn_rate") {
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    // time-split: the right-censoring anchor advances batch to batch,
-    // re-admitting the week before it; a user's week-w and week-w+1
-    // presences land in different batches, so retention only exists in
+  val folds: Seq[Fold] = Seq(
+    fold("file-source top-k sink: count-state fold over hash-split micro-batches equals the batch twin",
+      EventLog, Hash, "ws TIMESTAMP, event_type STRING, n BIGINT")(Streams.topk,
+      on("stream_topk", Streams.topkView).copy(cols = Seq("ws", "event_type", "n", "rn"))),
+    fold("file-source rate-alert sink: hourly-count fold over hash-split batches equals the batch op",
+      EventLog, Hash, "user_id BIGINT, hidx BIGINT, n BIGINT")(Streams.rateAlert,
+      on("rate_alert", graft.ops.rateAlertOver)),
+    fold("file-source drift sink: grid fold over hash-split batches equals the batch drift_report",
+      EventLog, Hash, "event_type STRING, bin BIGINT, c_ref BIGINT, c_cur BIGINT")(Streams.drift,
+      on("drift_report", Streams.driftView)),
+    // the per-day moments are EXACT decimal sums, so batch composition
+    // washes out bit-for-bit; one state serves both monitors
+    fold("file-source t-test sink: decimal moment fold over hash-split batches equals the batch ab_ttest",
+      EventLog, Hash, "day TIMESTAMP, n_a BIGINT, sx_a DECIMAL(38,2), sxx_a DECIMAL(38,4), " +
+        "n_b BIGINT, sx_b DECIMAL(38,2), sxx_b DECIMAL(38,4)")(Streams.ttest,
+      on("ab_ttest", Streams.ttestView), on("ab_sequential", Stats.seqView)),
+    fold("file-source seasonal-anomaly sink: hour-count fold over hash-split batches equals the batch op",
+      EventLog, Hash, "hts TIMESTAMP, n BIGINT")(Streams.seasonal,
+      on("anomaly_seasonal", Events.seasonalView)),
+    // TIME split on purpose: the train batches arrive first, then the
+    // holdout batches — a user FLIPS from clean to leaked mid-stream, so
+    // the flags must be a view over the fold, never folded state
+    fold("file-source leakage sink: (type,user) grid fold over TIME-split batches equals the batch split_temporal",
+      EventLog, Time, "event_type STRING, user_id BIGINT, n_tr BIGINT, n_ho BIGINT")(Streams.leak,
+      on("split_temporal", Audit.splitTemporalView)).also { r =>
+      def leaked(s: DataFrame) =
+        Audit.splitTemporalView(s).agg(sum("u_leaked")).collect().head.getLong(0)
+      leaked(r.at(1).head) shouldBe 0L // after the train batches alone...
+      leaked(r.at(2).head) shouldBe 0L
+      positive(leaked(r.states.head)) // ...and leaked once the holdout lands
+    },
+    fold("file-source changepoint sink: integer-cents grid fold over hash-split batches equals the batch changepoint_cusum",
+      EventLog, Hash, "event_type STRING, day TIMESTAMP, cents BIGINT")(Streams.cusum,
+      on("changepoint_cusum", Stats.cusumView)),
+    fold("file-source classifier-monitor sink: confusion-grid fold over hash-split batches equals the batch lang_id_eval",
+      Documents, Hash, "lang STRING, pred_lang STRING, n BIGINT")(Streams.lang,
+      on("lang_id_eval", Text.langConfusionView).copy(ordered = true)),
+    fold("file-source routing sink: (source, pred_lang) cell fold over hash-split document batches equals the batch lang_routing",
+      Documents, Hash, "source STRING, pred_lang STRING, n BIGINT, n_tok BIGINT, n_mixed BIGINT")(
+      Streams.route, on("lang_routing", Text.routeView)),
+    // both states are algebraic counts: the MERGEABILITY that makes a
+    // count-min sketch a sketch, asserted end-to-end (ranking included)
+    fold("file-source heavy-hitters sink: CMS cell + candidate folds over hash-split batches equal the batch heavy_hitters",
+      Documents, Hash, "d INT, bucket BIGINT, cn BIGINT", "tok STRING, exact_n BIGINT")(Streams.hh,
+      on2("heavy_hitters", Text.hhView).copy(ordered = true)),
+    fold("file-source activity sink: hour-of-week count fold over hash-split batches equals the batch activity_profile",
+      EventLog, Hash, "dow BIGINT, hod BIGINT, n BIGINT")(Streams.activity,
+      on("activity_profile", Events.activityView)),
+    fold("file-source incremental sink: rollup fold over hash-split batches equals the batch agg_incremental",
+      EventLog, Hash, "event_type STRING, n BIGINT, dsum DECIMAL(38,2)")(Streams.incr,
+      on("agg_incremental", Events.incrView)),
+    // a user's earliest week can arrive in ANY batch: cohorting is a view
+    fold("file-source retention sink: presence-grid fold over hash-split batches equals the batch retention_cohort",
+      EventLog, Hash, "user_id BIGINT, w TIMESTAMP")(Streams.retention,
+      on("retention_cohort", Events.retentionView)).also(redelivered),
+    fold("file-source DAU/WAU sink: user-day presence fold over hash-split batches equals the batch rolling_active_users",
+      EventLog, Hash, "user_id BIGINT, day DATE")(Streams.rau,
+      on("rolling_active_users", Events.rauView)).also(redelivered),
+    fold("file-source LTV sink: decimal revenue-grid fold over hash-split batches equals the batch cohort_ltv",
+      EventLog, Hash, "user_id BIGINT, wk TIMESTAMP, rev DECIMAL(38,2)")(Streams.ltv,
+      on("cohort_ltv", Events.ltvView)),
+    // stage chaining crosses batch cuts (signup in batch 1, click in 2)
+    fold("file-source funnel sink: 3-timestamp stage fold over time-split batches equals the batch event_funnel",
+      EventLog, Time, "user_id BIGINT, t_signup TIMESTAMP, t_click TIMESTAMP, t_purchase TIMESTAMP")(
+      Streams.funnel, on("event_funnel", Events.funnelView)).also(r =>
+      positive(Events.funnelView(r.states.head).filter(col("stage") === 3).count())),
+    // the interval CROSSING each cut is accounted by the carried reading
+    fold("file-source TWA sink: last-reading + integral fold over time-split batches equals the batch time_weighted_avg",
+      EventLog, Time, "user_id BIGINT, n_intervals BIGINT, total_dur_us BIGINT, wsum DECIMAL(38,0)",
+      "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, cents BIGINT")(Streams.twa,
+      on("time_weighted_avg", Events.twaView)),
+    // a batch-2 event's 8-lag frame reaches back into batch 1
+    fold("file-source EMA sink: 7-row lag-ring fold over time-split batches equals the batch win_ema",
+      EventLog, Time, "event_id BIGINT, user_id BIGINT, value DOUBLE, ema DOUBLE",
+      "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, cents BIGINT")(Streams.ema,
+      on("win_ema", identity)),
+    // a type first seen in batch 1 must NOT re-count in batch 3
+    fold("file-source running-distinct sink: presence-bit fold over time-split batches equals the batch win_running_distinct",
+      EventLog, Time, "event_id BIGINT, user_id BIGINT, n_types_seen BIGINT",
+      "user_id BIGINT, event_type STRING")(Streams.rd, on("win_running_distinct", identity)),
+    // the carried per-user hwm seeds batch 2/3's lateness exactly where
+    // batch 1's window stopped
+    fold("file-source watermark-audit sink: hwm + band-grid fold over ARRIVAL-split batches equals the batch watermark_audit",
+      EventLog, Arrival, "bucket STRING, user_id BIGINT, n BIGINT", "user_id BIGINT, hwm BIGINT")(
+      Streams.wm, on("watermark_audit", Events.wmView)).also(r => // the jitter reorders arrivals
+      positive(Events.wmView(r.states.head).filter(col("bucket") =!= "0_on_time").count())),
+    fold("file-source fertility sink: per-language sum fold over hash-split document batches equals the batch tokenizer_fertility",
+      Documents, Hash, "lang STRING, n_docs BIGINT, n_bpe BIGINT, n_ws BIGINT, n_chars BIGINT, n_bytes BIGINT")(
+      Streams.fertility, on("tokenizer_fertility", Text.fertilityView)),
+    fold("file-source temperature sink: per-source sum fold over hash-split document batches equals the batch sample_temperature",
+      Documents, Hash, "source STRING, n_docs BIGINT, n_tokens BIGINT")(Streams.temperature,
+      on("sample_temperature", Pipeline.temperatureView)),
+    // one stored grid, three screens
+    fold("file-source benford sink: digit-count grid fold over time-split event batches equals the batch benford_audit",
+      EventLog, Time, "event_type STRING, digit INT, digit2 INT, n_obs BIGINT")(Streams.benford,
+      on("benford_audit", Audit.benfordView), on("benford_second", Audit.benfordSecondView),
+      on("benford_mad", Audit.benfordMadView)),
+    fold("file-source contamination sink: shingle presence-grid fold over hash-split document batches equals the batch contamination_matrix",
+      Documents, Hash, "source STRING, h BIGINT")(Streams.contamination,
+      on("contamination_matrix", Audit.contaminationView)).also(redelivered),
+    // the recency ANCHOR advances with every batch, re-scoring every user
+    fold("file-source RFM sink: (max, sum, sum) user-grid fold over time-split event batches equals the batch event_rfm",
+      EventLog, Time, "user_id BIGINT, last_day DATE, f BIGINT, m_cents BIGINT")(Streams.rfm,
+      on("event_rfm", Events.rfmView)),
+    fold("file-source assoc sink: basket presence-grid fold over hash-split event batches equals the batch assoc_rules",
+      EventLog, Hash, "user_id BIGINT, event_type STRING")(Streams.assoc,
+      on("assoc_rules", Events.assocView)).also(redelivered),
+    // ONE fold, all three rank monitors: the tie structure only exists in
     // the completed fold
-    val state = runGridFold("events_churn_stream", ev, timeSplitChunks(ev),
-      "user_id BIGINT, week TIMESTAMP",
-      (s, r, w) => graft.streaming.Streams.churnSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.churnView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("churn_rate")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // redelivery honesty: presence is idempotent — refolding is a no-op
-    val refolded = graft.streaming.Streams.churnMerge(state,
-      graft.ops.Events.churnGrid(timeSplitChunks(ev).head))
-    canon(graft.streaming.Streams.churnView(refolded).collect()) shouldBe streamed
-  }
+    fold("file-source rank sink: tie-group grid fold over hash-split event batches equals the batch rank family",
+      EventLog, Hash, "day TIMESTAMP, cents BIGINT, c_a BIGINT, c_b BIGINT")(Streams.rank,
+      on("eval_auc", s => Stats.aucView(Stats.rankStats(s))),
+      on("ab_ranksum", s => Stats.ranksumView(Stats.rankStats(s))),
+      on("ab_ks_test", s => Stats.ksView(Stats.rankStats(s)))),
+    fold("file-source survival sink: (min, min, max) user-grid fold over time-split event batches equals the batch survival_hazard",
+      EventLog, Time, "user_id BIGINT, first_day DATE, conv_day DATE, last_day DATE")(Streams.survival,
+      on("survival_hazard", Stats.survivalView)).also(r => // right-censoring carried
+      positive(r.states.head.filter(col("conv_day").isNull).count())),
+    // a gap SPANNING a cut only exists through the carried last event
+    fold("file-source interarrival sink: last-event + gap-grid ordered fold over time-split event batches equals the batch event_interarrival",
+      EventLog, Time, "event_type STRING, bucket STRING, n_gaps BIGINT, min_us BIGINT, max_us BIGINT, sum_us BIGINT",
+      "user_id BIGINT, event_type STRING, ts TIMESTAMP")(Streams.interarrival,
+      on("event_interarrival", Events.interarrivalView)).also(r => // one row per live key
+      r.states(1).groupBy("user_id", "event_type").count().filter(col("count") > 1).count() shouldBe 0L),
+    fold("file-source SRM sink: day-grid fold over hash-split event batches equals the batch ab_srm",
+      EventLog, Hash, "day TIMESTAMP, n_a BIGINT, n_b BIGINT")(Streams.srm,
+      on("ab_srm", Stats.srmView), on("rolling_corr", Stats.corrView)),
+    fold("file-source bollinger sink: 7-row band-ring fold over time-split batches equals the batch win_bollinger",
+      EventLog, Time, "event_id BIGINT, user_id BIGINT, cents BIGINT, mean_cents DOUBLE, std_cents DOUBLE, outlier BOOLEAN",
+      "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, cents BIGINT")(Streams.boll,
+      on("win_bollinger", identity)),
+    fold("file-source CUPED sink: user-grid fold over time-split event batches equals the batch ab_cuped",
+      EventLog, Time, "user_id BIGINT, x BIGINT, y BIGINT")(Streams.cuped, on("ab_cuped", Stats.cupedView)),
+    // the global decile EDGES shift with every batch
+    fold("file-source score sink: tie-grid fold over hash-split event batches equals the batch calibration_table AND gains_table",
+      EventLog, Hash, "cents BIGINT, c_neg BIGINT, c_pos BIGINT")(Streams.score,
+      on("calibration_table", Stats.calibView), on("gains_table", Stats.gainsView)),
+    fold("file-source bootstrap sink: replicate-grid fold over hash-split event batches equals the batch bootstrap_ci",
+      EventLog, Hash, "event_type STRING, b INT, sw BIGINT, swx BIGINT")(Streams.boot,
+      on("bootstrap_ci", Stats.bootView)),
+    // a batch-2 purchase's 7-day lookback reaches into batch 1
+    fold("file-source attribution sink: 64-click recency-ring fold over time-split batches equals the batch attribution_time_decay",
+      EventLog, Time, "purchase_id BIGINT, user_id BIGINT, click_id BIGINT, age_days BIGINT, w BIGINT, credit_bp BIGINT",
+      "click_id BIGINT, c_uid BIGINT, cts TIMESTAMP")(Streams.attr,
+      on("attribution_time_decay", identity)).also(r => // ≤64 carried clicks per user
+      r.states(1).groupBy("c_uid").count().filter(col("count") > 64).count() shouldBe 0L),
+    fold("file-source power sink: moment-grid fold over hash-split event batches equals the batch ab_power",
+      EventLog, Hash, "event_type STRING, n BIGINT, sx BIGINT, sxx DECIMAL(38,0)")(Streams.power,
+      on("ab_power", Stats.powerView)),
+    fold("file-source churn sink: presence-grid fold over time-split event batches equals the batch churn_rate",
+      EventLog, Time, "user_id BIGINT, week TIMESTAMP")(Streams.churn,
+      on("churn_rate", Events.churnView)).also(redelivered),
+    // a shingle's first-entry doc can arrive in a LATER batch than a
+    // higher-id occurrence — only the min-fold tracks it
+    fold("file-source vocab sink: entry/doc-grid fold over hash-split document batches equals the batch vocab_growth",
+      Documents, Hash, "h BIGINT, first_doc BIGINT", "doc_id BIGINT, n_tri BIGINT")(Streams.vocab,
+      on2("vocab_growth", Audit.vocabView)).also(redelivered),
+    // df stays exact because each doc lives in exactly one batch
+    fold("file-source vocab-topk sink: (w, n, df) grid fold over hash-split document batches equals the batch vocab_topk",
+      Documents, Hash, "w STRING, n BIGINT, df BIGINT")(Streams.vtopk, on("vocab_topk", Text.vocabTopView)),
+    fold("file-source dedup-index sink: digest presence fold over hash-split HISTORY batches; the new drop dedups against it like the batch dedup_incremental",
+      History, Hash, "__h STRING")(Streams.index,
+      on("dedup_incremental", Dedup.dedupIncrView(Dedup.batchLeg(docs01()), _))).also(redelivered),
+    fold("file-source boilerplate sink: df/doc-count dual fold over hash-split document batches equals the batch boilerplate_detect",
+      Documents, Hash, "source STRING, h BIGINT, df BIGINT", "source STRING, n_docs BIGINT")(Streams.boiler,
+      on2("boilerplate_detect", Audit.boilerView(docs01(), _, _))),
+    fold("file-source PII sink: per-source incidence fold over hash-split document batches equals the batch pii_report",
+      Documents, Hash, "source STRING, n_docs BIGINT, d_email BIGINT, m_email BIGINT, " +
+        "d_ip BIGINT, m_ip BIGINT, d_num BIGINT, m_num BIGINT")(Streams.pii,
+      on("pii_report", Pipeline.piiView)),
+    fold("file-source embedding-drift sink: decimal sum-grid fold over hash-split EMBEDDING batches equals the batch embed_drift",
+      Embeddings, Hash, "lang STRING, half BIGINT, pos INT, sv DECIMAL(18,7)",
+      "lang STRING, half BIGINT, n BIGINT")(Streams.driftVec, on2("embed_drift", Llm.driftView)))
 
-  test("file-source vocab sink: entry/doc-grid fold over hash-split document batches equals the batch vocab_growth") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // hash-split: the doc-id ANCHORS (hence every decile band) move with
-    // each batch, and a shingle's first-entry doc can arrive in a LATER
-    // batch than a higher-id occurrence — only the min-fold tracks it
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val (entry, docGrid) = runDualFold("docs_vocab_stream", docs, chunks,
-      "h BIGINT, first_doc BIGINT",
-      "doc_id BIGINT, n_tri BIGINT",
-      (s, rE, rD, wE, wD) => graft.streaming.Streams.vocabSink(s)(rE, rD)(wE, wD))
-    val streamed = canon(graft.streaming.Streams.vocabView(entry, docGrid).collect())
-    val batch = canon(graft.SparkEntry.queries("vocab_growth")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // redelivery honesty: both folds absorb a replayed chunk outright
-    val reE = graft.streaming.Streams.vocabEntryMerge(entry,
-      graft.ops.Audit.vocabEntryGrid(chunks.head))
-    val reD = graft.streaming.Streams.vocabDocMerge(docGrid,
-      graft.ops.Audit.vocabDocGrid(chunks.head))
-    canon(graft.streaming.Streams.vocabView(reE, reD).collect()) shouldBe streamed
-  }
+  private val staged = mutable.Map[(String, String), (Seq[DataFrame], DataFrame, Path)]()
 
-  test("file-source vocab-topk sink: (w, n, df) grid fold over hash-split document batches equals the batch vocab_topk") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // hash-split: a word's occurrences arrive across ALL batches — tf
-    // partials must SUM, and df stays exact because each doc (hence its
-    // 0/1 df contribution) lives in exactly one batch
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_vtopk_stream", docs, chunks,
-      "w STRING, n BIGINT, df BIGINT",
-      (s, r, w) => graft.streaming.Streams.vtopkSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.vtopkView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("vocab_topk")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
+  /** Drive `f.step` through [[Streams.foldSink]]. */
+  def runFold(f: Fold): Run = drive(f)((s, r, w) => Streams.foldSink(s, f.step)(r: _*)(w: _*))
 
-  test("file-source dedup-index sink: digest presence fold over hash-split HISTORY batches; the new drop dedups against it like the batch dedup_incremental") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // stream exactly the op's history leg (the ~80% salted-hash split);
-    // hash-split so duplicate texts land in DIFFERENT batches — a batch
-    // doc's killer digest may arrive in any drop, only the folded SET
-    // sees them all
-    val hist = graft.ops.Dedup.histLeg(docs).cache()
-    val chunks = (0 until 3).map(i => hist.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_dedupidx_stream", hist, chunks,
-      "__h STRING",
-      (s, r, w) => graft.streaming.Streams.indexSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.dedupIncrView(
-      graft.ops.Dedup.batchLeg(docs), state).collect())
-    val batch = canon(graft.SparkEntry.queries("dedup_incremental")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-    // redelivery honesty: the digest set is idempotent — refolding a
-    // history drop is a no-op (the contamination presence-grid argument)
-    val refolded = graft.streaming.Streams.indexMerge(state,
-      graft.ops.Dedup.dedupIndex(chunks.head))
-    canon(graft.streaming.Streams.dedupIncrView(
-      graft.ops.Dedup.batchLeg(docs), refolded).collect()) shouldBe streamed
-  }
-
-  test("file-source boilerplate sink: df/doc-count dual fold over hash-split document batches equals the batch boilerplate_detect") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    // hash-split: a shared shingle's occurrences land in DIFFERENT
-    // batches — per-batch df partials (distinct within the batch's docs)
-    // SUM to the corpus df because each doc arrives exactly once
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val (dfG, docsG) = runDualFold("docs_boiler_stream", docs, chunks,
-      "source STRING, h BIGINT, df BIGINT",
-      "source STRING, n_docs BIGINT",
-      (s, rA, rB, wA, wB) => graft.streaming.Streams.boilerSink(s)(rA, rB)(wA, wB))
-    val streamed = canon(graft.streaming.Streams.boilerView(docs, dfG, docsG).collect())
-    val batch = canon(graft.SparkEntry.queries("boilerplate_detect")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source PII sink: per-source incidence fold over hash-split document batches equals the batch pii_report") {
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
-    val chunks = (0 until 3).map(i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-    val state = runGridFold("docs_pii_stream", docs, chunks,
-      "source STRING, n_docs BIGINT, d_email BIGINT, m_email BIGINT, " +
-        "d_ip BIGINT, m_ip BIGINT, d_num BIGINT, m_num BIGINT",
-      (s, r, w) => graft.streaming.Streams.piiSink(s)(r)(w))
-    val streamed = canon(graft.streaming.Streams.piiView(state).collect())
-    val batch = canon(graft.SparkEntry.queries("pii_report")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  test("file-source embedding-drift sink: decimal sum-grid fold over hash-split EMBEDDING batches equals the batch embed_drift") {
-    val dir01 = "/root/testdata/sf0.01"
-    val emb = graft.Tables(spark, dir01, "embeddings").cache()
-    val docs = graft.Tables(spark, dir01, "documents")
-      .select(col("doc_id"), col("lang")).cache()
-    // the stream is the EMBEDDINGS table (the live encoder output);
-    // documents is the static dim side — stream-static enrichment
-    // feeding a decimal grid fold
-    val chunks = (0 until 3).map(i => emb.filter(pmod(col("vec_id"), lit(3)) === i))
-    val (sums, counts) = runDualFold("emb_drift_stream", emb, chunks,
-      "lang STRING, half BIGINT, pos INT, sv DECIMAL(18,7)",
-      "lang STRING, half BIGINT, n BIGINT",
-      (s, rS, rC, wS, wC) =>
-        graft.streaming.Streams.driftVecSink(s, docs)(rS, rC)(wS, wC))
-    val streamed = canon(graft.streaming.Streams.driftVecView(sums, counts).collect())
-    val batch = canon(graft.SparkEntry.queries("embed_drift")(spark, dir01).collect())
-    streamed shouldBe batch
-    streamed should not be empty
+  /** Drive `sink` over the staged chunks of (input, split) — staged once
+    * per pair: seeds an empty v0 per state, folds one micro-batch per
+    * file, asserts every chunk produced a batch and a state version per
+    * state. */
+  def drive(f: Fold)(sink: (DataFrame, Seq[() => DataFrame], Seq[DataFrame => Unit]) =>
+      DataStreamWriter[Row]): Run = {
+    val (chunks, src, dir) = staged.synchronized(staged.getOrElseUpdate(
+      (f.input.name, f.split.name), {
+        val t = f.input.load(Dir01).cache()
+        val cs = f.split.cut(t, f.input.id)
+        (cs, t, stageChunks(s"${f.input.name}_${f.split.name}_stream", cs))
+      }))
+    val roots = f.ddls.map { ddl =>
+      val root = Files.createTempDirectory("fold_state").toString
+      val schema = StructType.fromDDL(ddl)
+      spark.createDataFrame(new java.util.ArrayList[Row](), schema).write.parquet(s"$root/v0")
+      (root, schema)
+    }
+    val v = Array.fill(roots.size)(0)
+    def read(i: Int, version: Int) = spark.read.schema(roots(i)._2).parquet(s"${roots(i)._1}/v$version")
+    val q = sink(f.input.prep(Dir01)(fileStream(src, dir)),
+      roots.indices.map(i => () => read(i, v(i))),
+      roots.indices.map(i => (df: DataFrame) => {
+        df.write.mode("overwrite").parquet(s"${roots(i)._1}/v${v(i) + 1}"); v(i) += 1
+      })).start()
+    try {
+      q.processAllAvailable()
+      q.recentProgress.count(_.numInputRows > 0) should be >= chunks.length
+    } finally q.stop()
+    all(v.toSeq) should be >= chunks.length
+    Run(f, roots.indices.map(i => read(i, v(i))), at => roots.indices.map(read(_, at)), chunks)
   }
 }

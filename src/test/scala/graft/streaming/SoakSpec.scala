@@ -1,19 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
 /** Long-run soak for the streaming-twin discipline (r12 verdict item 4):
   * the per-twin state-size arguments are proven by SHORT parity drives
-  * (3–5 micro-batches) everywhere else; this spec runs one production-
-  * shaped twin — piiSink, the per-source PII incidence monitor — over
-  * 100 REAL sequential micro-batches (readStream, one file per trigger,
+  * (3–5 micro-batches) everywhere else; this spec runs production-shaped
+  * twins — the per-source PII incidence monitor, the t-test moments and
+  * the Benford digit grid — over 100 REAL sequential micro-batches (readStream, one file per trigger,
   * versioned parquet state) and turns two per-twin CLAIMS into
   * measurements:
   *
-  *  1. State stays bounded by the declared grid (≤ |sources| rows) at
+  *  1. State stays bounded by the declared grid (e.g. ≤ |sources| rows) at
   *     EVERY batch cut, not just the final one — a fold that leaked rows
   *     per batch (e.g. a bad merge key) would grow linearly and a 3-batch
   *     drive could miss it.
@@ -26,41 +30,27 @@ import graft.SparkSpec
   * op bit-for-bit.
   */
 class SoakSpec extends SparkSpec {
+  import FileStreamParitySpec.{Dir01, stageChunks}
 
-  private def canon(rows: Array[org.apache.spark.sql.Row]): Set[Seq[Any]] =
-    rows.map(_.toSeq).toSet
+  private def canon(rows: Array[Row]): Set[Seq[Any]] = rows.map(_.toSeq).toSet
+  private def batchOp(op: String) = canon(graft.SparkEntry.queries(op)(spark, Dir01).collect())
 
-  test("soak: piiSink over 100 real micro-batches — state bounded every cut, per-batch cost flat, final fold equals batch op") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.StructType
-
-    val dir01 = "/root/testdata/sf0.01"
-    val docs = graft.Tables(spark, dir01, "documents").cache()
+  /** Drive `sink` over 100 hash-split micro-batches of `table` (one staged
+    * file per trigger, versioned parquet state), assert the state stayed
+    * within `bound` rows at EVERY cut and the per-batch cost stayed flat,
+    * and return the final state. */
+  private def soak(table: String, id: String, stateDdl: String, bound: DataFrame => Long,
+      sink: (DataFrame, () => DataFrame, DataFrame => Unit) => DataStreamWriter[Row]): DataFrame = {
+    val src = graft.Tables(spark, Dir01, table).cache()
     val nBatches = 100
-    val chunks = (0 until nBatches)
-      .map(i => docs.filter(pmod(col("doc_id"), lit(nBatches)) === i))
-
-    // stage one parquet file per micro-batch, mtime-ordered
-    val staged = Files.createTempDirectory("pii_soak")
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = Files.createTempDirectory(s"pii_soak_chunk$i")
-      chunk.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val dest = staged.resolve(s"chunk$i.parquet")
-      Files.copy(Paths.get(part), dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1755000000000L + i * 60000))
-    }
-
-    val stateDdl = "source STRING, n_docs BIGINT, d_email BIGINT, " +
-      "m_email BIGINT, d_ip BIGINT, m_ip BIGINT, d_num BIGINT, m_num BIGINT"
+    val staged = stageChunks(s"${table}_soak",
+      (0 until nBatches).map(i => src.filter(pmod(col(id), lit(nBatches)) === i)))
     val stateSchema = StructType.fromDDL(stateDdl)
-    val stateRoot = Files.createTempDirectory("pii_soak_state").toString
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      stateSchema).write.parquet(s"$stateRoot/v0")
+    val stateRoot = Files.createTempDirectory(s"${table}_soak_state").toString
+    spark.createDataFrame(new java.util.ArrayList[Row](), stateSchema)
+      .write.parquet(s"$stateRoot/v0")
 
-    val stateBound = docs.select("source").distinct().count()
+    val stateBound = bound(src)
     val batchMs = scala.collection.mutable.ArrayBuffer[Double]()
     val stateRows = scala.collection.mutable.ArrayBuffer[Long]()
     var v = 0
@@ -76,13 +66,13 @@ class SoakSpec extends SparkSpec {
         .parquet(s"$stateRoot/v$v").count()
     }
 
-    val stream = spark.readStream.schema(docs.schema)
+    val stream = spark.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = Streams.piiSink(stream)(readState _)(writeState).start()
+    val q = sink(stream, readState _, writeState).start()
     try q.processAllAvailable() finally q.stop()
 
     v shouldBe nBatches
-    // 1. bounded at EVERY cut — never more rows than source lanes
+    // 1. bounded at EVERY cut — never more rows than the declared grid
     stateRows.max should be <= stateBound
     // 2. flat per-batch cost: median of the last 20 folds vs the median
     //    of folds 11–30 (post-warmup). 2x + absolute slack absorbs
@@ -94,152 +84,48 @@ class SoakSpec extends SparkSpec {
     withClue(s"early median ${early}ms, late median ${late}ms: ") {
       late should be <= (2 * early + 250)
     }
+    spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
+  }
+
+  test("soak: piiSink over 100 real micro-batches — state bounded every cut, per-batch cost flat, final fold equals batch op") {
+    // the state never exceeds one row per source lane
+    val state = soak("documents", "doc_id", "source STRING, n_docs BIGINT, d_email BIGINT, " +
+        "m_email BIGINT, d_ip BIGINT, m_ip BIGINT, d_num BIGINT, m_num BIGINT",
+      _.select("source").distinct().count(),
+      (s, r, w) => Streams.foldSink(s, Streams.pii)(r)(w))
     // 3. the completed fold IS the batch op
-    val streamed = canon(Streams.piiView(
-      spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")).collect())
-    val batch = canon(graft.SparkEntry.queries("pii_report")(spark, dir01).collect())
-    streamed shouldBe batch
+    val streamed = canon(graft.ops.Pipeline.piiView(state).collect())
+    streamed shouldBe batchOp("pii_report")
     streamed should not be empty
   }
 
   test("soak: ttestSink over 100 real micro-batches — day-grid state bounded every cut, flat cost, BOTH monitors equal their batch ops") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.StructType
-
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val nBatches = 100
-    val chunks = (0 until nBatches)
-      .map(i => ev.filter(pmod(col("event_id"), lit(nBatches)) === i))
-
-    val staged = Files.createTempDirectory("ttest_soak")
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = Files.createTempDirectory(s"ttest_soak_chunk$i")
-      chunk.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val dest = staged.resolve(s"chunk$i.parquet")
-      Files.copy(Paths.get(part), dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1755000000000L + i * 60000))
-    }
-
-    val stateDdl = "day TIMESTAMP, n_a BIGINT, sx_a DECIMAL(38,2), " +
-      "sxx_a DECIMAL(38,4), n_b BIGINT, sx_b DECIMAL(38,2), sxx_b DECIMAL(38,4)"
-    val stateSchema = StructType.fromDDL(stateDdl)
-    val stateRoot = Files.createTempDirectory("ttest_soak_state").toString
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      stateSchema).write.parquet(s"$stateRoot/v0")
-
     // the moment grid is keyed by day: the table's distinct days bound it
-    val stateBound = ev.select(to_date(col("ts"))).distinct().count()
-    val batchMs = scala.collection.mutable.ArrayBuffer[Double]()
-    val stateRows = scala.collection.mutable.ArrayBuffer[Long]()
-    var v = 0
-    var tBatch = 0L
-    def readState(): DataFrame = {
-      tBatch = System.nanoTime()
-      spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    }
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-      batchMs += (System.nanoTime() - tBatch) / 1e6
-      stateRows += spark.read.schema(stateSchema)
-        .parquet(s"$stateRoot/v$v").count()
-    }
-
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = Streams.ttestSink(stream)(readState _)(writeState).start()
-    try q.processAllAvailable() finally q.stop()
-
-    v shouldBe nBatches
-    stateRows.max should be <= stateBound
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val early = median(batchMs.slice(10, 30).toSeq)
-    val late = median(batchMs.takeRight(20).toSeq)
-    withClue(s"early median ${early}ms, late median ${late}ms: ") {
-      late should be <= (2 * early + 250)
-    }
+    val state = soak("events", "event_id", "day TIMESTAMP, n_a BIGINT, sx_a DECIMAL(38,2), " +
+        "sxx_a DECIMAL(38,4), n_b BIGINT, sx_b DECIMAL(38,2), sxx_b DECIMAL(38,4)",
+      _.select(to_date(col("ts"))).distinct().count(),
+      (s, r, w) => Streams.ttestSink(s)(r)(w))
     // one soaked state, BOTH monitors: the Welch table and the
     // peeking-safe sequential boundary both equal their batch ops
-    val state = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    canon(Streams.ttestView(state).collect()) shouldBe
-      canon(graft.SparkEntry.queries("ab_ttest")(spark, dir01).collect())
-    val seq = canon(Streams.seqView(state).collect())
-    seq shouldBe canon(graft.SparkEntry.queries("ab_sequential")(spark, dir01).collect())
+    canon(Streams.ttestView(state).collect()) shouldBe batchOp("ab_ttest")
+    val seq = canon(graft.ops.Stats.seqView(state).collect())
+    seq shouldBe batchOp("ab_sequential")
     seq should not be empty
   }
 
   test("soak: benfordSink over 100 real micro-batches — digit-grid state bounded every cut, flat cost, ALL THREE monitors equal their batch ops") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.StructType
-
-    val dir01 = "/root/testdata/sf0.01"
-    val ev = graft.Tables(spark, dir01, "events").cache()
-    val nBatches = 100
-    val chunks = (0 until nBatches)
-      .map(i => ev.filter(pmod(col("event_id"), lit(nBatches)) === i))
-
-    val staged = Files.createTempDirectory("benford_soak")
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = Files.createTempDirectory(s"benford_soak_chunk$i")
-      chunk.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val dest = staged.resolve(s"chunk$i.parquet")
-      Files.copy(Paths.get(part), dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1755000000000L + i * 60000))
-    }
-
-    val stateDdl = "event_type STRING, digit INT, digit2 INT, n_obs BIGINT"
-    val stateSchema = StructType.fromDDL(stateDdl)
-    val stateRoot = Files.createTempDirectory("benford_soak_state").toString
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      stateSchema).write.parquet(s"$stateRoot/v0")
-
     // the two-digit grid is keyed (type, d1 ∈ 1..9, d2 ∈ 0..9 ∪ NULL):
     // ≤ 99 cells per event type regardless of stream length
-    val stateBound = ev.select("event_type").distinct().count() * 99
-    val batchMs = scala.collection.mutable.ArrayBuffer[Double]()
-    val stateRows = scala.collection.mutable.ArrayBuffer[Long]()
-    var v = 0
-    var tBatch = 0L
-    def readState(): DataFrame = {
-      tBatch = System.nanoTime()
-      spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    }
-    def writeState(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$stateRoot/v${v + 1}"); v += 1
-      batchMs += (System.nanoTime() - tBatch) / 1e6
-      stateRows += spark.read.schema(stateSchema)
-        .parquet(s"$stateRoot/v$v").count()
-    }
-
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged.toString)
-    val q = Streams.benfordSink(stream)(readState _)(writeState).start()
-    try q.processAllAvailable() finally q.stop()
-
-    v shouldBe nBatches
-    stateRows.max should be <= stateBound
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val early = median(batchMs.slice(10, 30).toSeq)
-    val late = median(batchMs.takeRight(20).toSeq)
-    withClue(s"early median ${early}ms, late median ${late}ms: ") {
-      late should be <= (2 * early + 250)
-    }
+    val state = soak("events", "event_id", "event_type STRING, digit INT, digit2 INT, n_obs BIGINT",
+      _.select("event_type").distinct().count() * 99,
+      (s, r, w) => Streams.foldSink(s, Streams.benford)(r)(w))
     // one soaked grid, THREE monitors: first-digit chi2, second-digit
     // chi2, and the size-invariant Nigrini MAD — all from state the
     // stream already carries, all bit-equal to their batch ops
-    val state = spark.read.schema(stateSchema).parquet(s"$stateRoot/v$v")
-    canon(Streams.benfordView(state).collect()) shouldBe
-      canon(graft.SparkEntry.queries("benford_audit")(spark, dir01).collect())
-    canon(Streams.benfordSecondView(state).collect()) shouldBe
-      canon(graft.SparkEntry.queries("benford_second")(spark, dir01).collect())
-    val mad = canon(Streams.benfordMadView(state).collect())
-    mad shouldBe canon(graft.SparkEntry.queries("benford_mad")(spark, dir01).collect())
+    canon(graft.ops.Audit.benfordView(state).collect()) shouldBe batchOp("benford_audit")
+    canon(graft.ops.Audit.benfordSecondView(state).collect()) shouldBe batchOp("benford_second")
+    val mad = canon(graft.ops.Audit.benfordMadView(state).collect())
+    mad shouldBe batchOp("benford_mad")
     mad should not be empty
   }
 }
