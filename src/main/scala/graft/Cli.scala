@@ -2,17 +2,19 @@ package graft
 
 import java.io.PrintStream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
-import graft.engine.{Catalog, Etl, Sources, Transforms}
+import graft.engine.{Endpoint, Etl, Sources, Transforms}
 
 /** Interactive console front-end — user-facing parity with the reference's
   * prompt-driven ETL flow (reference: src/etl/ETLProcess.java:29-53 main
   * flow, :77-140 source/destination pickers, :313-386 mapping + transform
-  * dialogs), driving the library modules the engine already exposes:
-  * [[Catalog]] for discovery, [[Etl]] for mapping/transforms, [[Sinks]] for
-  * load semantics. The console collects a DESCRIPTION of the pipeline; the
-  * execution is still one lazy Spark plan — nothing is row-at-a-time.
+  * dialogs). One dialog talks to two [[graft.engine.Endpoint]]s — parquet
+  * directories or live JDBC databases — for discovery and load, and uses
+  * [[Etl]] for mapping/transforms. The console collects a DESCRIPTION of
+  * the pipeline; the execution is still Spark plans — nothing is
+  * row-at-a-time.
   *
   * Testability: [[Cli.run]] takes the input lines and output stream as
   * parameters, so a scripted-stdin test can walk the whole dialog; `main`
@@ -37,6 +39,10 @@ object Cli {
         case Some(n) => n
         case None    => out.println("Not a number."); readInt(prompt)
       }
+    def list(title: String, items: Seq[String]): Unit = {
+      out.println(title)
+      items.foreach(i => out.println(s"- $i"))
+    }
   }
 
   /** Re-prompt until the name is a known table (R17 validation parity,
@@ -51,29 +57,32 @@ object Cli {
     }
   }
 
+  private def chooseTable(io: Io, end: Endpoint, role: String): String = {
+    val tables = end.tables
+    io.list("Available tables:", tables)
+    pickTable(io, tables, role)
+  }
+
   /** Source configuration (reference :77-89): raw SQL or table+columns. */
-  private def configureSource(io: Io, spark: SparkSession, dir: String): DataFrame = {
+  private def configureSource(io: Io, src: Endpoint): DataFrame = {
     io.out.println("=== SOURCE CONFIGURATION ===")
     io.out.println("1. Enter a SQL query")
     io.out.println("2. Pick a source table")
     // any value other than 1 falls through to the table picker — reference
     // parity (ETLProcess.java:82-89 does `if (opcion == 1) ... else ...`)
     if (io.readInt("Option: ") == 1) {
-      // raw SQL pass-through (R2, reference :84-86): Spark SQL executes it
-      Catalog.sql(spark, dir, io.readLine("SQL> "))
+      // raw SQL pass-through (R2, reference :84-86), run by the source
+      src.query(io.readLine("SQL> "))
     } else {
-      val tables = Catalog.listTables(dir)
-      io.out.println("Available tables:")
-      tables.foreach(t => io.out.println(s"- $t"))
-      val table = pickTable(io, tables, "source")
-      val cols = Catalog.listColumns(spark, dir, table)
-      io.out.println(s"Columns in '$table':")
-      cols.foreach(c => io.out.println(s"- $c"))
+      val table = chooseTable(io, src, "source")
+      val full = src.table(table)
+      val cols = full.columns.toSeq
+      io.list(s"Columns in '$table':", cols)
       val picked = io.readLine("Columns to export (comma-separated): ")
         .split(",").map(_.trim).filter(cols.contains).toSeq
       // no valid column is a hard error, not a re-prompt (reference :122-124)
       if (picked.isEmpty) throw new IllegalArgumentException("No valid columns selected.")
-      Tables(spark, dir, table).select(picked.map(org.apache.spark.sql.functions.col): _*)
+      full.select(picked.map(col): _*)
     }
   }
 
@@ -122,125 +131,54 @@ object Cli {
     }.toMap
   }
 
-  /** Walk the full dialog and return the loaded result (lazily planned;
-    * the caller decides when to materialize). */
-  def run(spark: SparkSession, dir: String, input: Iterator[String],
+  /** A distributed last-writer-wins merge needs an explicit ordering column
+    * (SURVEY §7.4) where the reference relied on arrival order. */
+  @annotation.tailrec
+  private def askOrder(io: Io, cols: Seq[String]): String = {
+    val c = io.readLine(s"Ordering column for last-writer-wins (${cols.mkString(", ")}): ")
+    if (cols.contains(c)) c
+    else { io.out.println(s"'$c' is not a mapped column."); askOrder(io, cols) }
+  }
+
+  /** Walk the full dialog from `src` to `dst` and return the loaded result:
+    * keyed upsert when the destination has a primary key (:198-201),
+    * whole-row insert-if-absent otherwise (:202-206,444-466). See
+    * [[graft.engine.Endpoint]] for what a load does to each storage. */
+  def run(src: Endpoint, dst: Endpoint, input: Iterator[String],
       out: PrintStream): DataFrame = {
     val io = new Io(input, out)
-    val source = configureSource(io, spark, dir)
+    val source = configureSource(io, src)
 
     out.println("=== DESTINATION CONFIGURATION ===")
-    val tables = Catalog.listTables(dir)
-    io.out.println("Available tables:")
-    tables.foreach(t => io.out.println(s"- $t"))
-    val dest = pickTable(io, tables, "destination")
-    val destCols = Catalog.listColumns(spark, dir, dest)
-    val pks = Catalog.mergeKeys.getOrElse(dest, Nil)
-
-    val mapping = mapColumns(io, source, destCols, pks)
-    val etl = Etl(source).mapColumns(mapping, pks) // PK hard error lives here
-    val transformed = etl.transform(askTransforms(io, mapping.map(_._2)))
-
-    // Load against the mapped slice of the destination (the reference's
-    // INSERT/UPDATE also touches only mapped columns, :388-427,444-466).
-    val existing = Tables(spark, dir, dest)
-      .select(mapping.map(m => org.apache.spark.sql.functions.col(m._2)): _*)
+    val dest = chooseTable(io, dst, "destination")
+    val pks = dst.keys(dest)
+    val mapping = mapColumns(io, source, dst.table(dest).columns.toSeq, pks)
+    val mapped = mapping.map(_._2)
+    val rows = Etl(source).mapColumns(mapping, pks) // PK hard error lives here
+      .transform(askTransforms(io, mapped)).result
     val result =
-      if (pks.nonEmpty) {
-        // a distributed last-writer-wins merge needs an explicit ordering
-        // column (SURVEY §7.4) where the reference relied on arrival order
-        @annotation.tailrec
-        def askOrder(): String = {
-          val c = io.readLine(s"Ordering column for last-writer-wins (${mapping.map(_._2).mkString(", ")}): ")
-          if (mapping.exists(_._2 == c)) c
-          else { out.println(s"'$c' is not a mapped column."); askOrder() }
-        }
-        transformed.loadUpsert(existing, pks, askOrder())
-      } else transformed.loadInsertIfAbsent(existing)
+      if (pks.nonEmpty) dst.upsert(rows, dest, pks, askOrder(io, mapped))
+      else dst.insertIfAbsent(rows, dest)
     out.println(s"ETL complete. Loaded into '$dest'.")
     result
   }
 
-  /** JDBC-mode dialog — the reference's ACTUAL runtime shape: both ends are
-    * live database connections from config.properties (ETLProcess.java:13-26),
-    * discovery is `DatabaseMetaData` (:142-159 tables, :290-300 PKs), and the
-    * load is keyed upsert when the destination declares a PK (:198-206),
-    * full-row insert-if-absent otherwise (:444-466). Same mapping/transform
-    * dialogs as parquet mode — only the endpoints differ. */
-  def runJdbc(spark: SparkSession, src: Sources.JdbcConfig,
-      dst: Sources.JdbcConfig, input: Iterator[String],
-      out: PrintStream): DataFrame = {
-    val io = new Io(input, out)
-    out.println("=== SOURCE CONFIGURATION ===")
-    out.println("1. Enter a SQL query")
-    out.println("2. Pick a source table")
-    val source =
-      if (io.readInt("Option: ") == 1) {
-        // raw SQL pushed to the SOURCE database verbatim (R2, :84-86)
-        Sources.jdbcQuery(spark, src, io.readLine("SQL> "))
-      } else {
-        val tables = Sources.listJdbcTables(src)
-        out.println("Available tables:")
-        tables.foreach(t => out.println(s"- $t"))
-        val table = pickTable(io, tables, "source")
-        val full = Sources.jdbcTable(spark, src, table)
-        val cols = full.columns.toSeq
-        out.println(s"Columns in '$table':")
-        cols.foreach(c => out.println(s"- $c"))
-        val picked = io.readLine("Columns to export (comma-separated): ")
-          .split(",").map(_.trim).filter(cols.contains).toSeq
-        if (picked.isEmpty) throw new IllegalArgumentException("No valid columns selected.")
-        full.select(picked.map(org.apache.spark.sql.functions.col): _*)
-      }
-
-    out.println("=== DESTINATION CONFIGURATION ===")
-    val tables = Sources.listJdbcTables(dst)
-    out.println("Available tables:")
-    tables.foreach(t => out.println(s"- $t"))
-    val dest = pickTable(io, tables, "destination")
-    val destCols = Sources.jdbcTable(spark, dst, dest).columns.toSeq
-    val pks = Sources.jdbcPrimaryKeys(dst, dest)
-
-    val mapping = mapColumns(io, source, destCols, pks)
-    val etl = Etl(source).mapColumns(mapping, pks)
-    val transformed = etl.transform(askTransforms(io, mapping.map(_._2)))
-
-    if (pks.nonEmpty) {
-      @annotation.tailrec
-      def askOrder(): String = {
-        val c = io.readLine(s"Ordering column for last-writer-wins (${mapping.map(_._2).mkString(", ")}): ")
-        if (mapping.exists(_._2 == c)) c
-        else { out.println(s"'$c' is not a mapped column."); askOrder() }
-      }
-      Sources.jdbcUpsert(transformed.result, dst, dest, pks, askOrder())
-    } else {
-      // no-PK destinations get the reference's insert-with-verification
-      // (construirInsertConVerificacion, :444-466): only rows not already
-      // present whole-row land, so rerunning a dialog never duplicates
-      Sources.jdbcInsertIfAbsent(spark, transformed.result, dst, dest)
-    }
-    out.println(s"ETL complete. Loaded into '$dest'.")
-    Sources.jdbcTable(spark, dst, dest)
-  }
-
   def main(args: Array[String]): Unit = {
-    val spark = Graft.configure(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.nonEmpty, "usage: graft.Cli <dataDir | config.properties>")
+    val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
     spark.sparkContext.setLogLevel("WARN")
     // a .properties argument selects JDBC mode (the reference's entry
     // point); anything else is a parquet data dir
-    val result = args.headOption match {
-      case Some(p) if p.endsWith(".properties") =>
+    val (src, dst) = args.head match {
+      case p if p.endsWith(".properties") =>
         val props = Sources.loadProperties(p)
-        runJdbc(spark, Sources.jdbcConfig(props, "origen"),
-          Sources.jdbcConfig(props, "destino"),
-          scala.io.Source.stdin.getLines(), System.out)
-      case other =>
-        run(spark, other.getOrElse("/root/testdata/sf0.001"),
-          scala.io.Source.stdin.getLines(), System.out)
+        (Endpoint.Jdbc(spark, Sources.jdbcConfig(props, "origen")),
+          Endpoint.Jdbc(spark, Sources.jdbcConfig(props, "destino")))
+      case dir =>
+        val lake = Endpoint.Parquet(spark, dir)
+        (lake, lake)
     }
+    val result = run(src, dst, scala.io.Source.stdin.getLines(), System.out)
     // materialize + show a sample, like the reference's completion report
     System.out.println(s"Rows: ${result.count()}")
     result.show(10, truncate = false)

@@ -46,9 +46,6 @@ final case class Etl(df: DataFrame) {
     Etl(df.select(out: _*))
   }
 
-  /** Load with append semantics (no existence check). */
-  def loadAppend(existing: DataFrame): DataFrame = Sinks.append(existing, df)
-
   /** Load with insert-if-not-exists semantics (no-PK path, reference R14). */
   def loadInsertIfAbsent(existing: DataFrame): DataFrame =
     Sinks.insertIfAbsent(existing, df)

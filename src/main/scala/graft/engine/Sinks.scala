@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * shuffle is the join/window on the merge key, and whose write goes through
   * Spark's task-commit protocol (all-or-nothing per job vs. the reference's
   * partially-committed batches).
+  *
+  * The two load rules — [[lastWriter]] and [[absentRows]] — live here only;
+  * the JDBC loads ([[Sources.jdbcUpsert]], [[Sources.jdbcInsertIfAbsent]])
+  * select their rows with the same two functions and add only the commit.
   */
 object Sinks {
 
@@ -20,37 +24,55 @@ object Sinks {
   def append(existing: DataFrame, incoming: DataFrame): DataFrame =
     existing.unionByName(incoming)
 
-  /** Insert-if-not-exists — parity with `construirInsertConVerificacion`
-    * (reference: src/etl/ETLProcess.java:202-206,444-466): each incoming row
-    * is inserted only if no destination row matches on ALL mapped columns
-    * (whole-row match, not key-based — SURVEY §2.C #6).
+  /** The upsert rule: each key's last incoming row, ordered by `orderCol`.
+    * The reference's per-row loop re-updates, so later rows win; a
+    * distributed batch has no arrival order, so it needs an explicit
+    * ordering column (SURVEY §7.4). Ties on `orderCol` are broken by every
+    * remaining column, so the winner does not depend on partition/task
+    * order. */
+  def lastWriter(incoming: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
+    val tiebreak = incoming.columns.toSeq
+      .filterNot(c => c == orderCol || keys.contains(c)).map(col(_).desc)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(orderCol).desc +: tiebreak: _*)
+    incoming
+      .withColumn("__graft_rn", row_number().over(w))
+      .filter(col("__graft_rn") === 1)
+      .drop("__graft_rn")
+  }
+
+  /** The insert-if-absent rule — `construirInsertConVerificacion`
+    * (reference: src/etl/ETLProcess.java:202-206,444-466): an incoming row
+    * lands only if no destination row matches it on ALL columns (whole-row,
+    * not key-based — SURVEY §2.C #6). `existing = None` is a first load.
     *
-    * Distributed form: whole-row left-anti join + union. The reference's
-    * sequential per-row check also makes a duplicate row *within* the batch
-    * insert only once (the second occurrence sees the first); `dropDuplicates`
-    * on incoming reproduces that.
+    * The reference's sequential check also makes a duplicate row *within*
+    * the batch land only once (the second occurrence sees the first);
+    * `dropDuplicates` reproduces that.
     *
     * Null caveat (documented divergence): T-SQL `col = ?` never matches NULL,
     * so the reference re-inserts null-bearing duplicates; the equi-anti-join
     * matches that (null join keys never match), but `dropDuplicates` is
-    * null-safe and would collapse two identical null-bearing incoming rows.
+    * null-safe and collapses two identical null-bearing incoming rows.
     *
     * Scale: the anti-join shuffles both sides by all columns' hash; with a
     * bounded destination it is broadcastable — Catalyst/AQE decides.
     */
-  def insertIfAbsent(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val cols = existing.columns.toSeq
-    existing.unionByName(
-      incoming.dropDuplicates(cols).join(existing, cols, "left_anti"))
+  def absentRows(incoming: DataFrame, existing: Option[DataFrame]): DataFrame = {
+    val cols = existing.fold(incoming.columns)(_.columns).toSeq
+    val once = incoming.dropDuplicates(cols)
+    existing.fold(once)(once.join(_, cols, "left_anti"))
   }
+
+  /** Insert-if-not-exists: the destination plus its [[absentRows]]. */
+  def insertIfAbsent(existing: DataFrame, incoming: DataFrame): DataFrame =
+    existing.unionByName(absentRows(incoming, Some(existing)))
 
   /** Keyed upsert — parity with the PK path `construirUpsertSQL`
     * (reference: src/etl/ETLProcess.java:198-201,388-427): UPDATE non-key
-    * columns on key match, INSERT otherwise. Within a batch later rows win
-    * (the per-row loop re-updates), so batch semantics are last-writer-wins
-    * per key, ordered by `orderCol` (SURVEY §7.4 determinism note: the
-    * reference's "later" is arrival order; a distributed merge needs an
-    * explicit ordering column).
+    * columns on key match, INSERT otherwise, with each key's incoming row
+    * chosen by [[lastWriter]]. `orderCol` may be batch-only metadata: the
+    * final `select` keeps only the destination's columns.
     *
     * Scale: one window shuffle on the key to pick each key's last incoming
     * row, one anti-join shuffle to drop overwritten existing rows. Both hash
@@ -58,22 +80,8 @@ object Sinks {
     */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
              orderCol: String): DataFrame = {
-    // Deterministic tiebreak: when two incoming rows for the same key tie on
-    // orderCol, order by every remaining column so last-writer-wins does not
-    // depend on partition/task order (SURVEY §7.4).
-    val tiebreak = incoming.columns.toSeq
-      .filterNot(c => c == orderCol || keys.contains(c)).map(col(_).desc)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(orderCol).desc +: tiebreak: _*)
-    // orderCol may itself be a destination column (e.g. updated_at): drop it
-    // only when the destination schema doesn't carry it.
-    val dropCols = "__graft_rn" +:
-      (if (existing.columns.contains(orderCol)) Nil else Seq(orderCol))
-    val lastWriter = incoming
-      .withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") === 1)
-      .drop(dropCols: _*)
-    existing.join(lastWriter, keys, "left_anti")
-      .unionByName(lastWriter.select(existing.columns.map(col).toSeq: _*))
+    val last = lastWriter(incoming, keys, orderCol)
+    existing.join(last, keys, "left_anti")
+      .unionByName(last.select(existing.columns.map(col).toSeq: _*))
   }
 }

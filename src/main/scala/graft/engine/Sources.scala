@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 
 /** Source/sink construction — the engine's equivalents of the reference's
-  * JDBC-to-JDBC endpoints plus the parquet endpoints the harness exercises.
+  * JDBC-to-JDBC endpoints plus the file-format reads and layout writes.
   *
   * The reference opens two SQL Server connections from config and streams a
   * query result row-by-row (reference: src/etl/ETLProcess.java:13-26,66-75,
@@ -11,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
   * DataFrames: a JDBC read becomes a partitioned parallel scan (predicate
   * pushdown included), and the 1000-row write batching maps onto the JDBC
   * writer's `batchsize` — per-executor round trips instead of a single
-  * serial connection. Parquet endpoints are the test/bench stand-ins and
-  * the native lake format at scale.
+  * serial connection. The JDBC loads take their rows from [[Sinks]]' rules
+  * and own only the commit (batched append; stage table + MERGE). Parquet
+  * tables are read through [[graft.Tables]].
   */
 object Sources {
 
@@ -47,12 +48,6 @@ object Sources {
 
   /** Match the reference's MAX_BATCH_SIZE (ETLProcess.java:210). */
   val DefaultBatchSize = 1000
-
-  def parquet(spark: SparkSession, dir: String, table: String): DataFrame =
-    graft.Tables(spark, dir, table)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** CSV/JSON endpoints — the interchange formats a complete engine needs
     * beside the columnar lake format. Explicit schema avoids the inference
@@ -152,49 +147,43 @@ object Sources {
 
   /** No-PK load with a full-row existence check THROUGH JDBC (R14): the
     * reference's no-PK path `construirInsertConVerificacion`
-    * (ETLProcess.java:444-466) inserts a row only when an identical row is
-    * not already present, so rerunning the same dialog is duplicate-free.
-    * Distributed form: read back the destination's mapped columns, whole-row
-    * left-anti join, append only the absent rows — the JDBC twin of
-    * [[Sinks.insertIfAbsent]], same semantics including the null caveat
-    * (equi-join keys never match NULL, exactly like the reference's
-    * `col = ?` probe) and the batch-internal dedup (the reference's serial
-    * loop sees earlier rows of its own batch; `dropDuplicates` reproduces
-    * that).
+    * (ETLProcess.java:444-466). The rows are [[Sinks.absentRows]] against a
+    * read of the destination's mapped columns — the rule of
+    * [[Sinks.insertIfAbsent]], null caveat included — appended in batches.
     *
     * Scale: the anti-join probe is a destination READ through the parallel
     * JDBC scan, so the existence check runs in the cluster, not row-at-a-
     * time against the database like the reference (:449 one SELECT per row). */
   def jdbcInsertIfAbsent(spark: SparkSession, df: DataFrame, cfg: JdbcConfig,
       table: String, batchSize: Int = DefaultBatchSize): Unit = {
-    val cols = df.columns.toSeq
-    val incoming = df.dropDuplicates(cols)
-    resolveJdbcTable(cfg, table) match {
-      case None => jdbcAppend(incoming, cfg, table, batchSize)
-      case Some(canonical) =>
-        val existing = jdbcTable(spark, cfg, canonical)
-          .select(cols.map(org.apache.spark.sql.functions.col): _*)
-        jdbcAppend(incoming.join(existing, cols, "left_anti"), cfg, table, batchSize)
-    }
+    val existing = withConnection(cfg)(resolveJdbcTable(_, table)).map(canonical =>
+      jdbcTable(spark, cfg, canonical).select(df.columns.map(org.apache.spark.sql.functions.col): _*))
+    jdbcAppend(Sinks.absentRows(df, existing), cfg, table, batchSize)
   }
 
-  /** One driver-side orchestration connection (DDL/MERGE only — the data
-    * itself always moves through the parallel batched writer). */
-  private def withConnection[A](cfg: JdbcConfig)(f: java.sql.Connection => A): A = {
+  /** One driver-side orchestration connection per call (metadata, DDL,
+    * MERGE — the data itself always moves through the parallel batched
+    * writer). */
+  private[engine] def withConnection[A](cfg: JdbcConfig)(f: java.sql.Connection => A): A = {
     val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
     try f(conn) finally conn.close()
   }
+
+  /** Every value of `col` in a metadata result set, which is then closed. */
+  private def strings(rs: java.sql.ResultSet, col: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    try { while (rs.next()) out += rs.getString(col) } finally rs.close()
+    out.toSeq
+  }
+
+  private def tableNames(conn: java.sql.Connection): Seq[String] =
+    strings(conn.getMetaData.getTables(null, null, "%", Array("TABLE")), "TABLE_NAME")
 
   /** Table list via `DatabaseMetaData.getTables` — the reference's source/
     * destination pickers (ETLProcess.java:142-159). Names come back in the
     * database's canonical case (Derby/SQL Server uppercase unquoted DDL). */
   def listJdbcTables(cfg: JdbcConfig): Seq[String] =
-    withConnection(cfg) { conn =>
-      val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      while (rs.next()) out += rs.getString("TABLE_NAME")
-      out.toSeq.sorted
-    }
+    withConnection(cfg)(tableNames(_).sorted)
 
   /** Escape JDBC metadata PATTERN wildcards in a literal name:
     * `getTables`/`getColumns` treat `_` as a single-char wildcard and `%`
@@ -215,44 +204,38 @@ object Sources {
     * a hard error, never a guess. Table existence is decided here, not
     * inferred from an empty column listing, so a metadata-case mismatch
     * can't silently demote an upsert to an append. */
-  private[engine] def resolveJdbcTable(cfg: JdbcConfig, table: String): Option[String] =
-    withConnection(cfg) { conn =>
-      val md = conn.getMetaData
-      def probe(cand: String): Option[String] = {
-        val rs = md.getTables(null, null, escapePattern(md, cand), Array("TABLE"))
-        try { if (rs.next()) Some(rs.getString("TABLE_NAME")) else None }
-        finally rs.close()
-      }
-      Seq(table, table.toUpperCase, table.toLowerCase).distinct
-        .iterator.map(probe).collectFirst { case Some(name) => name }
-        .orElse {
-          val rs = md.getTables(null, null, "%", Array("TABLE"))
-          val all = scala.collection.mutable.ArrayBuffer[String]()
-          try { while (rs.next()) all += rs.getString("TABLE_NAME") } finally rs.close()
-          all.filter(_.equalsIgnoreCase(table)).toSeq match {
-            case Seq(one) => Some(one)
-            case Seq()    => None
-            case many => throw new IllegalStateException(
-              s"table name '$table' matches multiple tables case-insensitively: " +
-                many.mkString(", "))
-          }
+  private[engine] def resolveJdbcTable(conn: java.sql.Connection, table: String): Option[String] = {
+    val md = conn.getMetaData
+    def probe(cand: String): Option[String] =
+      strings(md.getTables(null, null, escapePattern(md, cand), Array("TABLE")), "TABLE_NAME")
+        .headOption
+    Seq(table, table.toUpperCase, table.toLowerCase).distinct
+      .iterator.map(probe).collectFirst { case Some(name) => name }
+      .orElse {
+        tableNames(conn).filter(_.equalsIgnoreCase(table)) match {
+          case Seq(one) => Some(one)
+          case Seq()    => None
+          case many => throw new IllegalStateException(
+            s"table name '$table' matches multiple tables case-insensitively: " +
+              many.mkString(", "))
         }
-    }
+      }
+  }
 
   /** Destination primary keys via `DatabaseMetaData.getPrimaryKeys` — the
     * metadata call that decides upsert-vs-append in the reference
     * (ETLProcess.java:198-206,290-300), in key-sequence order. The name is
     * canonicalized through [[resolveJdbcTable]] first, so the caller's case
     * never decides whether a PK is visible. */
-  def jdbcPrimaryKeys(cfg: JdbcConfig, table: String): Seq[String] = {
-    val canonical = resolveJdbcTable(cfg, table).getOrElse(table)
+  def jdbcPrimaryKeys(cfg: JdbcConfig, table: String): Seq[String] =
     withConnection(cfg) { conn =>
+      val canonical = resolveJdbcTable(conn, table).getOrElse(table)
       val rs = conn.getMetaData.getPrimaryKeys(null, null, canonical)
       val out = scala.collection.mutable.ArrayBuffer[(Short, String)]()
-      while (rs.next()) out += rs.getShort("KEY_SEQ") -> rs.getString("COLUMN_NAME")
+      try { while (rs.next()) out += rs.getShort("KEY_SEQ") -> rs.getString("COLUMN_NAME") }
+      finally rs.close()
       out.sortBy(_._1).map(_._2).toSeq
     }
-  }
 
   /** Vendor seam for the statements `jdbcUpsert` runs over a raw driver
     * connection (everything Spark's own JDBC reader/writer executes is
@@ -355,16 +338,6 @@ object Sources {
       }
   }
 
-  /** T-SQL bracket quoting for identifiers that cannot ride the shared
-    * double-quote convention (a session running QUOTED_IDENTIFIER OFF, or
-    * an identifier containing `"`): `[name]`, with `]` doubled — the one
-    * T-SQL quoting form that works regardless of session settings.
-    * The MERGE/stage path stays on double quotes (valid under the
-    * driver's default QUOTED_IDENTIFIER ON and shared with ANSI); this
-    * helper is the declared escape hatch, pinned in DialectSpec. */
-  private[engine] def bracketQuote(id: String): String =
-    "[" + id.replace("]", "]]") + "]"
-
   /** The set-based merge statement (ANSI `MERGE`, which Derby and SQL
     * Server both speak) — the reference's intent code `construirMergeSQL`
     * (ETLProcess.java:429-526) and the semantic twin of its live per-row
@@ -394,80 +367,63 @@ object Sources {
     * batched writer, then ONE set-based `MERGE` applies it, so the
     * destination round-trips once per batch instead of once per row.
     *
-    * Batch semantics match [[Sinks.upsert]]: last-writer-wins per key,
-    * ordered by `orderCol` with a deterministic all-columns tiebreak
-    * (a distributed batch has no arrival order; SURVEY §7.4) — MERGE
-    * requires it anyway (duplicate source keys are an ANSI cardinality
-    * error). Creates the destination on first load (append path), like
+    * The rows are [[Sinks.lastWriter]]'s, the rule of [[Sinks.upsert]] —
+    * MERGE requires unique source keys anyway (duplicates are an ANSI
+    * cardinality error). `orderCol` is loaded only when the destination
+    * carries it. Creates the destination on first load (append path), like
     * the writer itself would. */
   def jdbcUpsert(df: DataFrame, cfg: JdbcConfig, table: String,
       keys: Seq[String], orderCol: String,
       batchSize: Int = DefaultBatchSize): Unit = {
     require(keys.nonEmpty, "jdbcUpsert: keys must be non-empty")
-    val tiebreak = df.columns.toSeq
-      .filterNot(c => c == orderCol || keys.contains(c))
-      .map(org.apache.spark.sql.functions.col(_).desc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(org.apache.spark.sql.functions.col): _*)
-      .orderBy(org.apache.spark.sql.functions.col(orderCol).desc +: tiebreak: _*)
-    val lastWriter = df
-      .withColumn("__graft_rn",
-        org.apache.spark.sql.functions.row_number().over(w))
-      .filter(org.apache.spark.sql.functions.col("__graft_rn") === 1)
-      .drop("__graft_rn")
-    def execute(sql: String): Unit = withConnection(cfg) { conn =>
-      val st = conn.createStatement()
-      try st.executeUpdate(sql) finally st.close()
-    }
-    // existence comes from getTables (canonical-case probe), NOT from an
-    // empty getColumns result — on a vendor whose canonical case differs
-    // from the caller's, the old inference silently took the append path
-    // and bypassed upsert semantics entirely
-    resolveJdbcTable(cfg, table) match {
-      case None =>
-        // first load: the writer creates the destination, like the
-        // reference's initial batch
-        jdbcAppend(lastWriter, cfg, table, batchSize)
-      case Some(canonical) =>
-        val targetCols = withConnection(cfg) { conn =>
+    val lastWriter = Sinks.lastWriter(df, keys, orderCol)
+    withConnection(cfg) { conn =>
+      def execute(sql: String): Unit = {
+        val st = conn.createStatement()
+        try st.executeUpdate(sql) finally st.close()
+      }
+      // existence comes from getTables (canonical-case probe), NOT from an
+      // empty getColumns result — on a vendor whose canonical case differs
+      // from the caller's, that inference would silently take the append
+      // path and bypass upsert semantics entirely
+      resolveJdbcTable(conn, table) match {
+        case None =>
+          // first load: the writer creates the destination, like the
+          // reference's initial batch
+          jdbcAppend(lastWriter, cfg, table, batchSize)
+        case Some(canonical) =>
           val md = conn.getMetaData
-          val rs = md.getColumns(null, null, escapePattern(md, canonical), "%")
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          try { while (rs.next()) out += rs.getString("COLUMN_NAME") } finally rs.close()
-          out.toSeq
-        }
-        if (targetCols.isEmpty) throw new IllegalStateException(
-          s"jdbcUpsert: table '$canonical' exists but its columns could not be " +
-            "read from DatabaseMetaData — refusing to guess between first-load " +
-            "append and keyed merge")
-        // orderCol may be batch-only metadata (e.g. an ingest sequence): keep
-        // it only when the destination carries the column (Sinks.upsert rule)
-        val cols =
-          if (targetCols.contains(orderCol)) df.columns.toSeq
-          else df.columns.toSeq.filterNot(_ == orderCol)
-        // unique per invocation: concurrent upserts into the same table (e.g.
-        // two streaming sinks) must not DROP each other's staged batch; a
-        // crashed run's leftover is identifiable by the _graft_stage_ prefix
-        val stage = table + "_graft_stage_" +
-          java.util.UUID.randomUUID.toString.replace("-", "").take(8)
-        def q(c: String) = "\"" + c + "\""
-        val dialect = UpsertDialect.forUrl(cfg.url)
-        // the stage mirrors the DESTINATION's column types (not the
-        // writer's default mappings), so the merge never crosses a
-        // vendor type boundary — the standard staging discipline
-        execute(dialect.stageDdl(stage, table, cols.map(q), keys.map(q)))
-        try {
-          jdbcAppend(
-            lastWriter.select(cols.map(org.apache.spark.sql.functions.col): _*),
-            cfg, stage, batchSize)
-          execute(dialect.terminate(mergeSql(table, stage, cols, keys)))
-        } finally {
-          // best-effort: a failed stage load or MERGE must not leak the
-          // stage to a caller who catches and retries — only a process
-          // crash should ever leave a _graft_stage_ table behind
-          try execute(s"DROP TABLE $stage")
-          catch { case _: java.sql.SQLException => () }
-        }
+          val targetCols = strings(
+            md.getColumns(null, null, escapePattern(md, canonical), "%"), "COLUMN_NAME")
+          if (targetCols.isEmpty) throw new IllegalStateException(
+            s"jdbcUpsert: table '$canonical' exists but its columns could not be " +
+              "read from DatabaseMetaData — refusing to guess between first-load " +
+              "append and keyed merge")
+          val cols = df.columns.toSeq.filter(c => c != orderCol || targetCols.contains(c))
+          // unique per invocation: concurrent upserts into the same table (e.g.
+          // two streaming sinks) must not DROP each other's staged batch; a
+          // crashed run's leftover is identifiable by the _graft_stage_ prefix
+          val stage = table + "_graft_stage_" +
+            java.util.UUID.randomUUID.toString.replace("-", "").take(8)
+          def q(c: String) = "\"" + c + "\""
+          val dialect = UpsertDialect.forUrl(cfg.url)
+          // the stage mirrors the DESTINATION's column types (not the
+          // writer's default mappings), so the merge never crosses a
+          // vendor type boundary — the standard staging discipline
+          execute(dialect.stageDdl(stage, table, cols.map(q), keys.map(q)))
+          try {
+            jdbcAppend(
+              lastWriter.select(cols.map(org.apache.spark.sql.functions.col): _*),
+              cfg, stage, batchSize)
+            execute(dialect.terminate(mergeSql(table, stage, cols, keys)))
+          } finally {
+            // best-effort: a failed stage load or MERGE must not leak the
+            // stage to a caller who catches and retries — only a process
+            // crash should ever leave a _graft_stage_ table behind
+            try execute(s"DROP TABLE $stage")
+            catch { case _: java.sql.SQLException => () }
+          }
+      }
     }
   }
 }

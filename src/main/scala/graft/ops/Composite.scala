@@ -438,11 +438,8 @@ object Composite {
         .agg((lit(resetUnits) + expr("(sum(c) * 85) div 100")).as("r"))
         .withColumnRenamed("dst", "node")
     }
-    // ONE eager materialization at loop end (node-count-sized rows): the
-    // lazy chain still references the edges/e checkpoint leaves, so they
-    // must not be unpersisted until the chain has actually run
+    // ONE eager materialization at loop end (node-count-sized rows)
     val fin = ranks.localCheckpoint()
-    edges.unpersist(); e.unpersist()
     fin.select(col("node"),
         (col("r").cast("double") / lit(PrScale)).as("pagerank"))
       .orderBy(col("pagerank").desc, col("node").asc)

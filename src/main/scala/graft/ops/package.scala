@@ -9,6 +9,12 @@ import org.apache.spark.sql.types.DecimalType
   * `dsum`/`davg`: exact-decimal aggregation of double columns — both engines
   * round the same IEEE double to 2 decimals and sum exactly, so results are
   * independent of aggregation order (and of partition count at 100 TB).
+  *
+  * `localCheckpoint` barriers: a local checkpoint's blocks stay on the
+  * executors until the driver garbage-collects the checkpointed frame (the
+  * `ContextCleaner` then removes them). `Dataset.unpersist` does not
+  * release them — it only drops `CacheManager` entries, and a checkpoint
+  * is not one.
   */
 package object ops {
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")

@@ -4,6 +4,8 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 
 import org.apache.spark.sql.functions._
 
+import graft.engine.Endpoint
+
 /** Scripted-stdin walk of the interactive console front-end — the
   * reference's actual UX (prompt loops, pickers, transform dialogs,
   * reference: src/etl/ETLProcess.java:29-53,77-140,313-386) driven
@@ -17,7 +19,8 @@ class CliSpec extends SparkSpec {
   private def runCli(lines: String*): (org.apache.spark.sql.DataFrame, String) = {
     val buf = new ByteArrayOutputStream()
     val out = new PrintStream(buf, true, "UTF-8")
-    val df = Cli.run(spark, dir, lines.iterator, out)
+    val lake = Endpoint.Parquet(spark, dir)
+    val df = Cli.run(lake, lake, lines.iterator, out)
     (df, buf.toString("UTF-8"))
   }
 
@@ -125,7 +128,7 @@ class CliSpec extends SparkSpec {
 
     val buf = new ByteArrayOutputStream()
     val out = new PrintStream(buf, true, "UTF-8")
-    val df = Cli.runJdbc(spark, src, dst, Iterator(
+    val df = Cli.run(Endpoint.Jdbc(spark, src), Endpoint.Jdbc(spark, dst), Iterator(
       "2",            // source: pick a table
       "SRC_PEOPLE",   // canonical (uppercased) name from metadata
       "id, name, v",  // export all three
@@ -141,7 +144,7 @@ class CliSpec extends SparkSpec {
     df.orderBy("id").collect().map(_.getString(1)).toSeq shouldBe
       Seq("ALICE", "BOB", "CAROL", "DAVE")
     // rerunning the identical dialog is idempotent (MERGE semantics)
-    val df2 = Cli.runJdbc(spark, src, dst, Iterator(
+    val df2 = Cli.run(Endpoint.Jdbc(spark, src), Endpoint.Jdbc(spark, dst), Iterator(
       "2", "SRC_PEOPLE", "id, name, v", "DST_PEOPLE",
       "id", "name", "v", "5", "2", "5", "v",
     ), new PrintStream(new ByteArrayOutputStream(), true, "UTF-8"))
@@ -166,7 +169,8 @@ class CliSpec extends SparkSpec {
       "id", "name",                                     // identity mapping
       "5", "1",                                         // none, lowercase
     )
-    val df = Cli.runJdbc(spark, cfg, cfg, dialog(), new PrintStream(buf, true, "UTF-8"))
+    val db = Endpoint.Jdbc(spark, cfg)
+    val df = Cli.run(db, db, dialog(), new PrintStream(buf, true, "UTF-8"))
     buf.toString("UTF-8") should not include "Primary keys:"
     df.count() shouldBe 3 // 1 seed + 2 inserted (id > 1)
     df.filter(col("id") === 2).collect()(0).getString(1) shouldBe "ben" // lowercased
@@ -176,7 +180,7 @@ class CliSpec extends SparkSpec {
     // reference parity: rerunning the IDENTICAL dialog inserts nothing —
     // every incoming row already exists whole-row, like the reference's
     // per-row existence probe
-    val df2 = Cli.runJdbc(spark, cfg, cfg, dialog(),
+    val df2 = Cli.run(db, db, dialog(),
       new PrintStream(new ByteArrayOutputStream(), true, "UTF-8"))
     df2.count() shouldBe 3
     rowSet(df2) shouldBe firstRun

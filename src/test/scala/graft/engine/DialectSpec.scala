@@ -105,10 +105,4 @@ class DialectSpec extends AnyFunSuite with Matchers {
     ddl(DoubleType) shouldBe Some("FLOAT") // T-SQL FLOAT(53) = IEEE double
     ddl(LongType) shouldBe None // Spark's common mapping (BIGINT) is already right
   }
-
-  test("bracket quoting: the QUOTED_IDENTIFIER-independent escape hatch, ']' doubled") {
-    Sources.bracketQuote("name") shouldBe "[name]"
-    Sources.bracketQuote("odd]name") shouldBe "[odd]]name]"
-    Sources.bracketQuote("""has"quote""") shouldBe """[has"quote]"""
-  }
 }

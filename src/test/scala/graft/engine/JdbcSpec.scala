@@ -199,8 +199,9 @@ class JdbcSpec extends SparkSpec {
     after.count() shouldBe 4 // updated in place, not appended as a 5th row
     rowSet(after.filter(col("id") === 1)) shouldBe Set(Seq[Any](1L, "alice2", 11.0))
     // resolveJdbcTable surfaces the DB's canonical name, and misses are None
-    Sources.resolveJdbcTable(cfg, "case_probe") shouldBe Some("CASE_PROBE")
-    Sources.resolveJdbcTable(cfg, "no_such_table_xyz") shouldBe None
+    Sources.withConnection(cfg)(Sources.resolveJdbcTable(_, "case_probe")) shouldBe
+      Some("CASE_PROBE")
+    Sources.withConnection(cfg)(Sources.resolveJdbcTable(_, "no_such_table_xyz")) shouldBe None
   }
 
   test("jdbcPrimaryKeys reads the destination PK in key-sequence order") {
