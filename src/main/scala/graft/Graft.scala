@@ -46,8 +46,8 @@ object Graft {
   def attach(spark: SparkSession): SparkSession = {
     expressions.VecDot.register(spark)
     engine.Udfs.register(spark)
-    // write-side T-SQL type mapping (idempotent: registerDialect de-dups)
-    org.apache.spark.sql.jdbc.JdbcDialects.registerDialect(engine.Sources.SqlServerTypes)
+    // write-side T-SQL types (engine.Sources.SqlServerTypes; idempotent)
+    org.apache.spark.sql.jdbc.GraftSqlServerDialect.register()
     spark
   }
 }

@@ -3,12 +3,12 @@ package graft.engine
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.StructType
 
 /** Catalog discovery + registration — parity with the reference's metadata
   * RPCs: table list via `DatabaseMetaData.getTables`
   * (reference: src/etl/ETLProcess.java:142-159), column list via
-  * `getColumns` (:105-111,302-311), and primary keys via `getPrimaryKeys`
+  * `getColumns` (:105-111,302-311; here `Endpoint.table(name).columns`),
+  * and primary keys via `getPrimaryKeys`
   * (:290-300). Spark's catalog has no PK notion, so merge keys live in
   * engine metadata exactly like the reference carries them in code.
   */
@@ -22,14 +22,6 @@ object Catalog {
       .toSeq.sorted
     if (found.nonEmpty) found else graft.Tables.names.sorted
   }
-
-  /** Column names of a table (R5), via schema inference — the analog of
-    * ResultSetMetaData discovery (:166-173). */
-  def listColumns(spark: SparkSession, dir: String, table: String): Seq[String] =
-    schemaOf(spark, dir, table).fieldNames.toSeq
-
-  def schemaOf(spark: SparkSession, dir: String, table: String): StructType =
-    graft.Tables(spark, dir, table).schema
 
   /** Engine-carried merge keys per fixture table (R6's getPrimaryKeys
     * analog): drives upsert-vs-append choice exactly like the reference's

@@ -297,46 +297,27 @@ object Sources {
       if (url.toLowerCase.startsWith("jdbc:sqlserver")) SqlServer else Ansi
   }
 
-  /** Write-side type mapping for a live SQL Server destination (the
+  /** Write-side dialect for a live SQL Server destination (the
     * reference's actual target — config.properties is `jdbc:sqlserver`),
     * registered on [[graft.Graft.attach]] so first-load CREATEs through
-    * the JDBC writer emit the right T-SQL column types. Spark's built-in
-    * mapping is kept where it is already right; the overrides below are
-    * the ones that would silently lose data or precision:
+    * the JDBC writer emit the right T-SQL column types. It is Spark's own
+    * `MsSqlServerDialect` (NVARCHAR(MAX) strings, BIT, VARBINARY(MAX),
+    * `TOP (n)`, `1`/`0` booleans) with two overrides, the types that would
+    * otherwise lose precision:
     *
-    *  - STRING → NVARCHAR(MAX): the reference moves JDBC strings as-is
-    *    (`setObject`, ETLProcess.java:232-256) into columns that hold
-    *    unicode — a VARCHAR default would mangle non-Latin text (the
-    *    unicode-fixture class, on the write side);
     *  - TIMESTAMP / TIMESTAMP_NTZ → DATETIME2(6): plain T-SQL DATETIME
     *    has 1/300 s granularity, so µs event times (every fixture
     *    timestamp) would round — DATETIME2(6) is exactly the engine's µs
     *    precision;
-    *  - BOOLEAN → BIT, BINARY → VARBINARY(MAX), DOUBLE → FLOAT: the
-    *    T-SQL spellings of types SQL Server has no ANSI name for.
+    *  - DOUBLE → FLOAT: T-SQL's name for the IEEE double.
     *
-    * No SQL Server exists in this harness, so the mapping is pinned
-    * statement-shape-level in DialectSpec (the UpsertDialect.SqlServer
-    * discipline): a future live run has a spec contract to hit. */
-  object SqlServerTypes extends org.apache.spark.sql.jdbc.JdbcDialect {
-    import org.apache.spark.sql.types._
-    override def canHandle(url: String): Boolean =
-      url.toLowerCase.startsWith("jdbc:sqlserver")
-    override def getJDBCType(dt: DataType): Option[org.apache.spark.sql.jdbc.JdbcType] =
-      dt match {
-        case StringType => Some(org.apache.spark.sql.jdbc.JdbcType(
-          "NVARCHAR(MAX)", java.sql.Types.NVARCHAR))
-        case TimestampType | TimestampNTZType => Some(org.apache.spark.sql.jdbc.JdbcType(
-          "DATETIME2(6)", java.sql.Types.TIMESTAMP))
-        case BooleanType => Some(org.apache.spark.sql.jdbc.JdbcType(
-          "BIT", java.sql.Types.BIT))
-        case BinaryType => Some(org.apache.spark.sql.jdbc.JdbcType(
-          "VARBINARY(MAX)", java.sql.Types.VARBINARY))
-        case DoubleType => Some(org.apache.spark.sql.jdbc.JdbcType(
-          "FLOAT", java.sql.Types.DOUBLE))
-        case _ => None // Spark's common mapping is correct for the rest
-      }
-  }
+    * It replaces the built-in instance instead of registering beside it:
+    * two dialects for one URL are wrapped in an `AggregatedDialect`, which
+    * forwards only a few methods and falls back to `JdbcDialect`'s ANSI
+    * defaults for the rest (`LIMIT n`, `true`), invalid T-SQL. The mapping
+    * is pinned statement-shape-level in DialectSpec and DdlGoldenSpec. */
+  val SqlServerTypes: org.apache.spark.sql.jdbc.JdbcDialect =
+    org.apache.spark.sql.jdbc.GraftSqlServerDialect.dialect
 
   /** The set-based merge statement (ANSI `MERGE`, which Derby and SQL
     * Server both speak) — the reference's intent code `construirMergeSQL`

@@ -2168,10 +2168,9 @@ object Events {
 
   /** The (event_type, bucket) gap-count grid — event_interarrival's only
     * fact-scale pass (one keyed window + one map-combined aggregate),
-    * shared with the streaming twin (interarrivalSink,
-    * streaming/Streams.scala: gaps are order-dependent, so the twin is
-    * an ordered fold over time-split batches with per-key last-ts
-    * carryover). */
+    * shared with the streaming twin ([[graft.streaming.Streams.interarrival]]:
+    * gaps are order-dependent, so the twin is an ordered fold over
+    * time-split batches with per-key last-ts carryover). */
   private[graft] def interarrivalGrid(events: DataFrame): DataFrame = {
     val ord = Window.partitionBy("user_id", "event_type")
       .orderBy(col("ts").asc, col("event_id").asc)
@@ -2191,37 +2190,6 @@ object Events {
       .groupBy("event_type", "bucket")
       .agg(count(lit(1)).as("n_gaps"), min("gap_us").as("min_us"),
         max("gap_us").as("max_us"), sum("gap_us").as("sum_us"))
-  }
-
-  /** One ordered-fold step for the streaming twin
-    * ([[graft.streaming.Streams.interarrival]]): state is the carried
-    * per-(user, type) LAST event plus the (type, bucket) gap grid. The
-    * carried last rows re-enter the batch's gap computation as
-    * sentinel-id pseudo-rows, so the gap SPANNING the batch cut is
-    * produced by [[interarrivalGrid]] itself — shared verbatim.
-    *
-    * Exactness precondition: per-(user, type) event-time-ordered arrival
-    * (the win_ema ordered-fold class) — then every carried ts ≤ every
-    * batch ts for its key. The sentinel id (MinValue) is exact even at
-    * an equal-ts boundary: within a tie block every ordering yields the
-    * same gap MULTISET (zeros inside the block, identical entry/exit
-    * deltas), and the grid only consumes the multiset. */
-  private[graft] def interarrivalFold(last: DataFrame, grid: DataFrame,
-      batch: DataFrame): (DataFrame, DataFrame) = {
-    val e = batch
-      .filter(col("ts").isNotNull && col("user_id").isNotNull
-        && col("event_type").isNotNull)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-    val carried = last.select(col("user_id"), col("event_type"), col("ts"),
-      lit(Long.MinValue).as("event_id"))
-    val delta = interarrivalGrid(e.unionByName(carried))
-    val mergedGrid = grid.unionByName(delta).groupBy("event_type", "bucket")
-      .agg(sum("n_gaps").as("n_gaps"), min("min_us").as("min_us"),
-        max("max_us").as("max_us"), sum("sum_us").as("sum_us"))
-    val newLast = last
-      .unionByName(e.select(col("user_id"), col("event_type"), col("ts")))
-      .groupBy("user_id", "event_type").agg(max("ts").as("ts"))
-    (newLast, mergedGrid)
   }
 
   // --------------------------------------------------------------------

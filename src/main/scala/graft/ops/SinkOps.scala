@@ -577,9 +577,9 @@ object SinkOps {
 
   // --------------------------------------------------------------------
   // sink_stream_upsert — the STREAMING upsert sink's state evolution as a
-  // verifiable batch op: graft.streaming.Streams.upsertSink applies
-  // engine.Sinks.upsert (keyed last-writer-wins, reference R13,
-  // ETLProcess.java:388-427) to every micro-batch via foreachBatch;
+  // verifiable batch op: graft.streaming.Streams.upsert, run by foldSink,
+  // applies engine.Sinks.upsert (keyed last-writer-wins, reference R13,
+  // ETLProcess.java:388-427) to every micro-batch;
   // correctness means the state after N sequential per-batch merges
   // equals ONE whole-log merge. This op folds the same Sinks.upsert
   // kernel over 3 time-ordered micro-batches of the events log into the

@@ -768,7 +768,7 @@ object Stats {
   //
   // One fold, many views (the rank-family discipline): the input is
   // ttestMoments VERBATIM — the same per-day algebraic moment grid
-  // ab_ttest reads and ttestSink folds — so a streaming deployment gets
+  // ab_ttest reads and Streams.ttest folds — so a streaming deployment gets
   // the always-valid monitor from the state it already carries. The
   // cumulative sums are exact DECIMAL windows over the grid (order-
   // independent), converted once; z is ttestView's fixed IEEE tree over
@@ -1343,7 +1343,7 @@ object Stats {
     // pre-expansion rows (guide §2.5 input-parallelism / §2.3 shuffle the
     // proxy, not the expansion); width follows spark.sql.shuffle.partitions
     // so a real deployment's scan splits govern instead. The streaming twin
-    // (bootSink) keeps calling bootGrid directly — micro-batches arrive
+    // (Streams.boot) keeps calling bootGrid directly — micro-batches arrive
     // already partitioned.
     bootView(bootGrid(exchange(t(s, d, "events"))))
   }
@@ -1447,7 +1447,7 @@ object Stats {
   // ab_srm's per-day count grid VERBATIM (srmGrid) — one fold serves the
   // SRM alarm and the correlation monitor (the rank-family
   // one-fold-many-views pattern; the streaming twin reads the same
-  // srmSink state). r over the window's exact integer sums (squares /
+  // Streams.srm state). r over the window's exact integer sums (squares /
   // cross-products in DECIMAL(38,0) — daily counts square past int64 at
   // scale), final statistic a fixed IEEE tree; windows shorter than 7
   // days and zero-variance windows emit NULL r (declared — and the

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.{DataType, DateType, DecimalType, LongType}
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType, LongType, StructType, TimestampType}
 
 import graft.ops.{Audit, Dedup, Events, Llm, Pipeline, Stats, Text}
 
@@ -19,7 +20,7 @@ import graft.ops.{Audit, Dedup, Events, Llm, Pipeline, Stats, Text}
   * share the batch twins' window semantics, so the oracle-checked batch
   * results pin the streaming ones too.
   *
-  * Grid twins fold each micro-batch into versioned state through
+  * Grid twins fold each micro-batch into stored state through
   * [[foldSink]]: the batch op's grid pass turns the batch into a grid of
   * partials, a [[KeyedFold]] merges that grid into the stored state, and
   * the batch op's own view reads the state. One rule covers every fold:
@@ -31,12 +32,17 @@ import graft.ops.{Audit, Dedup, Events, Llm, Pipeline, Stats, Text}
   *    as `least`/`greatest`; each result is cast to its state type;
   *  - presence grids (no measures) merge by `union` + `distinct`.
   * Because every grid is algebraic, folding any cut of the input in any
-  * order gives the grid of the whole input. Sums are NOT idempotent: an
-  * epoch that Spark re-runs after a failure is counted twice unless the
-  * caller's state store makes each epoch's write idempotent (for example,
-  * state versions keyed by epoch). Presence, MIN and MAX folds absorb
-  * redelivery outright. Ordered folds (see below) carry per-key state
-  * instead and need per-key event-time order.
+  * order gives the grid of the whole input. Ordered folds (see below)
+  * carry per-key state instead and need per-key event-time order.
+  *
+  * State contract: a [[FoldState]] keys state versions by the batch id.
+  * Epoch `b` reads version `b` and writes version `b + 1`, overwriting
+  * any earlier attempt at it, so an epoch that Spark re-runs after a
+  * failure rewrites the same version and every fold, sums included, is
+  * exactly-once. Two preconditions: the source is replayable (a re-run
+  * epoch sees the same rows), and each checkpoint has its own state root
+  * (a fresh checkpoint over an old root is refused, see
+  * [[FoldState.Parquet]]).
   */
 object Streams {
 
@@ -130,22 +136,6 @@ object Streams {
           + "- unix_micros(cast(cts as timestamp))) div 1000").as("delay_ms"))
   }
 
-  /** Stream→table upsert: apply the engine's keyed last-writer-wins merge
-    * ([[graft.engine.Sinks.upsert]], reference R13 semantics) to every
-    * micro-batch via foreachBatch. `readTable`/`writeTable` abstract the
-    * destination (parquet dir, Delta-style table, JDBC stage+merge) so the
-    * merge SEMANTICS live here and the storage commit lives with the
-    * caller. Each micro-batch is one distributed merge plan — the streaming
-    * generalization of the reference's batched upsert loop, minus its
-    * partial-commit failure mode (task commit is atomic per batch).
-    */
-  def upsertSink(incoming: DataFrame, keys: Seq[String], orderCol: String)(
-      readTable: () => DataFrame)(writeTable: DataFrame => Unit)
-      : DataStreamWriter[Row] =
-    incoming.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeTable(graft.engine.Sinks.upsert(readTable(), batch, keys, orderCol))
-    }
-
   /** Per-key winners of one CDC micro-batch in (ts, event_id) order —
     * the same last-writer-wins collapse the batch twin (`ops.Events`
     * `cdc_apply`) runs over the whole log. 'error' events are DELETES,
@@ -166,25 +156,19 @@ object Streams {
     * Each micro-batch collapses to per-key winners, then merges into the
     * state by VERSION comparison — a state row only changes if the batch
     * winner's (ts, event_id) is strictly newer. That comparison is what
-    * makes the sink correct beyond the happy path: micro-batches need not
+    * makes the fold correct beyond the happy path: micro-batches need not
     * arrive in event-time order (a late batch carrying an older change is
-    * a no-op), and foreachBatch's at-least-once redelivery is idempotent
-    * (re-merging an already-applied batch changes nothing). Deletes live
-    * in-state as tombstones so they also win/lose by version, never by
-    * arrival order. State schema: (k, deleted, v, wts, wid); bounded by
-    * the ACTIVE KEY SET, not stream volume — the same growth bound as the
-    * batch op's collapsed join side, which is what a 100 TB/day change
-    * stream requires of its materialized view.
+    * a no-op), and re-merging an already-applied batch changes nothing.
+    * Deletes live in-state as tombstones so they also win/lose by
+    * version, never by arrival order. State schema: (k, deleted, v, wts,
+    * wid); bounded by the ACTIVE KEY SET, not stream volume — the same
+    * growth bound as the batch op's collapsed join side, which is what a
+    * 100 TB/day change stream requires of its materialized view.
     */
-  def cdcApplySink(changes: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit)
-      : DataStreamWriter[Row] =
-    changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      writeState(cdcMerge(readState(), cdcWinners(batch)))
-    }
+  val cdc: Step = { case (Seq(s), b) => Seq(cdcMerge(s, cdcWinners(b))) }
 
   /** One version-aware merge step: newer (wts, wid) wins per key. Exposed
-    * for direct unit-level reuse; `cdcApplySink` drives it per batch. */
+    * for direct unit-level reuse; [[cdc]] runs it per batch. */
   def cdcMerge(state: DataFrame, winners: DataFrame): DataFrame = {
     val s = state.as("s")
     val b = winners.as("b")
@@ -199,7 +183,7 @@ object Streams {
 
   /** Materialize the merged view the batch `cdc_apply` op computes: the
     * base snapshot with live state applied — upserts override, tombstones
-    * drop the key, untouched base rows pass through. `cdcApplySink` keeps
+    * drop the key, untouched base rows pass through. [[cdc]] keeps
     * `state` current; this is the read side. */
   def cdcView(base: DataFrame, state: DataFrame): DataFrame =
     base.select(col("c_custkey"),
@@ -332,16 +316,53 @@ object Streams {
     }
   }
 
-  /** The fold sink: each micro-batch reads every state, runs `step`, and
-    * writes the next states in order. `writes` must store a new version
-    * (the next states read the current ones lazily). */
-  def foldSink(input: DataFrame, step: Step)(reads: (() => DataFrame)*)(
-      writes: (DataFrame => Unit)*): DataStreamWriter[Row] = {
-    require(reads.size == writes.size, "one write per read state")
-    input.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      step(reads.map(_()), batch).zip(writes).foreach { case (s, w) => w(s) }
+  /** Where one fold state lives between micro-batches. Epoch `b` reads
+    * version `b` and writes version `b + 1`; see the contract above. */
+  trait FoldState {
+    def read(epoch: Long): DataFrame
+    def write(epoch: Long, next: DataFrame): Unit
+  }
+  object FoldState {
+    /** Versioned parquet: version `v` is the directory `root/v<v>`, and
+      * version 0 is the empty frame of `schema`. A write for epoch `b`
+      * overwrites `v<b+1>`; it fails, writing nothing, when `v<b+2>`
+      * already exists, since then this checkpoint is behind the state it
+      * would overwrite. */
+    final case class Parquet(spark: SparkSession, root: String, schema: StructType)
+        extends FoldState {
+      private def path(version: Long) = new Path(root, s"v$version")
+      private def fs = path(0).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def at(version: Long): DataFrame =
+        if (version == 0) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        else spark.read.schema(schema).parquet(path(version).toString)
+      /** The highest version written, 0 when there is none. */
+      def lastVersion: Long = Option(fs.globStatus(new Path(root, "v*"))).toSeq.flatten
+        .map(_.getPath.getName.drop(1)).filter(v => v.nonEmpty && v.forall(_.isDigit))
+        .map(_.toLong).maxOption.getOrElse(0L)
+      def latest: DataFrame = at(lastVersion)
+      def read(epoch: Long): DataFrame = at(epoch)
+      def write(epoch: Long, next: DataFrame): Unit = {
+        if (fs.exists(path(epoch + 2))) throw new IllegalStateException(
+          s"fold state $root already holds version ${epoch + 2}, past epoch $epoch: " +
+            "a new checkpoint needs a new state root")
+        next.write.mode("overwrite").parquet(path(epoch + 1).toString)
+      }
     }
   }
+
+  /** The fold sink, the only sink here that reads and writes state: each
+    * micro-batch reads every state at its epoch, runs `step`, and writes
+    * the next states in order. */
+  def foldSink(input: DataFrame, step: Step)(states: FoldState*): DataStreamWriter[Row] =
+    input.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
+      step(states.map(_.read(epoch)), batch).zip(states).foreach { case (s, st) => st.write(epoch, s) }
+    }
+
+  /** Keyed last-writer-wins upsert of each micro-batch into a table state
+    * ([[graft.engine.Sinks.upsert]], reference R13 semantics): the
+    * streaming form of the reference's batched upsert loop. */
+  def upsert(keys: Seq[String], orderCol: String): Step = { case (Seq(table), b) =>
+    Seq(graft.engine.Sinks.upsert(table, b, keys, orderCol)) }
 
   /** A grid over the batch with its event time made an instant. */
   private def timed(grid: DataFrame => DataFrame): DataFrame => DataFrame =
@@ -426,8 +447,23 @@ object Streams {
   val funnel: Step = { case (Seq(s), b) => Seq(Events.funnelFold(s, instantTs(b))) }
   val twa: Step = { case (Seq(acc, last), b) =>
     val (l, a) = Events.twaFold(last, acc, instantTs(b)); Seq(a, l) }
-  val interarrival: Step = { case (Seq(grid, last), b) =>
-    val (l, g) = Events.interarrivalFold(last, grid, instantTs(b)); Seq(g, l) }
+  private val iaGridFold = KeyedFold(Seq("event_type", "bucket"), Sum("n_gaps", LongType),
+    Min("min_us", LongType), Max("max_us", LongType), Sum("sum_us", LongType))
+  private val iaLastFold = KeyedFold(Seq("user_id", "event_type"), Max("ts", TimestampType))
+  /** event_interarrival: the carried per-(user, type) last events re-enter
+    * the batch's gap pass as sentinel-id rows, so the gap SPANNING a cut is
+    * produced by [[graft.ops.Events.interarrivalGrid]] itself. The sentinel
+    * id (MinValue) is exact even at an equal-ts boundary: within a tie
+    * block every ordering yields the same gap multiset, and the grid only
+    * consumes the multiset. States: (grid, last). */
+  val interarrival: Step = { case (Seq(grid, last), batch) =>
+    val e = instantTs(batch).filter(col("ts").isNotNull && col("user_id").isNotNull
+      && col("event_type").isNotNull).select("user_id", "event_type", "ts", "event_id")
+    val carried = last.select(col("user_id"), col("event_type"), col("ts"),
+      lit(Long.MinValue).as("event_id"))
+    Seq(iaGridFold.merge(grid, Events.interarrivalGrid(e.unionByName(carried))),
+      iaLastFold.merge(last, e.groupBy("user_id", "event_type").agg(max("ts").as("ts"))))
+  }
   /** Per-event output: the emitted rows append to an output log. */
   private def logged(fold: (DataFrame, DataFrame) => (DataFrame, DataFrame)): Step = {
     case (Seq(out, carried), b) =>
@@ -460,17 +496,22 @@ object Streams {
       wmHwmFold.merge(hwm, e.groupBy("user_id").agg(max("tus").as("hwm"))))
   }
 
+  /** State kept by two closures, for the benchmark's sinks below: the
+    * store versions itself, so the epoch is ignored. */
+  private def closureState(r: () => DataFrame, w: DataFrame => Unit): FoldState =
+    new FoldState {
+      def read(epoch: Long): DataFrame = r()
+      def write(epoch: Long, next: DataFrame): Unit = w(next)
+    }
+
   // The benchmark's three folds keep their sink and view entry points.
-  def topkSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit): DataStreamWriter[Row] =
-    foldSink(events, topk)(readState)(writeState)
+  def topkSink(events: DataFrame)(readState: () => DataFrame)(writeState: DataFrame => Unit)
+      : DataStreamWriter[Row] = foldSink(events, topk)(closureState(readState, writeState))
   def topkView(state: DataFrame): DataFrame = Events.topkView(state)
-  def driftSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit): DataStreamWriter[Row] =
-    foldSink(events, drift)(readState)(writeState)
+  def driftSink(events: DataFrame)(readState: () => DataFrame)(writeState: DataFrame => Unit)
+      : DataStreamWriter[Row] = foldSink(events, drift)(closureState(readState, writeState))
   def driftView(state: DataFrame): DataFrame = Stats.driftView(state)
-  def ttestSink(events: DataFrame)(readState: () => DataFrame)(
-      writeState: DataFrame => Unit): DataStreamWriter[Row] =
-    foldSink(events, ttest)(readState)(writeState)
+  def ttestSink(events: DataFrame)(readState: () => DataFrame)(writeState: DataFrame => Unit)
+      : DataStreamWriter[Row] = foldSink(events, ttest)(closureState(readState, writeState))
   def ttestView(state: DataFrame): DataFrame = Stats.ttestView(state)
 }

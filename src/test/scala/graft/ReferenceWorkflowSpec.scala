@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Catalog, Etl, Transforms}
+import graft.engine.{Catalog, Endpoint, Etl, Transforms}
 
 /** The reference tool's complete interactive workflow, replayed through the
   * library on the fixture warehouse — what "a user of the reference could
@@ -21,7 +21,7 @@ class ReferenceWorkflowSpec extends SparkSpec {
     // 1. discovery
     val tables = Catalog.listTables(dir)
     tables should contain("customer")
-    Catalog.listColumns(spark, dir, "customer") should contain("c_mktsegment")
+    Endpoint.Parquet(spark, dir).table("customer").columns should contain("c_mktsegment")
     val pks = Catalog.mergeKeys("customer")
 
     // 2. extraction: raw SQL (the reference's pass-through path)

@@ -65,13 +65,16 @@ class DdlGoldenSpec extends SparkSpec {
 
   test("the dialect is registered by Graft.attach (the writer actually finds it)") {
     graft.Graft.attach(spark)
-    // registration aggregates with Spark's builtin MsSqlServerDialect;
-    // ours is consulted FIRST — the aggregate must emit OUR type mapping
+    // registration replaces Spark's builtin MsSqlServerDialect: the URL
+    // resolves to OUR type mapping and keeps the builtin's T-SQL spellings
+    // (an aggregate of two dialects would fall back to ANSI defaults)
     val resolved = org.apache.spark.sql.jdbc.JdbcDialects
       .get("jdbc:sqlserver://host;databaseName=dw")
     resolved.getJDBCType(org.apache.spark.sql.types.StringType)
       .map(_.databaseTypeDefinition) shouldBe Some("NVARCHAR(MAX)")
     resolved.getJDBCType(org.apache.spark.sql.types.TimestampNTZType)
       .map(_.databaseTypeDefinition) shouldBe Some("DATETIME2(6)")
+    resolved.compileValue(true) shouldBe 1
+    resolved.getLimitClause(10) shouldBe "TOP (10)"
   }
 }

@@ -14,7 +14,7 @@ class EngineSurfaceSpec extends SparkSpec {
   }
 
   test("listColumns matches the parquet schema (R5)") {
-    Catalog.listColumns(spark, dir, "nation") shouldBe
+    Endpoint.Parquet(spark, dir).table("nation").columns.toSeq shouldBe
       Seq("n_nationkey", "n_name", "n_regionkey")
   }
 

@@ -11,7 +11,7 @@ import graft.SparkSpec
   * generator discipline as SinkPropertiesSpec): folding `cdcMerge` over ANY
   * chunking and ANY delivery order of a change log converges to the same
   * state as merging the whole log at once. This is the algebraic fact that
-  * makes `cdcApplySink` correct under out-of-order micro-batches and
+  * makes the `Streams.cdc` fold correct under out-of-order micro-batches and
   * at-least-once redelivery — the per-key winner is decided by the
   * (ts, event_id) version, which is delivery-order-free.
   */

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 import org.scalatest.matchers.should.Matchers
 
@@ -42,16 +42,19 @@ class FileStreamParitySpec extends SparkSpec {
     ev.orderBy(col("ts").desc).limit(1)
       .withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
 
-  private def memorySink(out: org.apache.spark.sql.Dataset[_], name: String, mode: String): StreamingQuery =
-    out.writeStream.format("memory").queryName(name).outputMode(mode).start()
-
-  /** Drain `q`: at least `batches` data micro-batches, and (when
-    * `watermark`) a watermark that moved at least once between them. */
-  private def drain(q: StreamingQuery, batches: Int, watermark: Boolean): Unit = {
-    q.processAllAvailable()
-    q.recentProgress.count(_.numInputRows > 0) should be >= batches
-    if (watermark) q.recentProgress.toSeq
-      .flatMap(p => Option(p.eventTime.get("watermark"))).distinct.size should be >= 2
+  /** Stream `out` into the memory table `name` and drain it: at least
+    * `batches` data micro-batches, and (when `watermark`) a watermark that
+    * moved at least once between them. Returns the table. */
+  private def drained(out: org.apache.spark.sql.Dataset[_], name: String, mode: String,
+      batches: Int, watermark: Boolean): DataFrame = {
+    val q = out.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    try {
+      q.processAllAvailable()
+      q.recentProgress.count(_.numInputRows > 0) should be >= batches
+      if (watermark) q.recentProgress.toSeq
+        .flatMap(p => Option(p.eventTime.get("watermark"))).distinct.size should be >= 2
+    } finally q.stop()
+    spark.table(name)
   }
 
   test("file-source interval join: micro-batch watermark advance, equals the batch join") {
@@ -61,32 +64,24 @@ class FileStreamParitySpec extends SparkSpec {
     def branch(stream: DataFrame, tpe: String): DataFrame =
       stream.filter(col("event_type") === tpe)
     val stream = fileStream(ev, staged)
-    val q = memorySink(Streams.intervalJoin(branch(stream, "click"), branch(stream, "purchase")),
-      "t_file_ij", "append")
-    try {
-      drain(q, 3, watermark = true)
-      val streamed = spark.table("t_file_ij").collect().map(_.toSeq).toSet
-      streamed shouldBe batchOp("stream_interval_join").collect().map(_.toSeq).toSet
-      streamed should not be empty
-    } finally q.stop()
+    val streamed = drained(Streams.intervalJoin(branch(stream, "click"), branch(stream, "purchase")),
+      "t_file_ij", "append", 3, watermark = true).collect().map(_.toSeq).toSet
+    streamed shouldBe batchOp("stream_interval_join").collect().map(_.toSeq).toSet
+    streamed should not be empty
 
     // left-outer flavor: NULL-click purchases may only emit once the
     // watermark PROVES no qualifying click can still arrive — their
     // appearance is itself evidence of mid-stream watermark finalization
     val stream2 = fileStream(ev, staged)
-    val q2 = memorySink(Streams.intervalJoin(branch(stream2, "click"),
-      branch(stream2, "purchase"), joinType = "left_outer"), "t_file_ij_left", "append")
-    try {
-      q2.processAllAvailable()
-      val (unmatched, matched) = spark.table("t_file_ij_left").collect().partition(_.isNullAt(1))
-      matched.map(_.toSeq).toSet shouldBe
-        spark.table("t_file_ij").collect().map(_.toSeq).toSet
-      unmatched should not be empty // finalized by watermark advance
-      // every emitted NULL row is a genuine batch-side unmatched purchase
-      val batchNull = batchOp("stream_interval_join_left")
-        .filter(col("click_id").isNull).collect().map(_.getLong(0)).toSet
-      unmatched.map(_.getLong(0)).foreach(pid => batchNull should contain(pid))
-    } finally q2.stop()
+    val (unmatched, matched) = drained(Streams.intervalJoin(branch(stream2, "click"),
+        branch(stream2, "purchase"), joinType = "left_outer"), "t_file_ij_left", "append", 0, watermark = false)
+      .collect().partition(_.isNullAt(1))
+    matched.map(_.toSeq).toSet shouldBe streamed
+    unmatched should not be empty // finalized by watermark advance
+    // every emitted NULL row is a genuine batch-side unmatched purchase
+    val batchNull = batchOp("stream_interval_join_left")
+      .filter(col("click_id").isNull).collect().map(_.getLong(0)).toSet
+    unmatched.map(_.getLong(0)).foreach(pid => batchNull should contain(pid))
   }
 
   test("file-source Streams.tumbling equals the oracle-checked batch twin") {
@@ -105,34 +100,10 @@ class FileStreamParitySpec extends SparkSpec {
     val stream = convert(spark.readStream.schema(rawSchema).parquet(staged.toString))
     // drive the REAL streaming op (decimal-exact sums in-op, so parity is
     // exact, not float-combine-order dependent)
-    val q = memorySink(Streams.tumbling(stream), "t_file_parity", "complete")
-    try {
-      q.processAllAvailable()
-      val streamed = canon(spark.table("t_file_parity").collect())
-      streamed shouldBe canon(
-        graft.SparkEntry.queries("stream_tumbling")(spark, Dir001).collect())
-      streamed should not be empty
-    } finally q.stop()
-  }
-
-  test("file-source CDC apply: out-of-order micro-batches converge to the batch twin; redelivery is a no-op") {
-    // chunks split by event_id HASH, not time: every chunk spans the full
-    // time range, so later micro-batches genuinely deliver OLDER events
-    // for keys already in state — the version comparison, not arrival
-    // order, must decide every merge
-    val cdc = fold("cdc", EventLog, Hash, "k BIGINT, deleted BOOLEAN, v DECIMAL(18,2), wts TIMESTAMP, wid BIGINT")(
-      { case (Seq(s), b) => Seq(Streams.cdcMerge(s, Streams.cdcWinners(b))) })
-    val r = drive(cdc)((s, r, w) => Streams.cdcApplySink(s)(r.head)(w.head))
-    // the maintained view equals the oracle-checked batch twin over the
-    // SAME full log — order of delivery washed out entirely
-    val streamed = Streams.cdcView(graft.Tables(spark, Dir01, "customer"), r.states.head)
-      .collect().map(_.toSeq).toSet
-    streamed shouldBe batchOp("cdc_apply").collect().map(_.toSeq).toSet
+    val streamed = canon(drained(Streams.tumbling(stream), "t_file_parity", "complete", 0,
+      watermark = false).collect())
+    streamed shouldBe canon(graft.SparkEntry.queries("stream_tumbling")(spark, Dir001).collect())
     streamed should not be empty
-    // at-least-once redelivery: re-merging an already-applied chunk must
-    // not move the state (every winner loses the version comparison)
-    Streams.cdcMerge(r.states.head, Streams.cdcWinners(r.chunks.head))
-      .collect().map(_.toSeq).toSet shouldBe r.states.head.collect().map(_.toSeq).toSet
   }
 
   test("file-source Streams.session: append-mode watermark finalization equals the batch twin") {
@@ -140,30 +111,22 @@ class FileStreamParitySpec extends SparkSpec {
     // the sentinel (user_id = -1) closes every real session
     val staged = stageChunks("events_sess_stream",
       thirds(ev) :+ sentinel(ev, 2).withColumn("user_id", lit(-1L)))
-    val q = memorySink(Streams.session(fileStream(ev, staged)), "t_file_sess", "append")
-    try {
-      drain(q, 4, watermark = true)
-      val streamed = canon(spark.table("t_file_sess")
-        .filter(col("user_id") =!= -1L).collect()) // drop the sentinel's own session
-      streamed shouldBe canon(batchOp("stream_session").collect()) // ALL sessions
-      streamed should not be empty
-    } finally q.stop()
+    val streamed = canon(drained(Streams.session(fileStream(ev, staged)), "t_file_sess", "append",
+      4, watermark = true).filter(col("user_id") =!= -1L).collect()) // drop the sentinel's own session
+    streamed shouldBe canon(batchOp("stream_session").collect()) // ALL sessions
+    streamed should not be empty
   }
 
   test("file-source Streams.sliding: append-mode watermark finalization equals the batch twin") {
     val ev = graft.Tables(spark, Dir01, "events").cache()
     val maxTs = ev.agg(max(unix_micros(col("ts").cast("timestamp")))).collect()(0).getLong(0)
     val staged = stageChunks("events_slide_stream", thirds(ev) :+ sentinel(ev, 2))
-    val q = memorySink(Streams.sliding(fileStream(ev, staged)), "t_file_slide", "append")
-    try {
-      drain(q, 4, watermark = true)
-      // sentinel-only windows start after every real event (sentinel ts is
-      // maxTs + 2 days; a 1h window containing a real event starts ≤ its ts)
-      val streamed = canon(spark.table("t_file_slide")
-        .filter(unix_micros(col("ws")) <= maxTs).collect())
-      streamed shouldBe canon(batchOp("stream_sliding").collect()) // ALL windows
-      streamed should not be empty
-    } finally q.stop()
+    // sentinel-only windows start after every real event (sentinel ts is
+    // maxTs + 2 days; a 1h window containing a real event starts ≤ its ts)
+    val streamed = canon(drained(Streams.sliding(fileStream(ev, staged)), "t_file_slide", "append",
+      4, watermark = true).filter(unix_micros(col("ws")) <= maxTs).collect())
+    streamed shouldBe canon(batchOp("stream_sliding").collect()) // ALL windows
+    streamed should not be empty
   }
 
   test("file-source CustomState.patternConverted: CEP state fold equals the batch event_pattern") {
@@ -206,29 +169,26 @@ class FileStreamParitySpec extends SparkSpec {
     val staged = stageChunks("events_cep_stream", Seq(ev.filter(us < cuts(0)),
       ev.filter(us >= cuts(0) && us < cuts(1)), ev.filter(us >= cuts(1))))
     val stream = fileStream(ev, staged).as[CustomState.Event]
-    val q = memorySink(CustomState.patternConverted(stream)(spark), "t_file_cep", "append")
-    try {
-      drain(q, 3, watermark = true)
-      val streamed = spark.table("t_file_cep").collect().map(_.toSeq).toSet
-      streamed shouldBe batchOp("event_pattern").collect().map(_.toSeq).toSet
-      // non-vacuity: the fixture must exercise BOTH branches...
-      streamed.map(_(2)) shouldBe Set(true, false)
-      // ...and the cross-batch state carry must actually occur: at least
-      // one converted purchase whose LATEST preceding click sits in an
-      // EARLIER chunk (guaranteed by the cut construction above)
-      def chunkOf(tus: Long) = if (tus < cuts(0)) 0 else if (tus < cuts(1)) 1 else 2
-      val converted = streamed.collect { case s if s(2) == true => s(0).asInstanceOf[Long] }
-      val lastClick = mutable.Map.empty[Long, (Long, Long)] // user -> (tus, id)
-      var carried = 0
-      log.foreach {
-        case (id, u, tus, "click") => lastClick(u) = (tus, id)
-        case (id, u, tus, "purchase")
-          if converted(id) && lastClick.get(u).exists(c => chunkOf(c._1) < chunkOf(tus)) =>
-          carried += 1
-        case _ => ()
-      }
-      carried should be > 0
-    } finally q.stop()
+    val streamed = drained(CustomState.patternConverted(stream)(spark), "t_file_cep", "append",
+      3, watermark = true).collect().map(_.toSeq).toSet
+    streamed shouldBe batchOp("event_pattern").collect().map(_.toSeq).toSet
+    // non-vacuity: the fixture must exercise BOTH branches...
+    streamed.map(_(2)) shouldBe Set(true, false)
+    // ...and the cross-batch state carry must actually occur: at least
+    // one converted purchase whose LATEST preceding click sits in an
+    // EARLIER chunk (guaranteed by the cut construction above)
+    def chunkOf(tus: Long) = if (tus < cuts(0)) 0 else if (tus < cuts(1)) 1 else 2
+    val converted = streamed.collect { case s if s(2) == true => s(0).asInstanceOf[Long] }
+    val lastClick = mutable.Map.empty[Long, (Long, Long)] // user -> (tus, id)
+    var carried = 0
+    log.foreach {
+      case (id, u, tus, "click") => lastClick(u) = (tus, id)
+      case (id, u, tus, "purchase")
+        if converted(id) && lastClick.get(u).exists(c => chunkOf(c._1) < chunkOf(tus)) =>
+        carried += 1
+      case _ => ()
+    }
+    carried should be > 0
   }
 
   test("file-source Streams.dedup: duplicates collapse across micro-batches; output equals the distinct log") {
@@ -245,15 +205,12 @@ class FileStreamParitySpec extends SparkSpec {
       Seq(withDups(third(0)), withDups(third(1)).union(lastOf0), withDups(third(2))))
     // the staged log genuinely carries duplicates
     spark.read.parquet(staged.toString).count() should be > ev.count()
-    val q = memorySink(Streams.dedup(fileStream(ev, staged)), "t_file_dedup", "append")
-    try {
-      drain(q, 3, watermark = true)
-      val streamed = canon(spark.table("t_file_dedup").collect())
-      // event_id is unique in the fixture, so exactly-once delivery of the
-      // staged log's distinct set IS the original event set
-      streamed shouldBe canon(ev.withColumn("ts", col("ts").cast("timestamp")).collect())
-      streamed should not be empty
-    } finally q.stop()
+    val streamed = canon(drained(Streams.dedup(fileStream(ev, staged)), "t_file_dedup", "append",
+      3, watermark = true).collect())
+    // event_id is unique in the fixture, so exactly-once delivery of the
+    // staged log's distinct set IS the original event set
+    streamed shouldBe canon(ev.withColumn("ts", col("ts").cast("timestamp")).collect())
+    streamed should not be empty
   }
 
   test("file-source Streams.throttle: one survivor per (user, bucket) across micro-batches") {
@@ -262,18 +219,15 @@ class FileStreamParitySpec extends SparkSpec {
     // and its state is always younger than the 10-min watermark lag when
     // its tail arrives — so the at-most-one guarantee is exact here
     val staged = stageChunks("events_throttle_stream", thirds(ev))
-    val q = memorySink(Streams.throttle(fileStream(ev, staged)), "t_file_throttle", "append")
-    try {
-      drain(q, 3, watermark = true)
-      val out = spark.table("t_file_throttle").cache()
-      // WHICH event survives is arrival-order-dependent in streaming (the
-      // batch twin pins the (ts, event_id) minimum) — the shared invariant
-      // is the throttled KEY SET: exactly one survivor per active bucket
-      val streamedKeys = canon(out.select("user_id", "ws").collect())
-      streamedKeys shouldBe canon(batchOp("stream_throttle").select("user_id", "ws").collect())
-      out.count() shouldBe streamedKeys.size.toLong // one row per key
-      out.count() should be < ev.count() // the throttle actually dropped rows
-    } finally q.stop()
+    val out = drained(Streams.throttle(fileStream(ev, staged)), "t_file_throttle", "append",
+      3, watermark = true).cache()
+    // WHICH event survives is arrival-order-dependent in streaming (the
+    // batch twin pins the (ts, event_id) minimum) — the shared invariant
+    // is the throttled KEY SET: exactly one survivor per active bucket
+    val streamedKeys = canon(out.select("user_id", "ws").collect())
+    streamedKeys shouldBe canon(batchOp("stream_throttle").select("user_id", "ws").collect())
+    out.count() shouldBe streamedKeys.size.toLong // one row per key
+    out.count() should be < ev.count() // the throttle actually dropped rows
   }
 
   test("file-source Streams.ohlc: daily bars emitted on watermark close equal the batch bars") {
@@ -282,17 +236,13 @@ class FileStreamParitySpec extends SparkSpec {
     // identifiable; its arrival closes every real day's bars
     val staged = stageChunks("events_ohlc_stream",
       thirds(ev) :+ sentinel(ev, 3).withColumn("event_type", lit("zzz_sentinel")))
-    val q = memorySink(Streams.ohlc(fileStream(ev, staged)), "t_file_ohlc", "append")
-    try {
-      drain(q, 4, watermark = true)
-      val streamed = canon(spark.table("t_file_ohlc")
-        .filter(col("event_type") =!= "zzz_sentinel").collect())
-      // batch twin's DateType day → midnight instant, matching window.start
-      streamed shouldBe canon(batchOp("time_ohlc")
-        .select(col("day").cast("timestamp").as("ws"), col("event_type"), col("open"),
-          col("high"), col("low"), col("close"), col("n"), col("volume")).collect())
-      streamed should not be empty
-    } finally q.stop()
+    val streamed = canon(drained(Streams.ohlc(fileStream(ev, staged)), "t_file_ohlc", "append",
+      4, watermark = true).filter(col("event_type") =!= "zzz_sentinel").collect())
+    // batch twin's DateType day → midnight instant, matching window.start
+    streamed shouldBe canon(batchOp("time_ohlc")
+      .select(col("day").cast("timestamp").as("ws"), col("event_type"), col("open"),
+        col("high"), col("low"), col("close"), col("n"), col("volume")).collect())
+    streamed should not be empty
   }
 
   test("file-source Streams.intervalMerge: dynamic-gap sessions equal the batch islands") {
@@ -314,15 +264,12 @@ class FileStreamParitySpec extends SparkSpec {
     touches shouldBe 0L
     val staged = stageChunks("events_ivm_stream",
       thirds(ev) :+ sentinel(ev, 4).withColumn("user_id", lit(-1L)))
-    val q = memorySink(Streams.intervalMerge(fileStream(ev, staged)), "t_file_ivm", "append")
-    try {
-      drain(q, 4, watermark = true)
-      val streamed = canon(spark.table("t_file_ivm").filter(col("user_id") =!= -1L)
-        .select("user_id", "start", "end", "n_events").collect())
-      streamed shouldBe batchOp("interval_merge")
-        .select("user_id", "start_us", "end_us", "n_events").collect().map(_.toSeq).toSet
-      streamed should not be empty
-    } finally q.stop()
+    val streamed = canon(drained(Streams.intervalMerge(fileStream(ev, staged)), "t_file_ivm", "append",
+      4, watermark = true).filter(col("user_id") =!= -1L).select("user_id", "start", "end", "n_events")
+      .collect())
+    streamed shouldBe batchOp("interval_merge")
+      .select("user_id", "start_us", "end_us", "n_events").collect().map(_.toSeq).toSet
+    streamed should not be empty
   }
 
   test("file-source stream-static enrichment: broadcast dim join over streamed facts equals the batch join_broadcast") {
@@ -330,23 +277,17 @@ class FileStreamParitySpec extends SparkSpec {
     val staged = stageChunks("cust_enrich_stream",
       (0 until 3).map(i => cust.filter(pmod(col("c_custkey"), lit(3)) === i)))
     // static sides are plain batch DataFrames — the stream-static shape
-    val q = memorySink(Streams.enrich(fileStream(cust, staged),
-      graft.Tables(spark, Dir01, "nation"), graft.Tables(spark, Dir01, "region")),
-      "enrich_sink", "append")
-    try drain(q, 3, watermark = false) finally q.stop()
-    val streamed = spark.table("enrich_sink").collect().map(_.toSeq).toSet
+    val streamed = drained(Streams.enrich(fileStream(cust, staged), graft.Tables(spark, Dir01, "nation"),
+      graft.Tables(spark, Dir01, "region")), "enrich_sink", "append", 3, watermark = false)
+      .collect().map(_.toSeq).toSet
     streamed shouldBe batchOp("join_broadcast").collect().map(_.toSeq).toSet
     streamed should not be empty
   }
 
   folds.foreach { f =>
     test(f.name) {
-      val r = runFold(f)
-      f.checks.foreach { c =>
-        val streamed = result(c, c.view(r))
-        withClue(s"${c.op}: ") { streamed shouldBe result(c, batchOp(c.op)) }
-        streamed should not be empty
-      }
+      val r = drive(f, Dir01, restart = false)(foldSink(f))
+      checkViews(r)
       f.extra(r)
     }
   }
@@ -436,10 +377,10 @@ object FileStreamParitySpec extends Matchers {
       .map(p => evA.filter(p).drop("p_eid", "aus"))
   })
 
-  /** One fold drive's outcome: final states, the states at any version,
-    * and the chunks that were streamed. */
-  final case class Run(fold: Fold, states: Seq[DataFrame], at: Int => Seq[DataFrame],
-      chunks: Seq[DataFrame])
+  /** One fold drive's outcome: the data dir, the stores, their final
+    * states, and the chunks that were streamed. */
+  final case class Run(fold: Fold, dir: String, stores: Seq[Streams.FoldState.Parquet],
+      states: Seq[DataFrame], chunks: Seq[DataFrame])
   /** A view over the final states and the batch op it must equal: as a
     * set of canonical rows, or `ordered` when the order is the contract. */
   final case class Check(op: String, view: Run => DataFrame, cols: Seq[String], ordered: Boolean)
@@ -461,16 +402,33 @@ object FileStreamParitySpec extends Matchers {
     if (c.ordered) d.collect().map(_.toSeq).toSeq else canon(d.collect())
   }
 
-  /** Redelivery honesty for idempotent folds (presence, MIN, MAX):
-    * refolding an already-applied chunk moves no view. */
-  private val redelivered: Run => Unit = r => r.fold.checks.foreach { c =>
-    result(c, c.view(r.copy(states = r.fold.step(r.states, r.chunks.head)))) shouldBe
-      result(c, c.view(r))
+  /** Every view of `r` equals its batch op over the same data dir. */
+  def checkViews(r: Run): Unit = r.fold.checks.foreach { c =>
+    val streamed = result(c, c.view(r))
+    withClue(s"${c.op}: ") { streamed shouldBe result(c, graft.SparkEntry.queries(c.op)(spark, r.dir)) }
+    streamed should not be empty
+  }
+
+  /** Redelivery honesty for idempotent folds (presence, MIN, MAX, CDC
+    * versions): refolding an already-applied chunk moves no state and no
+    * view. */
+  private val redelivered: Run => Unit = r => {
+    val again = r.copy(states = r.fold.step(r.states, r.chunks.head))
+    again.states.map(s => canon(s.collect())) shouldBe r.states.map(s => canon(s.collect()))
+    r.fold.checks.foreach(c => result(c, c.view(again)) shouldBe result(c, c.view(r)))
   }
   private def positive(n: Long): Unit = n should be > 0L
   private def docs01() = graft.Tables(spark, Dir01, "documents")
 
   val folds: Seq[Fold] = Seq(
+    // chunks split by event_id HASH, not time: every chunk spans the full
+    // time range, so later micro-batches genuinely deliver OLDER events
+    // for keys already in state — the version comparison, not arrival
+    // order, must decide every merge; the view is over the SAME full log
+    fold("file-source CDC apply: out-of-order micro-batches converge to the batch twin; redelivery is a no-op",
+      EventLog, Hash, "k BIGINT, deleted BOOLEAN, v DECIMAL(18,2), wts TIMESTAMP, wid BIGINT")(Streams.cdc,
+      Check("cdc_apply", r => Streams.cdcView(graft.Tables(spark, r.dir, "customer"), r.states.head),
+        Nil, ordered = false)).also(redelivered),
     fold("file-source top-k sink: count-state fold over hash-split micro-batches equals the batch twin",
       EventLog, Hash, "ws TIMESTAMP, event_type STRING, n BIGINT")(Streams.topk,
       on("stream_topk", Streams.topkView).copy(cols = Seq("ws", "event_type", "n", "rn"))),
@@ -497,8 +455,8 @@ object FileStreamParitySpec extends Matchers {
       on("split_temporal", Audit.splitTemporalView)).also { r =>
       def leaked(s: DataFrame) =
         Audit.splitTemporalView(s).agg(sum("u_leaked")).collect().head.getLong(0)
-      leaked(r.at(1).head) shouldBe 0L // after the train batches alone...
-      leaked(r.at(2).head) shouldBe 0L
+      leaked(r.stores.head.at(1)) shouldBe 0L // after the train batches alone...
+      leaked(r.stores.head.at(2)) shouldBe 0L
       positive(leaked(r.states.head)) // ...and leaked once the holdout lands
     },
     fold("file-source changepoint sink: integer-cents grid fold over hash-split batches equals the batch changepoint_cusum",
@@ -644,41 +602,49 @@ object FileStreamParitySpec extends Matchers {
       Embeddings, Hash, "lang STRING, half BIGINT, pos INT, sv DECIMAL(18,7)",
       "lang STRING, half BIGINT, n BIGINT")(Streams.driftVec, on2("embed_drift", Llm.driftView)))
 
-  private val staged = mutable.Map[(String, String), (Seq[DataFrame], DataFrame, Path)]()
+  type Sink = (DataFrame, Seq[Streams.FoldState.Parquet]) => DataStreamWriter[Row]
+  /** `f.step` run by [[Streams.foldSink]]. */
+  def foldSink(f: Fold): Sink = Streams.foldSink(_, f.step)(_: _*)
 
-  /** Drive `f.step` through [[Streams.foldSink]]. */
-  def runFold(f: Fold): Run = drive(f)((s, r, w) => Streams.foldSink(s, f.step)(r: _*)(w: _*))
+  private val staged = mutable.Map[(String, String, String), (Seq[DataFrame], DataFrame, Path)]()
 
-  /** Drive `sink` over the staged chunks of (input, split) — staged once
-    * per pair: seeds an empty v0 per state, folds one micro-batch per
-    * file, asserts every chunk produced a batch and a state version per
-    * state. */
-  def drive(f: Fold)(sink: (DataFrame, Seq[() => DataFrame], Seq[DataFrame => Unit]) =>
-      DataStreamWriter[Row]): Run = {
-    val (chunks, src, dir) = staged.synchronized(staged.getOrElseUpdate(
-      (f.input.name, f.split.name), {
-        val t = f.input.load(Dir01).cache()
+  /** Drive `sink` over the chunks of (input, split) in `dir` — staged once
+    * per triple — one micro-batch per chunk, into fresh parquet states;
+    * asserts the batch ids that ran and one state version per chunk. With
+    * `restart`, the query stops once every chunk but the last is
+    * committed, loses its last commit, and restarts from its checkpoint
+    * with the last chunk added: Spark re-runs the uncommitted batch id on
+    * the same offsets, then folds the last chunk. */
+  def drive(f: Fold, dir: String, restart: Boolean)(sink: Sink): Run = {
+    val (chunks, src, chunkDir) = staged.synchronized(staged.getOrElseUpdate(
+      (f.input.name, f.split.name, dir), {
+        // not cached: a cached fixture table would replace the scan (and
+        // its pushed filters) in every later plan over it in the session
+        val t = f.input.load(dir)
         val cs = f.split.cut(t, f.input.id)
         (cs, t, stageChunks(s"${f.input.name}_${f.split.name}_stream", cs))
       }))
-    val roots = f.ddls.map { ddl =>
-      val root = Files.createTempDirectory("fold_state").toString
-      val schema = StructType.fromDDL(ddl)
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema).write.parquet(s"$root/v0")
-      (root, schema)
+    val stores = f.ddls.map(ddl => Streams.FoldState.Parquet(spark,
+      Files.createTempDirectory("fold_state").toString, StructType.fromDDL(ddl)))
+    val live = if (restart) Files.createTempDirectory("fold_live") else chunkDir
+    val ckpt = Files.createTempDirectory("fold_checkpoint")
+    def add(i: Int) = Files.copy(chunkDir.resolve(s"chunk$i.parquet"), live.resolve(s"chunk$i.parquet"),
+      StandardCopyOption.COPY_ATTRIBUTES)
+    def run(): Seq[Long] = {
+      val q = sink(f.input.prep(dir)(fileStream(src, live)), stores)
+        .option("checkpointLocation", ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+      q.recentProgress.toSeq.filter(_.numInputRows > 0).map(_.batchId)
     }
-    val v = Array.fill(roots.size)(0)
-    def read(i: Int, version: Int) = spark.read.schema(roots(i)._2).parquet(s"${roots(i)._1}/v$version")
-    val q = sink(f.input.prep(Dir01)(fileStream(src, dir)),
-      roots.indices.map(i => () => read(i, v(i))),
-      roots.indices.map(i => (df: DataFrame) => {
-        df.write.mode("overwrite").parquet(s"${roots(i)._1}/v${v(i) + 1}"); v(i) += 1
-      })).start()
-    try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0) should be >= chunks.length
-    } finally q.stop()
-    all(v.toSeq) should be >= chunks.length
-    Run(f, roots.indices.map(i => read(i, v(i))), at => roots.indices.map(read(_, at)), chunks)
+    val n = chunks.length.toLong
+    if (restart) {
+      chunks.indices.init.foreach(add)
+      run() shouldBe (0L until n - 1)
+      Seq(s"${n - 2}", s".${n - 2}.crc").foreach(c => Files.deleteIfExists(ckpt.resolve(s"commits/$c")))
+      add(chunks.length - 1)
+      run() shouldBe Seq(n - 2, n - 1)
+    } else run() shouldBe (0L until n)
+    all(stores.map(_.lastVersion)) shouldBe n
+    Run(f, dir, stores, stores.map(_.latest), chunks)
   }
 }

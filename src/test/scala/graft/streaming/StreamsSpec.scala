@@ -19,6 +19,7 @@ case class StreamsSpecEv(event_id: Long, user_id: Long, event_type: String,
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
+  private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private type Ev = StreamsSpecEv
   private val Ev = StreamsSpecEv
@@ -31,7 +32,6 @@ class StreamsSpec extends SparkSpec {
       mode: OutputMode, name: String,
       build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       batches: Seq[Seq[Ev]]): Seq[Seq[Any]] = {
-    implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     val q = build(input.toDF())
       .writeStream.format("memory").queryName(name).outputMode(mode).start()
@@ -80,19 +80,17 @@ class StreamsSpec extends SparkSpec {
     r(4) shouldBe 3.0
   }
 
-  test("upsertSink merges each micro-batch with last-writer-wins per key") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+  test("upsert step merges each micro-batch with last-writer-wins per key") {
     val input = MemoryStream[Ev]
-    // in-memory "table" stand-in for the destination storage
+    // in-memory "table" stand-in for the destination storage: any store
+    // can keep fold state
     var table = Seq((1L, "keep", 0.0)).toDF("user_id", "event_type", "value")
-    val q = Streams.upsertSink(
-        input.toDF().select($"user_id", $"event_type", $"value"),
-        keys = Seq("user_id"), orderCol = "value")(
-        () => table)(merged => table = merged.collect().toSeq
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-          .toDF("user_id", "event_type", "value"))
-      .start()
+    val state = new Streams.FoldState {
+      def read(epoch: Long): org.apache.spark.sql.DataFrame = table
+      def write(epoch: Long, merged: org.apache.spark.sql.DataFrame): Unit = table = merged.localCheckpoint()
+    }
+    val q = Streams.foldSink(input.toDF().select($"user_id", $"event_type", $"value"),
+        Streams.upsert(keys = Seq("user_id"), orderCol = "value"))(state).start()
     try {
       input.addData(Seq(ev(1, 2, "a", "2024-01-01 10:00:00", 1.0)))
       q.processAllAvailable()
@@ -107,7 +105,6 @@ class StreamsSpec extends SparkSpec {
 
   test("jdbcUpsertSink: micro-batches MERGE into live Derby; redelivery is idempotent") {
     import graft.engine.Sources
-    implicit val sqlCtx = spark.sqlContext
     System.setProperty("derby.system.home",
       java.nio.file.Files.createTempDirectory("graft_derby_stream").toString)
     val cfg = Sources.JdbcConfig(
@@ -141,7 +138,6 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("interval join matches purchases to preceding clicks, two live streams") {
-    implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val purchases = MemoryStream[Ev]
     val q = Streams.intervalJoin(clicks.toDF(), purchases.toDF())
@@ -165,7 +161,6 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("left-outer interval join withholds unmatched purchases until the watermark proves no click can arrive") {
-    implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val purchases = MemoryStream[Ev]
     val q = Streams.intervalJoin(clicks.toDF(), purchases.toDF(),
@@ -201,7 +196,6 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("interval-join state expires at watermark + window (bounded state on unbounded streams)") {
-    implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val purchases = MemoryStream[Ev]
     val q = Streams.intervalJoin(clicks.toDF(), purchases.toDF())
